@@ -7612,96 +7612,52 @@ def entry(spark: SparkSession) -> DataFrame:
     return _zonal("reliability")(spark, "/root/testdata/sf0.001")
 
 
-# Driver-visibility rotation (VERDICT r03 #6 ... r08 #2-#4): the
-# driver's correctness artifact records only the FIRST 50 registry
-# entries. Cumulative coverage closed at 293/293 in round 8; from
-# round 9 on the STANDING WINDOW POLICY is:
-#   1. queries NEW this round (first driver check) at the very head;
-#   2. changed-path re-checks — any query whose plan or shared code
-#      changed since its latest driver hash;
-#   3. remaining slots drain OLDEST-DRIVER-HASH-FIRST, which bounds
-#      worst-case staleness at ~3 rounds (50 slots / 293 queries).
-# Round-11 composition (exactly 50, verified by
-# tests/test_rotation_r11.py against the CORRECTNESS_r* union):
-#   - 0 new registrations (optimization round — no new features).
-#   - 16 changed-path re-checks at the head (VERDICT r10 #3: every
-#     r10-optimization-touched query whose last driver hash predates
-#     its change, plus this round's TWS-memo removal and replay-path
-#     users): bt_strengths, elo_ratings, rank_agreement, item_cf,
-#     semantic_dedup (r10-rewritten; semantic_dedup re-checked), and
-#     all 11 events_* replay queries (r10 replay handoff + r11
-#     per-invocation single-purpose replays).
-#   - 34 slots drain OLDEST-DRIVER-HASH-FIRST: the round-4 class
-#     continues alphabetically after r10's cluster_representatives
-#     (cohort_retention .. tpch_q3); tpch_q4..q9 remain for r12.
-_ROTATION_R11 = [
-    # -- changed-path re-checks (r10/r11 optimization paths) --
-    "bt_strengths",
-    "elo_ratings",
-    "rank_agreement",
-    "item_cf",
-    "semantic_dedup",
-    "events_running_totals",
-    "events_topk_stream",
-    "events_bucket_stream",
-    "events_session_flush",
-    "events_dedup_stream",
-    "events_watermark",
-    "events_quality_window",
-    "events_json_extract",
-    "events_tumbling",
-    "events_sliding",
-    "events_session",
-    # -- round-4 driver hashes (drain continues, alphabetical) --
-    "cohort_retention",
-    "corpus_pipeline",
-    "cube_agg",
-    "dedup_clusters",
-    "dedup_report",
-    "funnel_conversion",
-    "grouping_sets",
-    "hypertable_rollup",
-    "join_delta_retract",
-    "kv_records",
-    "pagerank",
-    "range_join",
-    "rollup_agg",
-    "sessionize_events",
-    "shard_plan",
-    "skew_join_agg",
-    "skew_salted_join",
-    "text_tfidf",
-    "tpch_q1",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    # ---- driver window boundary (first 50 above) ----
-]
+# Correctness window: the correctness check (CORRECTNESS_r*.json)
+# records only the FIRST 50 registry entries, so queries() computes
+# which 50 go first:
+#   1. _CHANGED_PATHS — registered queries whose plan or shared code
+#      changed since their latest correctness record, in declared order;
+#   2. the remaining slots drain OLDEST-RECORD-FIRST: names
+#      sorted by their latest round in CORRECTNESS_r*.json, then by
+#      name (names with no record sort first).
+# The registry keeps its own order after the window.
+_CHANGED_PATHS = ["request_lifecycle"]  # the cache/runner path
+_WINDOW = 50
+
+
+def _latest_rounds() -> dict[str, int]:
+    """Latest CORRECTNESS_r{N}.json round that recorded each query."""
+    import glob
+    import json
+    import os
+    import re
+
+    latest: dict[str, int] = {}
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for q in json.load(f):
+                latest[q] = max(latest.get(q, 0), rnd)
+    return latest
 
 
 def _rotate(full: dict) -> dict:
-    head = {k: full[k] for k in _ROTATION_R11 if k in full}
-    return head | {k: v for k, v in full.items() if k not in head}
+    latest = _latest_rounds()
+    head = [q for q in _CHANGED_PATHS if q in full]
+    drain = sorted(
+        (q for q in full if q not in head), key=lambda q: (latest.get(q, 0), q)
+    )
+    window = (head + drain)[:_WINDOW]
+    return {k: full[k] for k in window} | {
+        k: v for k, v in full.items() if k not in window
+    }
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE: dict order is the driver's check order, and the driver's
-    # correctness artifact records only the first 50 entries —
-    # _ROTATION_R11 entries go FIRST (changed-path re-checks, then
-    # the oldest-hash drain); the literal below keeps its
-    # grouping for readability.
+    # NOTE: dict order is the correctness-check order; _rotate moves
+    # the correctness window (see above) to the front, and the literal below
+    # keeps its grouping for readability.
     return _rotate({
         # --- round-5 additions ---
         "funnel_ttc": q_funnel_ttc,

@@ -59,6 +59,23 @@ def _replay_retry_events() -> list[str]:
     return list(getattr(mod, "TRANSIENT_RETRY_EVENTS", []))
 
 
+def _sidecar_name(sf: float, mode: str, nocache: bool, cpus: str) -> str:
+    """BENCH_FULL.json is the committed record of the HEADLINE run: sf0.1,
+    both passes, cached tables, the default 32 cores. Any other run
+    writes a name that says how it differs, so it never overwrites that
+    record: a smoke run at another SF (it clobbered the record twice in
+    r6), a mode-limited run (a concurrent-only run records zeroed
+    sequential timings — r7), a cold-scan run, or another core count."""
+    if sf == 0.1 and mode == "both" and not nocache:
+        stem = "BENCH_FULL"
+    else:
+        stem = (
+            f"BENCH_FULL_sf{sf}{'' if mode == 'both' else '_' + mode}"
+            f"{'_nocache' if nocache else ''}"
+        )
+    return f"{stem}{'' if cpus == '32' else '_c' + cpus}.json"
+
+
 def main() -> None:
     import __spark_entry__ as entry_mod
     from det_module_spark.session import get_spark
@@ -305,19 +322,8 @@ def main() -> None:
             print(f"# SLOPE3.json unreadable: {e}", file=sys.stderr)
 
     # full per-query detail goes to a sidecar, never to the final line.
-    # BENCH_FULL.json is the committed record of the HEADLINE SF
-    # (sf0.1) measured by a FULL run (both passes): a smoke run at
-    # another SF writes a per-SF name (it clobbered the record twice in
-    # r6), and a mode-limited run writes a per-mode name — a
-    # concurrent-only run records zeroed sequential timings, which is
-    # just as destructive to the committed record (it happened in r7).
-    sidecar_name = (
-        "BENCH_FULL.json"
-        if sf == 0.1 and mode == "both" and not nocache
-        else (
-            f"BENCH_FULL_sf{sf}{'' if mode == 'both' else '_' + mode}"
-            f"{'_nocache' if nocache else ''}.json"
-        )
+    sidecar_name = _sidecar_name(
+        sf, mode, nocache, os.environ.get("SPARK_GRAFT_CPUS", "32")
     )
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), sidecar_name
@@ -379,7 +385,7 @@ def main() -> None:
             round(min(conc_walls), 3) if conc_walls else 0.0
         ),
         "queries": slowest,
-        "queries_full": "BENCH_FULL.json",
+        "queries_full": sidecar_name,
     }
     if slope:
         meta = slope.get("__meta__", {})

@@ -478,8 +478,7 @@ def weighted_consensus(
     # aggregation) was BUILT AND MEASURED in r11: 3.8 s vs 2.7 s warm —
     # the rater arrays through the exchange plus two explodes cost
     # more than the one corpus agg they save at any tested floor, so
-    # the three-pass shape stays (honest negative result,
-    # OPTIMIZATION_r11.md).
+    # the three-pass shape stays (honest negative result).
     cons = consensus_labels(v).localCheckpoint(eager=True)
     acc = rater_accuracy(v, consensus=cons).select(
         "rater", "accuracy_ppm"

@@ -116,7 +116,11 @@ def expand_request(request: dict[str, Any], msr_version: str = "0.1") -> list[It
                     )
                 )
 
-    return items
+    # one item per spec hash, first wins: a spec listed twice (say, a
+    # raster naming one file twice) is one content-addressed result,
+    # and two copies would merge into duplicate column names
+    seen: set[str] = set()
+    return [i for i in items if not (i.spec_hash in seen or seen.add(i.spec_hash))]
 
 
 def items_df(spark: SparkSession, items: list[Item]) -> DataFrame:

@@ -61,19 +61,11 @@ class Engine:
         release_source: Callable[[Item], DataFrame] | None = None,
         categories: list[str] | None = None,
         notify: Callable[[str, dict], None] | None = None,
-        manifest=None,
+        manifest: CacheManifest | None = None,
     ):
         self.spark = spark
-        # backend selection goes through open_manifest (Delta when
-        # delta-spark is importable, else the tx-log backend) instead
-        # of hardcoding CacheManifest — callers with a pre-built
-        # manifest pass it via ``manifest``.
-        from det_module_spark.plans.cache import open_manifest
-
         self.cache = (
-            manifest
-            if manifest is not None
-            else open_manifest(spark, cache_root)
+            manifest if manifest is not None else CacheManifest(spark, cache_root)
         )
         self.cell_source = cell_source
         self.release_source = release_source

@@ -172,3 +172,17 @@ def test_transient_predicate_matches_cancelled_key():
         "failure: java.nio.channels.CancelledKeyException"
     )
     assert _is_transient_worker_failure(e)
+
+
+def test_bench_sidecar_name_keeps_the_headline_record():
+    """Only the headline run (sf0.1, both passes, cached, 32 cores)
+    writes BENCH_FULL.json; every other run gets a name of its own."""
+    from bench import _sidecar_name
+
+    assert _sidecar_name(0.1, "both", False, "32") == "BENCH_FULL.json"
+    assert _sidecar_name(0.1, "both", False, "8") == "BENCH_FULL_c8.json"
+    assert _sidecar_name(0.01, "both", False, "32") == "BENCH_FULL_sf0.01.json"
+    assert (
+        _sidecar_name(0.1, "seq", True, "8")
+        == "BENCH_FULL_sf0.1_seq_nocache_c8.json"
+    )

@@ -226,7 +226,7 @@ def test_concurrent_compact_vs_put_no_lost_update(spark, tmp_path):
     def writer(w):
         try:
             for i in range(n_each):
-                cache._upsert([row(f"w{w}-{i}")])
+                cache._commit([row(f"w{w}-{i}")])
         except Exception as e:  # noqa: BLE001 — collected for assert
             errors.append(("writer", e))
 
@@ -382,31 +382,34 @@ def test_checkpoint_composes_with_compact(spark, tmp_path):
     assert cache.checkpoint() == 5
 
 
-def test_manifest_backend_selection(spark, tmp_path):
-    """open_manifest mirrors the rasterio/shapely gating: delta-spark
-    is absent from this container, so "auto" falls back to the tx-log
-    backend, "delta" raises the gate ImportError, and put_many routes
-    through the backend-neutral _upsert hook (VERDICT r02 #7)."""
-    from det_module_spark.plans.cache import (
-        DeltaCacheManifest,
-        delta_available,
-        open_manifest,
-    )
+def test_read_retries_when_compact_deletes_a_listed_commit(spark, tmp_path):
+    """A commit file is listed, then deleted by a concurrent compact()
+    before the replay reads it: opening it raises FileNotFoundError,
+    the replay re-lists, and read() returns the complete folded state
+    from the compact's fold commit — never a partial one."""
+    root = str(tmp_path / "cache")
+    cache = CacheManifest(spark, root)
+    row = lambda h, p: (h, "extract", 1, True, p, 0)  # noqa: E731
+    for i in range(3):
+        cache._commit([row(f"h{i}", f"p{i}")])
+    cache._commit([row("h0", "p0b")])  # v3 supersedes h0
 
-    assert not delta_available()  # container fact; Delta path is gated
-    m = open_manifest(spark, str(tmp_path / "cache"))
-    assert type(m) is CacheManifest
-    with pytest.raises(ImportError):
-        DeltaCacheManifest(spark, str(tmp_path / "cache"))
-    with pytest.raises(ImportError):
-        open_manifest(spark, str(tmp_path / "cache"), backend="delta")
-    with pytest.raises(ValueError):
-        open_manifest(spark, str(tmp_path / "cache"), backend="bogus")
-    # the tx-log backend still satisfies the shared contract through
-    # the factory (same suite the Delta backend would run under)
-    result = spark.createDataFrame([Row(asdf_id=1, exfield_0=1.0)])
-    m.put_many([("hx", "extract", result)])
-    assert {r["spec_hash"] for r in m.cached_hashes().collect()} == {"hx"}
+    listings = []
+    real_versions = CacheManifest._versions
+
+    def racing_versions(self):
+        listed = real_versions(self)
+        listings.append(listed)
+        if len(listings) == 1:
+            # between the listing and the read: fold 0..3 into 4 and
+            # delete 0..3 (a separate instance, so unpatched)
+            CacheManifest(spark, root).compact()
+        return listed
+
+    cache._versions = racing_versions.__get__(cache)
+    got = {r["spec_hash"]: r["path"] for r in cache.read().collect()}
+    assert got == {"h0": "p0b", "h1": "p1", "h2": "p2"}
+    assert listings == [[0, 1, 2, 3], [4]]
 
 
 def test_manifest_time_travel(spark, tmp_path):

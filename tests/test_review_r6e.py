@@ -83,7 +83,7 @@ def test_engine_accepts_injected_manifest(spark, tmp_path):
         manifest=own,
     )
     assert eng.cache is own
-    # default path goes through open_manifest (txlog in this env)
+    # default path builds a CacheManifest on cache_root
     eng2 = Engine(spark, str(tmp_path / "d"), cell_source=lambda i: None)
     assert isinstance(eng2.cache, CacheManifest)
 

@@ -214,3 +214,33 @@ def test_notification_hook_error(spark, tmp_path):
     assert r.status == -2
     assert [e for e, _ in events] == ["received", "error"]
     assert "source unavailable" in events[1][1]["error"]
+
+
+def test_repeated_raster_file_runs_once(spark, tmp_path):
+    """A raster listing the same file twice expands to one item per
+    spec hash; the merge gets one column per distinct item instead of
+    failing on two identical ones."""
+    cells = spark.createDataFrame(
+        [Row(asdf_id=i % 3, value=float(i), coverage=0.5) for i in range(6)]
+    )
+    eng = Engine(spark, str(tmp_path / "cache"), cell_source=lambda item: cells)
+    req = {
+        "_id": "dup01",
+        "boundary": {"name": "b"},
+        "raster_data": [
+            {
+                "name": "cov",
+                "options": {"extract_types": ["mean"]},
+                "files": [
+                    {"name": "cov_1998", "path": "/x"},
+                    {"name": "cov_1998", "path": "/x"},
+                    {"name": "cov_1999", "path": "/y"},
+                ],
+            }
+        ],
+    }
+    r = eng.run_request(req)
+    assert r.status == STATUS_DONE, r.error
+    assert len(r.items) == len({i.spec_hash for i in r.items}) == 2
+    assert r.merged.columns == ["asdf_id", "cov.1998.mean", "cov.1999.mean"]
+    assert r.merged.count() == 3

@@ -377,10 +377,8 @@ COLLECT_WHITELIST = {
         "spill-aware sink sizing: two 1-row aggregates (row-width "
         "estimate; per-bucket max/mean) — control plane, never data",
     ),
-    "det_module_spark/plans/cache.py": (
-        4,
-        "manifest log reads: one row per commit, compaction-bounded",
-    ),
+    # plans/cache.py has no collect site: the manifest log is replayed
+    # with pyarrow on the driver, never scanned by a Spark job.
     "det_module_spark/plans/runner.py": (
         1,
         "missing-spec hashes: one row per requested spec in the plan",
@@ -484,7 +482,7 @@ def test_unpartitioned_windows_are_whitelisted_bounded_frames(spark, sf_dir):
 @pytest.mark.parametrize("pattern", [r"\.rdd\b", r"mapPartitions\("])
 def test_no_rdd_fallbacks_outside_known_sites(pattern):
     """The engine is DataFrame-first: raw RDD access in an operator is
-    either a plan-pinning localCheckpoint (cache.py) or a mistake."""
+    a mistake."""
     rx = re.compile(pattern)
     offenders = []
     for path in sorted((REPO / "det_module_spark" / "operators").rglob("*.py")):
