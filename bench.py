@@ -308,8 +308,9 @@ def main() -> None:
             print(f"# slope pass skipped: {e}", file=sys.stderr)
 
     # Third-scale-point slope (VERDICT r05 #5): tools/slope3.py writes
-    # SLOPE3.json (watchlist queries at 3x the bench SF). Fold it into
-    # the sidecar + final line so the measurement survives bench reruns.
+    # SLOPE3.json (watchlist queries at 3x the bench SF), stamped with
+    # the commit and date it was measured on. It goes to the sidecar
+    # only: the final line reports this run's measurements.
     slope3 = {}
     slope3_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "SLOPE3.json"
@@ -391,11 +392,6 @@ def main() -> None:
         meta = slope.get("__meta__", {})
         summary["slope_lo_sf"] = meta.get("lo_sf")
         summary["superlinear"] = meta.get("superlinear", [])
-    if slope3:
-        summary["slope3"] = {
-            n: v.get("slope") for n, v in slope3.get("queries", {}).items()
-        }
-        summary["slope3_superlinear"] = slope3.get("superlinear", [])
     total_retries = sum(retries.values()) + len(_replay_retry_events())
     if total_retries:
         summary["retries_total"] = total_retries

@@ -5,9 +5,8 @@ This is the reference's single most important performance feature
 item spec, shared across requests and users (common-subexpression
 elimination at the workload level). The reference probes Mongo + the
 filesystem per item (queue/extract_check.py:62-110,
-queue/msr_check.py:22-53); here the manifest is a parquet table and the
-probe is ONE ``left_anti`` join for the whole item plan — constant
-number of jobs regardless of item count.
+queue/msr_check.py:22-53); here the probe is ONE set lookup of the
+request's hashes against the manifest log replayed on the driver.
 
 States mirror the reference's work-item machine
 (queue/extract_check.py:113-143): an item counts as *cached* only when
@@ -17,31 +16,29 @@ commit is represented by the ``committed`` flag written only after the
 result parquet is fully written (the ``_SUCCESS``-marker pattern),
 so a crashed writer never yields a phantom cache hit.
 
-At 100 TB the manifest stays tiny (one row per item ever computed) and
-is always the broadcast side of the anti-join.
-
 Durability: the manifest is an append-only TRANSACTION LOG
-(Delta-protocol shape, VERDICT r01 #5). Each commit is one immutable
-parquet file ``{version:020d}.parquet`` whose version is claimed
-atomically with ``link(2)`` (fails with EEXIST if the version exists —
-the local-FS equivalent of HDFS's no-overwrite rename Delta relies
-on); losers of a race re-read the log and retry at the next version.
-Readers resolve current state as "highest version wins per spec_hash",
-so concurrent writers can interleave but can never lose each other's
-rows — rewrite-in-place could. ``compact()`` folds the log into a
-single commit when it grows long.
+(Delta-protocol shape, VERDICT r01 #5) of immutable
+``{version:020d}.parquet`` commits, each version claimed atomically
+with ``link(2)`` (``_write_linked``). Readers resolve "highest version
+wins per spec_hash", so concurrent writers interleave but never lose
+each other's rows; ``compact()`` folds a long log into one commit.
 
 The log is written AND replayed with pyarrow on the driver: it is
-control-plane metadata, so ``read()`` hands Spark the replayed rows as
-a local relation instead of scanning the log with a Spark job.
+control-plane metadata (one row per item ever computed). ``cached()``
+is a set lookup against the replay and ``get()`` takes a result's
+schema from its parquet footer, so a cache hit starts no Spark job
+until the merge.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 import tempfile
 import time
+from typing import Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -300,22 +297,17 @@ class CacheManifest:
                     pass
             return
 
-    def cached_hashes(self) -> DataFrame:
-        m = self.read()
-        return m.filter(
-            (F.col("status") == STATUS_DONE) & F.col("committed")
-        ).select("spec_hash")
-
-    def missing(self, items: DataFrame) -> DataFrame:
-        """Items that must run: requested − cached, as a left-anti join
-        against the (broadcast) manifest."""
-        return items.join(
-            F.broadcast(self.cached_hashes()), "spec_hash", "left_anti"
-        )
-
-    def completed(self, items: DataFrame) -> DataFrame:
-        """Items whose results are ready to merge."""
-        return items.join(F.broadcast(self.cached_hashes()), "spec_hash", "inner")
+    def cached(self, hashes: Iterable[str]) -> set[str]:
+        """The subset of ``hashes`` whose results are ready to merge:
+        the latest row is status DONE with a committed artifact. A set
+        lookup against the replayed log — no Spark job."""
+        state, _ = self._replay()
+        ready = {
+            h
+            for h, _, status, committed, *_ in state.values()
+            if status == STATUS_DONE and committed
+        }
+        return ready.intersection(hashes)
 
     def result_path(self, spec_hash: str) -> str:
         return os.path.join(self.root, "results", spec_hash)
@@ -370,7 +362,14 @@ class CacheManifest:
         return paths
 
     def get(self, spec_hash: str) -> DataFrame:
-        return self.spark.read.parquet(self.result_path(spec_hash))
+        """Read one result with the Spark schema its writer stored in a
+        part file's footer (Spark's own inference reads the same key),
+        so no schema-inference job runs."""
+        path = self.result_path(spec_hash)
+        footer = pq.read_schema(min(glob.glob(os.path.join(path, "part-*.parquet"))))
+        row_schema = footer.metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+        schema = T.StructType.fromJson(json.loads(row_schema))
+        return self.spark.read.schema(schema).parquet(path)
 
     def diff(
         self, v_from: int, v_to: int | None = None

@@ -10,10 +10,11 @@ The reference's triple-nested loops (queue/request_tools.py:350,
   the temporal label sliced from the file name
   (queue/request_tools.py:467).
 
-The item plan is the unit of content-addressed caching: anti-join the
-items table against the cache manifest to get the to-run set, inner
-join for the to-merge set (E2). Expansion is driver-side pure Python —
-requests are small; the *data* never flows through here.
+The item plan is the unit of content-addressed caching: a set lookup of
+the item hashes against the driver-replayed cache manifest splits it
+into the to-run and to-merge sets (E2). Expansion and probe are
+driver-side pure Python — requests are small; the *data* never flows
+through here.
 """
 
 from __future__ import annotations

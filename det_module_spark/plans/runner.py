@@ -1,7 +1,7 @@
 """End-to-end request lifecycle (SURVEY.md §3.4).
 
 ``request spec → validate/normalize → expand to items → hash →
-anti-join cache manifest → run missing items → cache results →
+probe the cache manifest → run missing items → cache results →
 join-merge with rename algebra → sinks``
 
 The reference drives this with a cron loop, Mongo queues and two
@@ -14,6 +14,10 @@ Item execution is pluggable: the caller provides source callbacks
 (cells for extract items, project locations for MSR items) so the
 same lifecycle runs against synthetic fixtures, parquet lakes, or
 raster-derived cell tables.
+
+The probe is a set lookup against the manifest log replayed on the
+driver, and cached results are read with their footer schema, so a
+fully cached request starts no Spark job until its merge runs.
 
 Dry-run mode (reference: queue/processing.py:85,163,213-216) expands
 and probes but mutates nothing — the engine's EXPLAIN.
@@ -30,7 +34,8 @@ from det_module_spark.operators.extract_types import zonal_extract
 from det_module_spark.operators.merge import MergeItem, merge_extracts
 from det_module_spark.operators.msr import even_split_allocation, msr_surface
 from det_module_spark.plans.cache import CacheManifest
-from det_module_spark.plans.planner import Item, expand_request, items_df
+# items_df stays bound only because perfbench's trace wraps runner.items_df
+from det_module_spark.plans.planner import Item, expand_request, items_df  # noqa: F401
 
 # request states (queue/processing.py:144-216)
 STATUS_ERROR = -2
@@ -114,11 +119,8 @@ class Engine:
                 "dry_run": dry_run,
             },
         )
-        idf = items_df(self.spark, items)
-        missing_hashes = {
-            r["spec_hash"] for r in self.cache.missing(idf).collect()
-        }
-        missing = [i for i in items if i.spec_hash in missing_hashes]
+        cached = self.cache.cached(i.spec_hash for i in items)
+        missing = [i for i in items if i.spec_hash not in cached]
 
         if dry_run:
             # EXPLAIN-style: report the plan, touch nothing

@@ -5,7 +5,9 @@ import math
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from det_module_spark.operators.extract_types import zonal_extract
 from det_module_spark.operators.msr import (
     apply_release_filters,
     even_split_allocation,
@@ -13,6 +15,7 @@ from det_module_spark.operators.msr import (
 )
 from det_module_spark.operators.spatial import spatial_join_rect
 from det_module_spark.plans.cache import CacheManifest
+from det_module_spark.streaming.cache_sink import stream_to_cache
 
 
 @pytest.fixture(scope="module")
@@ -92,23 +95,73 @@ def test_spatial_join_rect(spark):
 
 def test_cache_round_trip_and_idempotency(spark, tmp_path):
     cache = CacheManifest(spark, str(tmp_path / "cache"))
-    items = spark.createDataFrame(
-        [Row(spec_hash="h1", dataset="d1"), Row(spec_hash="h2", dataset="d2")]
-    )
+    items = ["h1", "h2"]
     # empty manifest: everything is missing
-    assert cache.missing(items).count() == 2
+    assert len(set(items) - cache.cached(items)) == 2
     result = spark.createDataFrame([Row(asdf_id=1, exfield_0=4.2)])
     cache.put("h1", "extract", result)
     # second pass: only h2 missing; h1 readable and complete
-    missing = cache.missing(items).collect()
-    assert [r["spec_hash"] for r in missing] == ["h2"]
-    assert cache.completed(items).count() == 1
+    missing = [h for h in items if h not in cache.cached(items)]
+    assert missing == ["h2"]
+    assert len(cache.cached(items)) == 1
     assert cache.get("h1").collect()[0]["exfield_0"] == 4.2
     # re-put is idempotent (reference: find-then-update-else-insert,
     # extract_check.py:165-183)
     cache.put("h1", "extract", result)
-    assert cache.missing(items).count() == 1
+    assert len(set(items) - cache.cached(items)) == 1
     assert cache.read().filter(F.col("spec_hash") == "h1").count() == 1
+
+
+def test_get_schema_matches_spark_inference(spark, locations, tmp_path):
+    """get() reads each artifact with the schema in its parquet footer;
+    the DataFrame must match Spark's own inference, nullability
+    included, for every artifact shape the engine writes."""
+    cache = CacheManifest(spark, str(tmp_path / "cache"))
+    cells = spark.createDataFrame(
+        [
+            Row(asdf_id=i % 3, value=float(i), coverage=0.5,
+                potential=float(i * 2), category="water" if i % 2 else "forest")
+            for i in range(12)
+        ]
+    )
+    empty = spark.createDataFrame(
+        [],
+        T.StructType(
+            [T.StructField("asdf_id", T.LongType(), False),
+             T.StructField("exfield_0", T.DoubleType(), True)]
+        ),
+    )
+    cache.put_many(
+        [
+            ("rel", "extract", zonal_extract(cells, "reliability")),
+            ("cat", "extract",
+             zonal_extract(cells, "categorical", categories=["water", "forest"])),
+            ("msr", "msr", msr_surface(even_split_allocation(locations))),
+            ("empty", "extract", empty),
+        ]
+    )
+    src = str(tmp_path / "stream_src")
+    spark.createDataFrame(
+        [("s1", 1, 1.5), ("s1", 2, 2.5), ("s2", 1, 9.0)],
+        "spec_hash string, asdf_id long, exfield_0 double",
+    ).write.parquet(src)
+    q = stream_to_cache(
+        spark.readStream.schema("spec_hash string, asdf_id long, exfield_0 double")
+        .parquet(src),
+        cache,
+        checkpoint=str(tmp_path / "ck"),
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    hashes = ["rel", "cat", "msr", "empty", "s1", "s2"]
+    assert cache.cached(hashes) == set(hashes)
+    assert len(cache.get("rel").columns) > 2  # several exfields
+    for h in hashes:
+        # StructField equality covers name, type, nullability, metadata
+        inferred = spark.read.parquet(cache.result_path(h)).schema
+        assert cache.get(h).schema == inferred, h
+    assert cache.get("empty").count() == 0
 
 
 def test_cache_concurrent_put_many_no_lost_rows(spark, tmp_path):
@@ -137,8 +190,8 @@ def test_cache_concurrent_put_many_no_lost_rows(spark, tmp_path):
     for t in threads:
         t.join()
     assert not errors
-    got = {r["spec_hash"] for r in cache.cached_hashes().collect()}
     want = {f"{p}{i}" for p in ("a", "b") for i in range(10)}
+    got = cache.cached(want)
     assert got == want
     # every commit claimed a distinct version; log replay is stable
     assert cache.read().count() == 20
@@ -151,11 +204,12 @@ def test_cache_log_compaction(spark, tmp_path):
         cache.put(f"h{i}", "extract", result)
     # re-put h0 so the log has a superseded row
     cache.put("h0", "extract", result)
-    before = {r["spec_hash"] for r in cache.cached_hashes().collect()}
+    hashes = {f"h{i}" for i in range(10)}
+    before = cache.cached(hashes)
     assert len(cache._versions()) == 6
     cache.compact()
     assert len(cache._versions()) == 1
-    after = {r["spec_hash"] for r in cache.cached_hashes().collect()}
+    after = cache.cached(hashes)
     assert after == before == {f"h{i}" for i in range(5)}
     # writes keep working after compaction
     cache.put("h9", "extract", result)
@@ -244,9 +298,7 @@ def test_concurrent_compact_vs_put_no_lost_update(spark, tmp_path):
     def reader():
         try:
             for _ in range(10):
-                got = {
-                    r["spec_hash"] for r in cache.cached_hashes().collect()
-                }
+                got = cache.cached({"seed"})
                 assert "seed" in got  # never a partial/empty state
         except Exception as e:  # noqa: BLE001 — collected for assert
             errors.append(("reader", e))

@@ -244,3 +244,29 @@ def test_repeated_raster_file_runs_once(spark, tmp_path):
     assert len(r.items) == len({i.spec_hash for i in r.items}) == 2
     assert r.merged.columns == ["asdf_id", "cov.1998.mean", "cov.1999.mean"]
     assert r.merged.count() == 3
+
+
+def test_cached_request_starts_no_spark_job(engine, spark):
+    """A fully cached request probes the driver-replayed manifest and
+    reads each result with its footer schema: nothing runs on Spark
+    until the caller collects the merge."""
+    engine.run_request(REQUEST)
+    sc = spark.sparkContext
+    group = "cached-request-no-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        res = engine.run_request(REQUEST)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert res.missing == []
+    assert res.status == STATUS_DONE and res.merged is not None
+
+    # one new extract type on the cached raster: that item alone runs
+    req = json.loads(json.dumps(REQUEST))
+    req["raster_data"][0]["options"]["extract_types"].append("max")
+    res = engine.run_request(req)
+    assert [(i.dataset, i.temporal, i.extract_type) for i in res.missing] == [
+        ("udel_precip", "1998", "max")
+    ]

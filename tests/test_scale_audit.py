@@ -164,10 +164,6 @@ def test_plan_opaque_list_matches_registry(spark):
 # text.py all had this class removed in rounds 3-4; their counts here
 # pin the cleaned state).
 BROADCAST_WHITELIST = {
-    "det_module_spark/plans/cache.py": (
-        2,
-        "cached_hashes(): manifest-sized (one row per completed spec)",
-    ),
     "det_module_spark/operators/decontaminate.py": (
         1,
         "benchmark shingle vocabulary: benchmark suite is fixed-size "
@@ -379,10 +375,6 @@ COLLECT_WHITELIST = {
     ),
     # plans/cache.py has no collect site: the manifest log is replayed
     # with pyarrow on the driver, never scanned by a Spark job.
-    "det_module_spark/plans/runner.py": (
-        1,
-        "missing-spec hashes: one row per requested spec in the plan",
-    ),
     "det_module_spark/streaming/cache_sink.py": (
         1,
         "distinct spec hashes within one micro-batch: batch-bounded",

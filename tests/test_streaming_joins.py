@@ -90,8 +90,8 @@ def test_stream_to_cache_commit(spark, tmp_path):
     q.stop()
     q.awaitTermination(60)
 
-    items = spark.createDataFrame([Row(spec_hash=h) for h in ["h_a", "h_b", "h_c"]])
-    assert {r["spec_hash"] for r in cache.missing(items).collect()} == {"h_c"}
+    items = {"h_a", "h_b", "h_c"}
+    assert items - cache.cached(items) == {"h_c"}
     got = {r["asdf_id"]: r["exfield_0"] for r in cache.get("h_a").collect()}
     assert got == {1: 1.5, 2: 2.5}
     assert "spec_hash" not in cache.get("h_a").columns

@@ -27,13 +27,16 @@ measurement (3× data ⇒ flag above ~4.2×).
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 OUT_DIR = "/tmp/slope_sf0.3"
 SEED = 427
@@ -195,16 +198,20 @@ def main() -> None:
               file=sys.stderr)
 
     payload = {
+        # bench.py copies this file into its sidecar as-is; the stamp
+        # says which code and day the slopes belong to
+        "commit": subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, cwd=REPO,
+        ).stdout.strip(),
+        "measured_on": datetime.date.today().isoformat(),
         "lo_dir": lo_dir,
         "hi_dir": OUT_DIR,
         "data_ratio": 3.0,
         "queries": result,
         "superlinear": superlinear,
     }
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SLOPE3.json",
-    )
+    out = os.path.join(REPO, "SLOPE3.json")
     with open(out, "w") as f:
         json.dump(payload, f, indent=1)
     print(json.dumps(payload))
