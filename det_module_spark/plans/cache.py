@@ -25,9 +25,9 @@ each other's rows; ``compact()`` folds a long log into one commit.
 
 The log is written AND replayed with pyarrow on the driver: it is
 control-plane metadata (one row per item ever computed). ``cached()``
-is a set lookup against the replay and ``get()`` takes a result's
-schema from its parquet footer, so a cache hit starts no Spark job
-until the merge.
+is a set lookup against the replay, ``table()`` reads a result into
+Arrow on the driver and ``get()`` takes a result's schema from its
+parquet footer, so a cache hit starts no Spark job.
 """
 
 from __future__ import annotations
@@ -76,6 +76,13 @@ _LOG_SCHEMA = pa.schema(
         ("version", pa.int64()),
     ]
 )
+
+
+def spark_schema(footer: pa.Schema) -> T.StructType:
+    """The Spark schema a Spark writer stored in a parquet footer, the
+    key Spark's own schema inference reads."""
+    row_schema = footer.metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+    return T.StructType.fromJson(json.loads(row_schema))
 
 
 def _log_table(rows: list[tuple], version: int | None) -> pa.Table:
@@ -361,15 +368,23 @@ class CacheManifest:
         self._commit(rows)
         return paths
 
+    def _parts(self, spec_hash: str) -> list[str]:
+        path = self.result_path(spec_hash)
+        return sorted(glob.glob(os.path.join(path, "part-*.parquet")))
+
     def get(self, spec_hash: str) -> DataFrame:
         """Read one result with the Spark schema its writer stored in a
         part file's footer (Spark's own inference reads the same key),
         so no schema-inference job runs."""
-        path = self.result_path(spec_hash)
-        footer = pq.read_schema(min(glob.glob(os.path.join(path, "part-*.parquet"))))
-        row_schema = footer.metadata[b"org.apache.spark.sql.parquet.row.metadata"]
-        schema = T.StructType.fromJson(json.loads(row_schema))
-        return self.spark.read.schema(schema).parquet(path)
+        schema = spark_schema(pq.read_schema(self._parts(spec_hash)[0]))
+        return self.spark.read.schema(schema).parquet(self.result_path(spec_hash))
+
+    def table(self, spec_hash: str) -> pa.Table:
+        """Read one result into an Arrow table on the driver: the same
+        part files ``get`` reads, no Spark job. The table keeps the
+        first part's footer metadata, so ``spark_schema(t.schema)`` is
+        the schema ``get`` would use."""
+        return pq.read_table(self._parts(spec_hash))
 
     def diff(
         self, v_from: int, v_to: int | None = None

@@ -16,8 +16,11 @@ same lifecycle runs against synthetic fixtures, parquet lakes, or
 raster-derived cell tables.
 
 The probe is a set lookup against the manifest log replayed on the
-driver, and cached results are read with their footer schema, so a
-fully cached request starts no Spark job until its merge runs.
+driver. Cached results are read into Arrow on the driver and merged
+there (``merge_extracts``); Spark receives the merged table as one
+local relation with the Spark types from the results' footer schemas.
+So a fully cached request starts no Spark job, collecting its merge
+included.
 
 Dry-run mode (reference: queue/processing.py:85,163,213-216) expands
 and probes but mutates nothing — the engine's EXPLAIN.
@@ -28,12 +31,14 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from det_module_spark.operators.extract_types import zonal_extract
-from det_module_spark.operators.merge import MergeItem, merge_extracts
+from det_module_spark.operators.merge import MergeItem, merge_extracts, renamed_exfields
 from det_module_spark.operators.msr import even_split_allocation, msr_surface
-from det_module_spark.plans.cache import CacheManifest
+from det_module_spark.plans.cache import CacheManifest, spark_schema
 # items_df stays bound only because perfbench's trace wraps runner.items_df
 from det_module_spark.plans.planner import Item, expand_request, items_df  # noqa: F401
 
@@ -43,6 +48,21 @@ STATUS_NEW = -1
 STATUS_WAITING = 0
 STATUS_DONE = 1
 STATUS_PROCESSING = 2
+
+
+def _merged_schema(merged: pa.Table, items: list[MergeItem]) -> T.StructType:
+    """Spark types of the merged columns, taken from each item's footer
+    schema: the first item's for the key and passthrough columns, each
+    item's own for its renamed exfields. Every column is nullable — the
+    full outer merge fills an item's missing features with nulls."""
+    types: dict[str, T.DataType] = {}
+    for n, item in enumerate(items):
+        fields = {f.name: f.dataType for f in spark_schema(item.table.schema)}
+        renames = renamed_exfields(item)
+        if n == 0:
+            renames += [(c, c) for c in fields if not c.startswith("exfield_")]
+        types.update((out, fields[src]) for src, out in renames)
+    return T.StructType([T.StructField(c, types[c]) for c in merged.column_names])
 
 
 @dataclass
@@ -139,7 +159,7 @@ class Engine:
 
         merge_items = [
             MergeItem(
-                self.cache.get(i.spec_hash),
+                self.cache.table(i.spec_hash),
                 i.dataset,
                 i.temporal,
                 i.extract_type,
@@ -147,7 +167,12 @@ class Engine:
             for i in items
             if i.kind == "extract"
         ]
-        merged = merge_extracts(merge_items) if merge_items else None
+        merged = None
+        if merge_items:
+            table = merge_extracts(merge_items)
+            merged = self.spark.createDataFrame(
+                table, schema=_merged_schema(table, merge_items)
+            )
         self.notify(
             "complete",
             {

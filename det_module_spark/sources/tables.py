@@ -85,7 +85,7 @@ def _ts_unit(path: str) -> str | None:
 TEXT_TABLES = {"documents", "customer"}
 
 
-def _scan_floor_partitions(spark: SparkSession, path: str, name: str) -> int:
+def _scan_floor_partitions(path: str, name: str) -> int:
     """Parallelism floor for unsplittable inputs (optimization guide
     §2.5 "one huge unsplittable file ... repartition immediately after
     the read"): the driver testdata ships each table as ONE parquet
@@ -105,7 +105,13 @@ def _scan_floor_partitions(spark: SparkSession, path: str, name: str) -> int:
         if name in TEXT_TABLES
         else "SPARK_GRAFT_SCAN_PART_BYTES"
     )
-    target = int(os.environ.get(env, str(default)))
+    raw = os.environ.get(env, str(default))
+    try:
+        target = int(raw)
+    except ValueError:
+        target = 0
+    if target <= 0:
+        raise ValueError(f"{env} must be a positive integer byte count, got {raw!r}")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     files = (
         [path]
@@ -121,7 +127,7 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     root = os.path.join(sf_dir, name)
     path = single if os.path.exists(single) else root
     df = _read_table(spark, path, name)
-    floor = _scan_floor_partitions(spark, path, name)
+    floor = _scan_floor_partitions(path, name)
     if floor > 1 and df.rdd.getNumPartitions() < floor:
         # round-robin repartition right after the read; filters and
         # column pruning still push through to the parquet scan

@@ -1,36 +1,33 @@
 """Wide-merge + naming algebra golden tests (SURVEY.md hard list (d))."""
 
+import pyarrow as pa
 import pytest
-from pyspark.sql import Row
 
 from det_module_spark.operators.merge import MergeItem, merge_extracts, renamed_exfields
 
 
 @pytest.fixture(scope="module")
-def frames(spark):
-    base = spark.createDataFrame(
-        [
-            Row(asdf_id=1, exfield_0=1.5, NAME_0="Nigeria", NAME_1="Kano"),
-            Row(asdf_id=2, exfield_0=2.5, NAME_0="Nigeria", NAME_1="Lagos"),
-        ]
+def frames():
+    base = pa.table(
+        {
+            "asdf_id": [1, 2],
+            "exfield_0": [1.5, 2.5],
+            "NAME_0": ["Nigeria", "Nigeria"],
+            "NAME_1": ["Kano", "Lagos"],
+        }
     )
-    rel = spark.createDataFrame(
-        [
-            Row(asdf_id=1, exfield_sum=10.0, exfield_potential=20.0,
-                exfield_reliability=0.5),
-            Row(asdf_id=2, exfield_sum=4.0, exfield_potential=8.0,
-                exfield_reliability=0.5),
-        ]
+    rel = pa.table(
+        {
+            "asdf_id": [1, 2],
+            "exfield_sum": [10.0, 4.0],
+            "exfield_potential": [20.0, 8.0],
+            "exfield_reliability": [0.5, 0.5],
+        }
     )
-    cat = spark.createDataFrame(
-        [
-            Row(asdf_id=1, exfield_water=3, exfield_forest=1),
-            Row(asdf_id=2, exfield_water=0, exfield_forest=2),
-        ]
+    cat = pa.table(
+        {"asdf_id": [1, 2], "exfield_water": [3, 0], "exfield_forest": [1, 2]}
     )
-    wb = spark.createDataFrame(
-        [Row(asdf_id=1, exfield_sum=7.0), Row(asdf_id=2, exfield_sum=9.0)]
-    )
+    wb = pa.table({"asdf_id": [1, 2], "exfield_sum": [7.0, 9.0]})
     return base, rel, cat, wb
 
 
@@ -85,7 +82,7 @@ def test_merge_column_order_and_values(frames):
     )
     # order: asdf_id, extract cols in merge order, then passthrough attrs
     # (request_tools.py:630, 690-695)
-    assert merged.columns == [
+    assert merged.column_names == [
         "asdf_id",
         "udel_precip_v401_sum.1998.mean",
         "aiddata_v3.0123456.sum",
@@ -97,21 +94,48 @@ def test_merge_column_order_and_values(frames):
         "NAME_0",
         "NAME_1",
     ]
-    rows = {r["asdf_id"]: r for r in merged.collect()}
+    rows = {r["asdf_id"]: r for r in merged.to_pylist()}
     assert rows[1]["udel_precip_v401_sum.1998.mean"] == 1.5
     assert rows[1]["aiddata_v3.0123456.reliability"] == 0.5
     assert rows[2]["landcover.2000.categorical_forest"] == 2
     assert rows[2]["NAME_1"] == "Lagos"
 
 
-def test_merge_is_order_insensitive_on_key(spark):
+def test_merge_is_order_insensitive_on_key():
     # property (SURVEY.md §5.2): join alignment, not positional
-    a = spark.createDataFrame([Row(asdf_id=i, exfield_0=float(i)) for i in (1, 2, 3)])
-    b = spark.createDataFrame(
-        [Row(asdf_id=i, exfield_0=float(i * 10)) for i in (3, 1, 2)]
-    )
+    a = pa.table({"asdf_id": [1, 2, 3], "exfield_0": [1.0, 2.0, 3.0]})
+    b = pa.table({"asdf_id": [3, 1, 2], "exfield_0": [30.0, 10.0, 20.0]})
     merged = merge_extracts(
         [MergeItem(a, "x", "1", "mean"), MergeItem(b, "y", "1", "sum")]
     )
-    rows = {r["asdf_id"]: r for r in merged.collect()}
+    rows = {r["asdf_id"]: r for r in merged.to_pylist()}
     assert all(rows[i]["y.1.sum"] == i * 10 for i in (1, 2, 3))
+
+
+def test_merge_missing_feature_is_null():
+    # FULL OUTER: a feature one item lacks keeps its row, with that
+    # item's columns null — including the first item's passthrough
+    a = pa.table(
+        {"asdf_id": [1, 2, 3], "exfield_0": [1.0, 2.0, 3.0], "NAME": ["a", "b", "c"]}
+    )
+    b = pa.table({"asdf_id": [1, 3, 4], "exfield_water": [5, 6, 7]})
+    merged = merge_extracts(
+        [MergeItem(a, "x", "1", "mean"), MergeItem(b, "lc", "2000", "categorical")]
+    )
+    rows = {r["asdf_id"]: r for r in merged.to_pylist()}
+    assert set(rows) == {1, 2, 3, 4}
+    assert rows[2]["lc.2000.categorical_water"] is None
+    assert rows[2]["x.1.mean"] == 2.0 and rows[2]["NAME"] == "b"
+    assert rows[4]["x.1.mean"] is None and rows[4]["NAME"] is None
+    assert rows[4]["lc.2000.categorical_water"] == 7
+
+
+def test_merge_rows_sorted_by_key():
+    # output order is the key order, whatever order the inputs hold
+    a = pa.table({"asdf_id": [5, 3, 9, 1], "exfield_0": [5.0, 3.0, 9.0, 1.0]})
+    b = pa.table({"asdf_id": [9, 7, 1], "exfield_0": [90.0, 70.0, 10.0]})
+    merged = merge_extracts(
+        [MergeItem(a, "x", "1", "mean"), MergeItem(b, "y", "1", "sum")]
+    )
+    assert merged.column("asdf_id").to_pylist() == [1, 3, 5, 7, 9]
+    assert merged.column("y.1.sum").to_pylist() == [10.0, None, None, 70.0, 90.0]

@@ -9,6 +9,7 @@ import zipfile
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from det_module_spark.operators.merge import MergeItem
 from det_module_spark.plans.runner import Engine, STATUS_DONE, STATUS_WAITING
@@ -94,10 +95,32 @@ def test_end_to_end_and_idempotency(engine, tmp_path):
     assert a == b
 
 
+def test_merged_schema_matches_golden(engine):
+    """The merged table Spark receives keeps the names, order and Spark
+    types of the per-item results' footer schemas, on the run that
+    executes the items and on the fully cached one."""
+    for _ in range(2):
+        r = engine.run_request(REQUEST)
+        rel_hash7 = r.items[0].spec_hash[:7]
+        wb_hash7 = r.items[2].spec_hash[:7]
+        assert [(f.name, f.dataType) for f in r.merged.schema] == [
+            ("asdf_id", T.LongType()),
+            (f"aiddata_nga_v3.{rel_hash7}.sum", T.DoubleType()),
+            (f"aiddata_nga_v3.{rel_hash7}.potential", T.DoubleType()),
+            (f"aiddata_nga_v3.{rel_hash7}.reliability", T.DoubleType()),
+            (f"worldbank_v1_4.{wb_hash7}.sum", T.DoubleType()),
+            ("udel_precip.1998.mean", T.DoubleType()),
+            ("udel_precip.1998.categorical_water", T.LongType()),
+            ("udel_precip.1998.categorical_forest", T.LongType()),
+        ]
+
+
 def test_bundle_sinks(engine, tmp_path):
     r = engine.run_request(REQUEST)
     merge_items = [
-        MergeItem(engine.cache.get(i.spec_hash), i.dataset, i.temporal, i.extract_type)
+        MergeItem(
+            engine.cache.table(i.spec_hash), i.dataset, i.temporal, i.extract_type
+        )
         for i in r.items
         if i.kind == "extract"
     ]
@@ -247,21 +270,22 @@ def test_repeated_raster_file_runs_once(spark, tmp_path):
 
 
 def test_cached_request_starts_no_spark_job(engine, spark):
-    """A fully cached request probes the driver-replayed manifest and
-    reads each result with its footer schema: nothing runs on Spark
-    until the caller collects the merge."""
+    """A fully cached request probes the driver-replayed manifest,
+    reads each result into Arrow and merges on the driver: nothing runs
+    on Spark, collecting the merged table included."""
     engine.run_request(REQUEST)
     sc = spark.sparkContext
     group = "cached-request-no-jobs"
     sc.setJobGroup(group, group)
     try:
         res = engine.run_request(REQUEST)
+        rows = res.merged.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert res.missing == []
-    assert res.status == STATUS_DONE and res.merged is not None
+    assert res.status == STATUS_DONE and len(rows) == 3
 
     # one new extract type on the cached raster: that item alone runs
     req = json.loads(json.dumps(REQUEST))

@@ -131,3 +131,25 @@ def test_orc_round_trip(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters: [IsNotNull(id), GreaterThan(id,1)]" in plan
+
+
+@pytest.mark.parametrize(
+    "env, table", [("SPARK_GRAFT_SCAN_PART_BYTES", "region"),
+                   ("SPARK_GRAFT_SCAN_PART_BYTES_TEXT", "documents")]
+)
+@pytest.mark.parametrize("value", ["0", "-4096", "1MB"])
+def test_scan_floor_knob_rejects_non_positive_sizes(
+    spark, tmp_path, monkeypatch, env, table, value
+):
+    """The scan-floor partition size must be a positive integer; a bad
+    value is an error that names the variable, not a ZeroDivisionError
+    or a silently ignored floor."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from det_module_spark.sources.tables import load_table
+
+    pq.write_table(pa.table({"k": [1, 2, 3]}), str(tmp_path / f"{table}.parquet"))
+    monkeypatch.setenv(env, value)
+    with pytest.raises(ValueError, match=f"^{env} must"):
+        load_table(spark, str(tmp_path), table)

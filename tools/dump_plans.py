@@ -1,10 +1,11 @@
 """Dump .explain('formatted') for registered queries to
-plans/<round>/<query>_<tag>.txt (guide §1 / §7.2: keep the plan evidence
-next to the claim).
+<outdir>/<query>_<tag>.txt (guide §1 / §7.2: keep the plan evidence
+next to the claim). The queries come from the checkout this script
+sits in.
 
 Usage:
-    python tools/dump_plans.py --tag before q1 q2 ...
-    python tools/dump_plans.py --tag after --all
+    python tools/dump_plans.py --outdir plans/<topic> --tag before q1 q2 ...
+    python tools/dump_plans.py --outdir plans/<topic> --tag after --all
 """
 
 from __future__ import annotations
@@ -13,7 +14,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -22,7 +24,7 @@ def main() -> None:
     ap.add_argument("--tag", required=True)
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--outdir", default="/root/repo/plans/r11")
+    ap.add_argument("--outdir", required=True)
     args = ap.parse_args()
 
     os.environ["SPARK_GRAFT_SF_DIR"] = args.sf
