@@ -78,7 +78,7 @@ def _sidecar_name(sf: float, mode: str, nocache: bool, cpus: str) -> str:
 
 def main() -> None:
     import __spark_entry__ as entry_mod
-    from det_module_spark.session import get_spark
+    from det_module_spark.session import codegen_compiles, get_spark, spark_cpus
     from det_module_spark.sources.tables import TABLES, load_table
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -180,11 +180,16 @@ def main() -> None:
         timings[name] = round(dt, 3)
         print(f"# [{label}] {name}: {dt:.3f}s rows={n}", file=sys.stderr)
 
-    def run_seq(label: str, d: str = sf_dir) -> tuple[float, dict[str, float]]:
+    def run_seq(
+        label: str, d: str = sf_dir, compiles: dict | None = None
+    ) -> tuple[float, dict[str, float]]:
         timings: dict[str, float] = {}
         t0 = time.time()
         for item in qs.items():
+            c0 = codegen_compiles(spark)
             run_one(label, timings, item, d)
+            if compiles is not None:
+                compiles[item[0]] = codegen_compiles(spark) - c0
         return time.time() - t0, timings
 
     # Deterministic stream packing. Baseline: each query goes to the
@@ -232,11 +237,15 @@ def main() -> None:
         return time.time() - t0, timings
 
     seq_wall, seq_timings = (0.0, {})
+    # Janino compiles per query in the sequential pass: a working set
+    # that outgrows the generated-class cache shows up as compiles on
+    # queries whose code an earlier query already generated
+    seq_compiles: dict[str, int] = {}
     conc_wall, conc_timings = (0.0, {})
     conc_walls: list[float] = []
     conc_samples: dict[str, list[float]] = {}
     if mode in ("both", "seq"):
-        seq_wall, seq_timings = run_seq("seq")
+        seq_wall, seq_timings = run_seq("seq", compiles=seq_compiles)
     plan, assignment = build_plan(seq_timings)
     if mode in ("both", "concurrent"):
         # repeat the concurrent pass; first repeat is untimed warm-up
@@ -324,7 +333,7 @@ def main() -> None:
 
     # full per-query detail goes to a sidecar, never to the final line.
     sidecar_name = _sidecar_name(
-        sf, mode, nocache, os.environ.get("SPARK_GRAFT_CPUS", "32")
+        sf, mode, nocache, str(spark_cpus())
     )
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), sidecar_name
@@ -348,6 +357,7 @@ def main() -> None:
                 ),
                 "concurrent_wall_samples": [round(w, 3) for w in conc_walls],
                 "sequential_query_seconds": seq_timings,
+                "codegen_compiles": seq_compiles,
                 "concurrent_query_seconds": conc_timings,
                 "concurrent_query_p50": {
                     k: round(statistics.median(v), 3) for k, v in sorted(conc_samples.items())

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from det_module_spark.session import spark_cpus
+
 TABLES = [
     "region",
     "nation",
@@ -112,14 +114,13 @@ def _scan_floor_partitions(path: str, name: str) -> int:
         target = 0
     if target <= 0:
         raise ValueError(f"{env} must be a positive integer byte count, got {raw!r}")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     files = (
         [path]
         if os.path.isfile(path)
         else glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     )
     total = sum(os.path.getsize(f) for f in files if os.path.exists(f))
-    return max(1, min(cpus, total // target))
+    return max(1, min(spark_cpus(), total // target))
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

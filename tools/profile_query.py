@@ -29,9 +29,13 @@ def main() -> None:
     os.environ["SPARK_GRAFT_SF_DIR"] = args.sf
     from pyspark.sql import SparkSession
 
-    b = SparkSession.builder.master(
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    ).config("spark.ui.enabled", "true")
+    from det_module_spark.session import CODEGEN_CACHE_ENTRIES, spark_cpus
+
+    b = (
+        SparkSession.builder.master(f"local[{spark_cpus()}]")
+        .config("spark.ui.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+    )
     for kv in args.conf:
         k, _, v = kv.partition("=")
         b = b.config(k, v)

@@ -39,7 +39,7 @@ def main() -> None:
 
     os.environ["SPARK_GRAFT_SF_DIR"] = args.sf
     import __spark_entry__ as mod
-    from det_module_spark.session import get_spark
+    from det_module_spark.session import CODEGEN_CACHE_ENTRIES, get_spark, spark_cpus
     from det_module_spark.sources.tables import TABLES, load_table
 
     if args.conf:
@@ -47,8 +47,9 @@ def main() -> None:
         # exists (conf on a live session won't move static ones)
         from pyspark.sql import SparkSession
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        b = SparkSession.builder.master(f"local[{cpus}]")
+        b = SparkSession.builder.master(f"local[{spark_cpus()}]").config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
         for kv in args.conf:
             k, _, v = kv.partition("=")
             b = b.config(k, v)
