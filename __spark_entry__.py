@@ -31,7 +31,7 @@ from det_module_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
-from det_module_spark.operators.extract_types import zonal_extract
+from det_module_spark.operators.extract_types import zonal_aggregate, zonal_extract
 from det_module_spark.operators.merge import MergeItem, merge_extracts
 from det_module_spark.operators.msr import even_split_allocation, msr_surface
 from det_module_spark.operators.multimodal import (
@@ -703,23 +703,7 @@ def q_zonal_weighted_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("bminx"), F.col("bminy"), F.col("bmaxx"), F.col("bmaxy"),
         ),
     ).filter(F.col("coverage") > 0)
-    out = zonal_extract(joined, "weighted_mean")
-    wsum = zonal_extract(joined, "weighted_sum").withColumnRenamed(
-        "exfield_0", "wsum"
-    )
-    wcnt = zonal_extract(joined, "weighted_count").withColumnRenamed(
-        "exfield_0", "wcnt"
-    )
-    return (
-        out.join(wsum, "asdf_id")
-        .join(wcnt, "asdf_id")
-        .select(
-            "asdf_id",
-            _pround(F.col("exfield_0"), 6).alias("wmean"),
-            _pround(F.col("wsum"), 2).alias("wsum"),
-            _pround(F.col("wcnt"), 4).alias("wcnt"),
-        )
-    )
+    return _weighted_result(joined)
 
 
 def _poly_cells(spark: SparkSession) -> DataFrame:
@@ -752,23 +736,16 @@ _POLY_RINGS = [
 ]
 
 
-def _weighted_poly_result(joined: DataFrame) -> DataFrame:
-    out = zonal_extract(joined, "weighted_mean")
-    wsum = zonal_extract(joined, "weighted_sum").withColumnRenamed(
-        "exfield_0", "wsum"
+def _weighted_result(joined: DataFrame) -> DataFrame:
+    # the three weighted types in one fused aggregation over the cells
+    out = zonal_aggregate(
+        joined, ["weighted_mean", "weighted_sum", "weighted_count"]
     )
-    wcnt = zonal_extract(joined, "weighted_count").withColumnRenamed(
-        "exfield_0", "wcnt"
-    )
-    return (
-        out.join(wsum, "asdf_id")
-        .join(wcnt, "asdf_id")
-        .select(
-            "asdf_id",
-            _pround(F.col("exfield_0"), 6).alias("wmean"),
-            _pround(F.col("wsum"), 2).alias("wsum"),
-            _pround(F.col("wcnt"), 4).alias("wcnt"),
-        )
+    return out.select(
+        "asdf_id",
+        _pround(F.col("`weighted_mean:exfield_0`"), 6).alias("wmean"),
+        _pround(F.col("`weighted_sum:exfield_0`"), 2).alias("wsum"),
+        _pround(F.col("`weighted_count:exfield_0`"), 4).alias("wcnt"),
     )
 
 
@@ -787,7 +764,7 @@ def q_zonal_weighted_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         "asdf_id INT, ring ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>",
     )
     joined = polygon_coverage(_poly_cells(spark), bounds, cell_size=0.25)
-    return _weighted_poly_result(joined)
+    return _weighted_result(joined)
 
 
 def q_zonal_weighted_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,7 +783,7 @@ def q_zonal_weighted_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
         tris, "asdf_id INT, ring ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>"
     )
     joined = polygon_coverage(_poly_cells(spark), bounds, cell_size=0.25)
-    return _weighted_poly_result(joined)
+    return _weighted_result(joined)
 
 
 def q_request_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7630,18 +7607,36 @@ def entry(spark: SparkSession) -> DataFrame:
 #      sorted by their latest round in CORRECTNESS_r*.json, then by
 #      name (names with no record sort first).
 # The registry keeps its own order after the window.
-# the perfbench query_mix set: the generated-class cache size
-# (session.py) is shared by every query and sized to their working set
+# the request engine (plans/runner.py, plans/cache.py) and the users
+# of the fused zonal aggregate (extract_types.zonal_aggregate): every
+# zonal_extract call is now its one-type case
 _CHANGED_PATHS = [
-    "events_running_totals",
-    "bfs_reach",
-    "dedup_minhash_lsh",
-    "similarity_lsh_topk",
-    "msr_pipeline",
+    "request_lifecycle",
     "wide_merge",
-    "tpch_q9",
-    "tpch_q1",
-    "cache_anti_join",
+    "raster_file_zonal",
+    "zonal_weighted_spatial",
+    "zonal_weighted_polygon",
+    "zonal_weighted_triangle",
+    "zonal_spatial_join",
+    "zonal_mean",
+    "zonal_count",
+    "zonal_sum",
+    "zonal_min",
+    "zonal_max",
+    "zonal_weighted_mean",
+    "zonal_weighted_count",
+    "zonal_weighted_sum",
+    "zonal_categorical",
+    "zonal_reliability",
+    "zonal_std",
+    "zonal_median",
+    "zonal_majority",
+    "zonal_minority",
+    "zonal_unique",
+    "zonal_range",
+    "zonal_percentile_25",
+    "zonal_var",
+    "zonal_mode",
 ]
 _WINDOW = 50
 

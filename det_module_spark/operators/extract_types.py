@@ -133,6 +133,52 @@ def extract_abbr(name: str) -> str:
     return "p"  # percentile_NN family
 
 
+def fusable(extract_type: str) -> bool:
+    """True for the types that are plain aggregates over the cells —
+    every registry entry that is not ``two_phase``, and
+    ``percentile_NN`` — so any number of them fuse into one
+    ``zonal_aggregate`` pass. The two-phase types (categorical,
+    majority, minority, mode) keep their own plans."""
+    validate_extract_type(extract_type)
+    if _PERCENTILE_RE.match(extract_type):
+        return True
+    return not EXTRACT_TYPES[extract_type].two_phase
+
+
+def unfuse(columns: list[str], extract_type: str) -> list[tuple[str, str]]:
+    """``(column, field)`` pairs of one type's columns in a
+    ``zonal_aggregate`` result: column ``<type>:<field>`` holds the
+    type's ``<field>`` (``exfield_0``, or the reliability triple)."""
+    prefix = f"{extract_type}:"
+    return [(c, c[len(prefix):]) for c in columns if c.startswith(prefix)]
+
+
+def zonal_aggregate(
+    cells: DataFrame,
+    extract_types: list[str],
+    key: str = "asdf_id",
+    value: str = "value",
+    weight: str = "coverage",
+    potential: str = "potential",
+) -> DataFrame:
+    """Every fusable type in ONE ``groupBy(key).agg(...)``: k types
+    over one cell table scan it once, not k times. Each type's fields
+    are named ``<type>:<field>`` (split them with ``unfuse``)."""
+    v, w = F.col(value), F.col(weight)
+    p = F.col(potential) if potential in cells.columns else F.lit(None)
+    aggs = []
+    for t in dict.fromkeys(extract_types):
+        if not fusable(t):
+            raise ValueError(f"{t!r} has its own plan: use zonal_extract")
+        m = _PERCENTILE_RE.match(t)
+        if m:
+            fields = {"exfield_0": F.percentile(v, F.lit(int(m.group(1)) / 100.0))}
+        else:
+            fields = EXTRACT_TYPES[t].aggregates(v, w, p)
+        aggs += [c.alias(f"{t}:{n}") for n, c in fields.items()]
+    return cells.groupBy(key).agg(*aggs)
+
+
 def zonal_extract(
     cells: DataFrame,
     extract_type: str,
@@ -151,30 +197,17 @@ def zonal_extract(
     and ``potential`` for the reliability triple.
 
     Returns one row per ``key`` with ``exfield_*`` value columns, per the
-    extract CSV contract (queue/extract_check.py:92-98).
+    extract CSV contract (queue/extract_check.py:92-98). A fusable type
+    is the one-type case of ``zonal_aggregate``.
     """
-    validate_extract_type(extract_type)
-    v, w = F.col(value), F.col(weight)
-    p = F.col(potential) if potential in cells.columns else F.lit(None)
-
-    m = _PERCENTILE_RE.match(extract_type)
-    if m:
-        frac = int(m.group(1)) / 100.0
-        return cells.groupBy(key).agg(
-            F.percentile(v, F.lit(frac)).alias("exfield_0")
+    if fusable(extract_type):
+        out = zonal_aggregate(cells, [extract_type], key, value, weight, potential)
+        return out.select(
+            key, *[F.col(f"`{c}`").alias(f) for c, f in unfuse(out.columns, extract_type)]
         )
-
-    et = EXTRACT_TYPES[extract_type]
-
-    if et.name == "categorical":
+    if extract_type == "categorical":
         return _categorical(cells, key, category, categories)
-    if et.name in ("majority", "mode"):
-        return _frequency_extreme(cells, key, value, most=True)
-    if et.name == "minority":
-        return _frequency_extreme(cells, key, value, most=False)
-
-    aggs = et.aggregates(v, w, p)
-    return cells.groupBy(key).agg(*[c.alias(n) for n, c in aggs.items()])
+    return _frequency_extreme(cells, key, value, most=extract_type != "minority")
 
 
 def _categorical(

@@ -11,10 +11,15 @@ request's hashes against the manifest log replayed on the driver.
 States mirror the reference's work-item machine
 (queue/extract_check.py:113-143): an item counts as *cached* only when
 status == DONE **and** its artifact is committed — a done row without a
-committed artifact is missing (extract_check.py:132-136). Artifact
-commit is represented by the ``committed`` flag written only after the
-result parquet is fully written (the ``_SUCCESS``-marker pattern),
-so a crashed writer never yields a phantom cache hit.
+committed artifact is missing (extract_check.py:132-136).
+
+Write path — publish by rename, then commit: ``put_many`` writes each
+result with pyarrow on the driver into a ``.tmp-*`` directory under
+``results/`` and publishes it with one ``os.rename`` to
+``results/<hash>``; only then does one log commit record the batch.
+Concurrent writers of one hash race on the rename, and the loser drops
+its copy (content addressing makes them equal), so a crashed or racing
+writer never yields a phantom cache hit or a torn artifact.
 
 Durability: the manifest is an append-only TRANSACTION LOG
 (Delta-protocol shape, VERDICT r01 #5) of immutable
@@ -32,6 +37,7 @@ parquet footer, so a cache hit starts no Spark job.
 
 from __future__ import annotations
 
+import errno
 import glob
 import json
 import os
@@ -43,8 +49,8 @@ from typing import Iterable
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 STATUS_QUEUED = 0
 STATUS_DONE = 1
@@ -78,11 +84,9 @@ _LOG_SCHEMA = pa.schema(
 )
 
 
-def spark_schema(footer: pa.Schema) -> T.StructType:
-    """The Spark schema a Spark writer stored in a parquet footer, the
-    key Spark's own schema inference reads."""
-    row_schema = footer.metadata[b"org.apache.spark.sql.parquet.row.metadata"]
-    return T.StructType.fromJson(json.loads(row_schema))
+# the footer key of the Spark schema, which Spark's writer sets and
+# Spark's own schema inference reads
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _log_table(rows: list[tuple], version: int | None) -> pa.Table:
@@ -143,15 +147,12 @@ class CacheManifest:
     def _commit(
         self, rows: list[tuple], require_version: int | None = None
     ) -> int | None:
-        """Atomically append one commit file containing ``rows``.
-
-        Optimistic concurrency: claim version = max(existing)+1; the
-        loser of a race re-reads the version list and retries.
-
-        ``require_version`` pins the claim to ONE specific version and
-        returns None instead of retrying if it is already taken — the
-        compare-and-swap compact() needs: its snapshot is only valid
-        as version snapshot_max+1, never as "whatever is free next"."""
+        """Atomically append one commit file containing ``rows``:
+        claim version = max(existing)+1; the loser of a race re-lists
+        and retries. ``require_version`` pins the claim to ONE version
+        and returns None if it is taken — the compare-and-swap
+        compact() needs (its snapshot is only valid as
+        snapshot_max+1)."""
         while True:
             if require_version is not None:
                 v = require_version
@@ -168,25 +169,19 @@ class CacheManifest:
     ) -> tuple[dict[str, tuple], int | None]:
         """Fold the log into ``(state, version)``: ``state`` maps each
         spec_hash to its highest-version row, ``version`` is the
-        highest version replayed (None = nothing to replay). Safe
-        against a concurrent compact(): if a listed file vanishes
-        before or during the read, re-list and retry — the fresh
-        listing always contains the fold commit (compact claims its
-        version BEFORE deleting), so the result is complete, never
-        partial.
+        highest version replayed (None = nothing to replay). The replay
+        is [newest checkpoint ≤ ``as_of``] + the commits above it, so
+        its cost follows the tail, not the log; commits a compact()
+        deleted below the checkpoint are covered by the checkpoint or
+        by the compact's fold commit in the tail.
 
-        When a checkpoint ≤ ``as_of`` (or any, for as_of=None) exists,
-        the replay is [newest applicable checkpoint] + commits ABOVE it
-        — cost ∝ tail length, not log length. Commits a compact()
-        deleted below the checkpoint are covered by either the
-        checkpoint itself or the compact's fold commit in the tail.
-
-        Empty-listing guard: POSIX readdir overlapping compact()'s
-        delete-olds-after-claiming-fold window may legally miss BOTH
-        the just-deleted files and the just-created fold, returning a
-        transiently empty listing for a non-empty log — re-list a few
-        times before trusting emptiness (a genuinely empty log stays
-        empty; the race window is microseconds)."""
+        Safe against a concurrent compact(): if a listed file vanishes
+        before or during the read, re-list and retry — compact claims
+        its fold version BEFORE deleting, so the fresh listing holds
+        the fold and the result is complete, never partial. A readdir
+        overlapping that delete window may also transiently list
+        nothing for a non-empty log, so an empty listing is re-listed
+        a few times before it is trusted."""
         empty_retries = 0
         while True:
             ckpts = [
@@ -220,30 +215,23 @@ class CacheManifest:
                         state[row[0]] = row
             except FileNotFoundError:
                 continue  # a compact folded under us — re-list
-            # Commit files are immutable while present, so "all listed
-            # files still exist after the read" proves the snapshot
-            # was complete; otherwise a compact folded under us and the
-            # fresh listing (which necessarily contains its fold) is
-            # one retry away.
+            # commit files are immutable while present: if all listed
+            # files still exist after the read, the snapshot is complete
             if all(os.path.exists(f) for f in files):
                 return state, (tail[-1] if tail else base)
 
     def checkpoint(self) -> int | None:
         """Delta-_last_checkpoint mirror: fold the state through the
-        CURRENT max commit version V into ``_ckpt/V.parquet`` without
-        deleting any commit — reads start from the newest applicable
-        checkpoint and replay only the tail, while time travel to any
-        version keeps working (unlike ``compact()``, which collapses
-        history). Checkpoint rows carry ``version = V`` so the normal
-        highest-version-wins replay handles them with no special case.
-
-        Concurrency: V is the replayed snapshot's OWN max version,
-        never one chosen from an earlier listing — under a racing
-        compact() the verified set can legally be [5..10, fold-11]
-        (commits 0..4 already deleted), which is complete for 11 but
-        not for any lower version. Two racers produce equivalent files
-        — the ``os.link`` claim dedupes. Returns the checkpointed
-        version, or None on an empty log."""
+        current max commit version V into ``_ckpt/V.parquet`` without
+        deleting any commit, so reads replay only the tail while time
+        travel to any version keeps working (unlike ``compact()``).
+        Checkpoint rows carry ``version = V``, so the normal
+        highest-version-wins replay needs no special case. V is the
+        replayed snapshot's OWN max version: under a racing compact()
+        the verified set can be [5..10, fold-11], complete for 11 but
+        for no lower version. Racers write equal files and the
+        ``os.link`` claim dedupes them. Returns V, or None on an empty
+        log."""
         state, v = self._replay()
         if v is not None:
             self._write_linked(self._ckpt_dir, v, list(state.values()))
@@ -252,14 +240,10 @@ class CacheManifest:
     def read(self, as_of_version: int | None = None) -> DataFrame:
         """Manifest state: replay the log, highest version wins per
         spec_hash. ``as_of_version`` is TIME TRAVEL — replay only
-        commits with version <= it, reproducing any historical state
-        exactly (commits are immutable once claimed, so the snapshot
-        is stable until those files are compacted away; compact()
-        folds history and collapses earlier versions; checkpoint()
-        accelerates reads while PRESERVING time travel).
-
-        The rows reach Spark as an Arrow batch, which plans as a
-        LocalTableScan: no job and no Python worker to scan them."""
+        commits with version <= it (commits are immutable once claimed;
+        compact() collapses history, checkpoint() keeps it). The rows
+        reach Spark as an Arrow batch, which plans as a LocalTableScan:
+        no job and no Python worker to scan them."""
         state, v = self._replay(as_of_version)
         table = _log_table(list(state.values()), v).drop_columns("version")
         return self.spark.createDataFrame(table, schema=MANIFEST_SCHEMA)
@@ -271,21 +255,14 @@ class CacheManifest:
 
     def compact(self) -> None:
         """Fold the whole log into one commit file and drop the older
-        files — a compare-and-swap loop so concurrent WRITERS are safe:
-
-        1. replay the log (snapshot_max = highest replayed version)
-        2. claim version snapshot_max + 1 with ``require_version``
-
-        If ANY commit landed after the snapshot it owns snapshot_max+1
-        (writers always claim the next contiguous version), so the CAS
-        fails and the whole snapshot retries — the folded state can
-        never be assigned a version above a commit it didn't include,
-        which is the lost-update the old read-then-append had.
-        Concurrent READERS are also safe: a replay retries if a listed
-        file vanished, and the retried listing necessarily contains
-        this compact's fold commit, so they observe either the
-        pre-fold or post-fold state — never a partial one. Two
-        concurrent compacts serialize the same way."""
+        files — a compare-and-swap loop: replay (snapshot_max = highest
+        replayed version), then claim exactly snapshot_max + 1 with
+        ``require_version``. Writers claim contiguous versions, so a
+        commit that landed after the snapshot owns that version, the
+        CAS fails and the snapshot retries: the fold can never take a
+        version above a commit it did not include. Readers retry when
+        a listed file vanishes and the retry lists the fold, so they
+        see the pre- or post-fold state, never a partial one."""
         while True:
             state, snap_max = self._replay()
             if snap_max is None:
@@ -296,9 +273,7 @@ class CacheManifest:
             for old in self._versions():
                 if old >= fold:
                     break
-                # missing_ok: a racing compact may have deleted some
-                # of these already
-                try:
+                try:  # a racing compact may have deleted it already
                     os.unlink(os.path.join(self.log_path, f"{old:020d}.parquet"))
                 except FileNotFoundError:
                     pass
@@ -319,135 +294,120 @@ class CacheManifest:
     def result_path(self, spec_hash: str) -> str:
         return os.path.join(self.root, "results", spec_hash)
 
-    def put(self, spec_hash: str, kind: str, df: DataFrame) -> str:
-        """Write one result + commit its manifest row. See put_many."""
-        return self.put_many([(spec_hash, kind, df)])[0]
+    def put(self, spec_hash: str, kind: str, result: pa.Table | DataFrame) -> str:
+        """Publish one result + commit its manifest row. See put_many."""
+        return self.put_many([(spec_hash, kind, result)])[0]
 
     def put_many(
-        self, entries: list[tuple[str, str, DataFrame]]
+        self, entries: list[tuple[str, str, pa.Table | DataFrame]]
     ) -> list[str]:
-        """Write results, then commit ALL manifest rows in one upsert
-        (the reference's idempotent enqueue, extract_check.py:165-183,
-        batched). Results are written before the manifest commit, so a
-        crash mid-batch leaves at worst uncommitted artifacts — never
-        a phantom cache hit. One log commit per batch instead of per
-        item."""
-        if not entries:
-            return []
-        from concurrent.futures import ThreadPoolExecutor
+        """Publish each result by rename, then commit ALL manifest rows
+        in one log commit (the reference's idempotent enqueue,
+        extract_check.py:165-183, batched). A DataFrame is collected
+        with ``toArrow``: results are bounded (one row per boundary
+        feature, or an MSR grid). A crash leaves at worst a ``.tmp-*``
+        directory or a published, uncommitted artifact (``vacuum``
+        reclaims both) — never a phantom cache hit."""
+        rows: dict[str, tuple] = {}
+        for h, kind, result in entries:
+            if h not in rows:
+                table = result if isinstance(result, pa.Table) else result.toArrow()
+                self._publish(h, table)
+                rows[h] = (h, kind, STATUS_DONE, True, self.result_path(h), 0)
+        if rows:
+            self._commit(list(rows.values()))
+        return [r[4] for r in rows.values()]
 
-        # dedupe by spec hash FIRST: the store is content-addressed,
-        # so duplicate entries are the same artifact by construction —
-        # and without the dedupe two threads would run concurrent
-        # mode("overwrite") jobs on the SAME result path (one deletes
-        # while the other commits: a corrupt artifact recorded
-        # committed=True, i.e. a durable phantom hit).
-        seen: set[str] = set()
-        entries = [
-            e for e in entries if not (e[0] in seen or seen.add(e[0]))
-        ]
-        paths = [self.result_path(h) for h, _, _ in entries]
-
-        def write(args) -> None:
-            path, df = args
-            df.write.mode("overwrite").parquet(path)
-
-        # artifact writes are independent jobs on disjoint paths — run
-        # them concurrently so batch latency is ~one write, not the sum
-        # (Spark's scheduler interleaves the jobs across the executor)
-        with ThreadPoolExecutor(max_workers=min(8, len(entries))) as ex:
-            list(ex.map(write, [(p, e[2]) for p, e in zip(paths, entries)]))
-        rows = [
-            (h, kind, STATUS_DONE, True, p, 0)
-            for (h, kind, _), p in zip(entries, paths)
-        ]
-        # one atomic upsert for the whole batch: concurrent writers'
-        # commits interleave as distinct versions, never overwriting
-        # each other (the rewrite-in-place this replaces could drop a
-        # concurrent batch's rows)
-        self._commit(rows)
-        return paths
+    def _publish(self, spec_hash: str, table: pa.Table) -> None:
+        """Write ``table`` into a ``.tmp-*`` directory under results/
+        and rename it to ``results/<hash>``. The first rename wins; a
+        loser drops its copy, which the content address makes equal."""
+        final = self.result_path(spec_hash)
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".tmp-", dir=os.path.dirname(final))
+        # the Spark schema (every field nullable) under Spark's footer
+        # key, which get() and Spark's own inference read
+        schema = pa.schema([f.with_nullable(True) for f in table.schema])
+        footer = {_ROW_METADATA: from_arrow_schema(schema).json()}
+        part = os.path.join(tmp, "part-00000.parquet")
+        pq.write_table(table.cast(schema.with_metadata(footer)), part)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        while True:
+            try:
+                os.rename(tmp, final)
+                return
+            except OSError as e:
+                if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                    raise  # anything but "the target is taken"
+            if os.path.exists(os.path.join(final, "_SUCCESS")):
+                shutil.rmtree(tmp)  # an equal copy was published first
+                return
+            # a leftover without _SUCCESS (a Spark writer that crashed
+            # mid-write) is never adopted: move it aside and retry
+            try:
+                os.rename(final, tmp + "-old")
+            except FileNotFoundError:
+                continue
+            shutil.rmtree(tmp + "-old", ignore_errors=True)
 
     def _parts(self, spec_hash: str) -> list[str]:
         path = self.result_path(spec_hash)
         return sorted(glob.glob(os.path.join(path, "part-*.parquet")))
 
     def get(self, spec_hash: str) -> DataFrame:
-        """Read one result with the Spark schema its writer stored in a
-        part file's footer (Spark's own inference reads the same key),
-        so no schema-inference job runs."""
-        schema = spark_schema(pq.read_schema(self._parts(spec_hash)[0]))
+        """Read one result with the Spark schema stored in a part
+        file's footer (Spark's own inference reads the same key), so no
+        schema-inference job runs."""
+        footer = pq.read_schema(self._parts(spec_hash)[0]).metadata
+        schema = T.StructType.fromJson(json.loads(footer[_ROW_METADATA]))
         return self.spark.read.schema(schema).parquet(self.result_path(spec_hash))
 
     def table(self, spec_hash: str) -> pa.Table:
         """Read one result into an Arrow table on the driver: the same
-        part files ``get`` reads, no Spark job. The table keeps the
-        first part's footer metadata, so ``spark_schema(t.schema)`` is
-        the schema ``get`` would use."""
+        part files ``get`` reads, no Spark job."""
         return pq.read_table(self._parts(spec_hash))
 
-    def diff(
-        self, v_from: int, v_to: int | None = None
-    ) -> DataFrame:
+    def diff(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Audit two points of manifest history: what changed between
         ``read(as_of_version=v_from)`` and ``v_to`` (None = current).
-        Returns one row per differing spec_hash with ``change`` in
-        (added, changed, removed) plus the before/after paths — the
-        time-travel DESCRIBE-HISTORY companion: checkpoint() keeps the
-        versions readable, diff() explains them. Removed never occurs
-        under pure upserts but is classified for completeness."""
-        a = self.read(as_of_version=v_from).select(
-            F.col("spec_hash"),
-            F.struct("kind", "status", "committed", "path").alias("__a"),
-        )
-        b = self.read(as_of_version=v_to).select(
-            F.col("spec_hash"),
-            F.struct("kind", "status", "committed", "path").alias("__b"),
-        )
-        j = a.join(b, "spec_hash", "full_outer")
-        return (
-            j.withColumn(
-                "change",
-                F.when(F.col("__a").isNull(), F.lit("added"))
-                .when(F.col("__b").isNull(), F.lit("removed"))
-                .when(F.col("__a") != F.col("__b"), F.lit("changed"))
-                .otherwise(F.lit(None)),
-            )
-            .filter(F.col("change").isNotNull())
-            .select(
-                "spec_hash",
-                "change",
-                F.col("__a.path").alias("path_from"),
-                F.col("__b.path").alias("path_to"),
-            )
+        One row per differing spec_hash with ``change`` in (added,
+        changed, removed) plus the before/after paths — the time-travel
+        DESCRIBE-HISTORY companion. Removed never occurs under pure
+        upserts but is classified for completeness."""
+        a, _ = self._replay(v_from)
+        b, _ = self._replay(v_to)
+        rows = []
+        for h in sorted(a.keys() | b.keys()):
+            ra, rb = a.get(h), b.get(h)
+            if ra is None or rb is None or ra[1:5] != rb[1:5]:
+                # compare (kind, status, committed, path)
+                change = "added" if ra is None else "removed" if rb is None else "changed"
+                rows.append((h, change, ra and ra[4], rb and rb[4]))
+        return self.spark.createDataFrame(
+            rows, "spec_hash string, change string, path_from string, path_to string"
         )
 
     def vacuum(
         self, retention_s: float = 86_400.0, dry_run: bool = False
     ) -> list[str]:
-        """Delete ORPHANED result directories — artifacts no manifest
-        row references. ``put_many`` writes artifacts BEFORE the
-        manifest commit (crash-safe ordering: at worst uncommitted
-        artifacts, never a phantom cache hit), so crashes accumulate
-        orphans this reclaims — the Delta VACUUM mirror for the
-        tx-log.
+        """Delete ORPHANED result directories — ones no manifest row
+        references, the Delta VACUUM mirror for the tx-log. Publish by
+        rename, then commit leaves two kinds: a ``.tmp-*`` directory a
+        writer abandoned before its rename, and a published artifact
+        whose commit never came.
 
-        ``retention_s`` is the safety window against exactly that
-        write-then-commit ordering racing a live ``put_many``: only
-        directories whose mtime is older than the retention are
-        candidates, so an artifact written but not yet committed is
-        never swept (Delta's retention guard, same reasoning). Returns
-        the removed (or, with ``dry_run``, would-be-removed) paths."""
+        ``retention_s`` guards a live ``put_many``: only directories
+        whose mtime is older than the retention are candidates, so a
+        temp directory being written, or an artifact published but not
+        yet committed, is never swept. Returns the removed (or, with
+        ``dry_run``, would-be-removed) paths."""
         results_dir = os.path.join(self.root, "results")
         if not os.path.isdir(results_dir):
             return []
-        # compare by the artifact directory NAME (= the spec hash,
-        # result_path's last segment), not the raw path string:
-        # manifest rows store the path as spelled by the WRITING
-        # process ('./cache/results/<h>'), and a maintenance process
-        # opened on an absolute or symlinked root would string-match
-        # nothing and sweep every LIVE artifact as an orphan. The
-        # basename is spelling-independent by construction.
+        # compare by directory NAME (= the spec hash): manifest rows
+        # store the path as spelled by the writing process, and a
+        # maintenance process opened on another spelling of the root
+        # would string-match nothing and sweep every live artifact
         state, _ = self._replay()
         referenced = {
             os.path.basename(os.path.normpath(r[_COLS.index("path")]))

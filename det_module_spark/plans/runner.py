@@ -15,12 +15,16 @@ Item execution is pluggable: the caller provides source callbacks
 same lifecycle runs against synthetic fixtures, parquet lakes, or
 raster-derived cell tables.
 
-The probe is a set lookup against the manifest log replayed on the
-driver. Cached results are read into Arrow on the driver and merged
-there (``merge_extracts``); Spark receives the merged table as one
-local relation with the Spark types from the results' footer schemas.
-So a fully cached request starts no Spark job, collecting its merge
-included.
+Cold path: the missing extract items are grouped by data file, whose
+cells ``cell_source`` builds once, and every plain type on one file
+fuses into ONE aggregation (``zonal_aggregate``). Each fused result,
+two-phase extract and MSR surface is collected once with ``toArrow``
+— the collects run concurrently — split into per-item tables, and
+``put_many`` publishes them from Arrow. A cache hit is a set lookup
+against the driver-replayed manifest; cached results are read into
+Arrow and merged on the driver (``merge_extracts``), and Spark
+receives the merge as one local relation, so a fully cached request
+starts no Spark job.
 
 Dry-run mode (reference: queue/processing.py:85,163,213-216) expands
 and probes but mutates nothing — the engine's EXPLAIN.
@@ -28,17 +32,22 @@ and probes but mutates nothing — the engine's EXPLAIN.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 from typing import Any, Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from det_module_spark.operators.extract_types import zonal_extract
-from det_module_spark.operators.merge import MergeItem, merge_extracts, renamed_exfields
+from det_module_spark.operators.extract_types import (
+    fusable,
+    unfuse,
+    zonal_aggregate,
+    zonal_extract,
+)
+from det_module_spark.operators.merge import MergeItem, merge_extracts
 from det_module_spark.operators.msr import even_split_allocation, msr_surface
-from det_module_spark.plans.cache import CacheManifest, spark_schema
+from det_module_spark.plans.cache import CacheManifest
 # items_df stays bound only because perfbench's trace wraps runner.items_df
 from det_module_spark.plans.planner import Item, expand_request, items_df  # noqa: F401
 
@@ -50,19 +59,15 @@ STATUS_DONE = 1
 STATUS_PROCESSING = 2
 
 
-def _merged_schema(merged: pa.Table, items: list[MergeItem]) -> T.StructType:
-    """Spark types of the merged columns, taken from each item's footer
-    schema: the first item's for the key and passthrough columns, each
-    item's own for its renamed exfields. Every column is nullable — the
-    full outer merge fills an item's missing features with nulls."""
-    types: dict[str, T.DataType] = {}
-    for n, item in enumerate(items):
-        fields = {f.name: f.dataType for f in spark_schema(item.table.schema)}
-        renames = renamed_exfields(item)
-        if n == 0:
-            renames += [(c, c) for c in fields if not c.startswith("exfield_")]
-        types.update((out, fields[src]) for src, out in renames)
-    return T.StructType([T.StructField(c, types[c]) for c in merged.column_names])
+def _unfused(table: pa.Table, item: Item) -> pa.Table:
+    """One item's columns of a fused aggregate, named as its own result.
+    A release extract names its exfield by method, so the worldbank
+    hash7 rename yields ``<ds>.<hash7>.sum`` not ``.0`` (reference
+    contract: request_tools.py:675-681)."""
+    pairs = [("asdf_id", "asdf_id")] + unfuse(table.column_names, item.extract_type)
+    if item.source == "release":
+        pairs = [(c, f"exfield_{item.extract_type}" if f == "exfield_0" else f) for c, f in pairs]
+    return table.select([c for c, _ in pairs]).rename_columns([f for _, f in pairs])
 
 
 @dataclass
@@ -71,12 +76,13 @@ class RunResult:
     items: list[Item]
     missing: list[Item]
     merged: DataFrame | None = None
-    artifacts: dict[str, str] = field(default_factory=dict)
     error: str | None = None
 
 
 class Engine:
-    """One engine = one SparkSession + one cache root + data sources."""
+    """One engine = one SparkSession + one cache root + data sources.
+    The source callbacks run on the engine's pool threads, several at
+    once within one cold request."""
 
     def __init__(
         self,
@@ -99,29 +105,46 @@ class Engine:
         # request_tools.py:193-326, is out-of-engine; this is its seam)
         self.notify = notify or (lambda event, payload: None)
 
-    def _execute(self, item: Item) -> DataFrame:
-        if item.kind == "msr":
+    def _results(self, missing: list[Item]) -> list[tuple[str, str, pa.Table]]:
+        """Each missing item's result as an Arrow table. The work units
+        — each MSR item, and each data file's extract items — are built
+        and collected concurrently from one pool, so one unit's plan
+        building (source callbacks, table loads) overlaps another's
+        Spark jobs."""
+        files: dict[tuple[str, str], list[Item]] = {}
+        units = []
+        for item in missing:
+            if item.kind == "msr":
+                units.append([item])
+            else:
+                files.setdefault((item.source, item.data), []).append(item)
+        units += files.values()
+        with ThreadPoolExecutor(max_workers=min(8, len(units))) as pool:
+            return [r for results in pool.map(self._collect, units) for r in results]
+
+    def _collect(self, unit: list[Item]) -> list[tuple[str, str, pa.Table]]:
+        """Build one unit's plans and collect each once to the driver.
+        Results are bounded — one row per boundary feature (SURVEY
+        §1.1), or one per cell of an MSR grid. A data file's cells come
+        from one ``cell_source`` call, and all its plain extract types
+        fuse into one aggregation; two-phase types keep their own."""
+        first = unit[0]
+        if first.kind == "msr":
             if self.release_source is None:
                 raise ValueError("msr item but no release_source configured")
-            locations = self.release_source(item)
-            # MSR surfaces are bounded by the 0.05-resolution grid of
-            # the project extent — single-file artifacts like extracts
-            return msr_surface(even_split_allocation(locations)).coalesce(1)
-        out = zonal_extract(
-            self.cell_source(item),
-            item.extract_type,
-            categories=self.categories,
-        )
-        # extract results are one row per boundary feature — bounded
-        # small by construction (SURVEY §1.1) — so cache artifacts are
-        # single-file parquet: 1 file instead of shuffle-partition-many
-        # tiny files per item, and the merge re-read scans 1 file
-        out = out.coalesce(1)
-        if item.source == "release" and "exfield_0" in out.columns:
-            # aid extracts name exfields by method, so the worldbank
-            # hash7 rename yields `<ds>.<hash7>.sum` not `.0`
-            # (reference contract: request_tools.py:675-681)
-            out = out.withColumnRenamed("exfield_0", f"exfield_{item.extract_type}")
+            surface = msr_surface(even_split_allocation(self.release_source(first)))
+            return [(first.spec_hash, first.kind, surface.toArrow())]
+        cells = self.cell_source(first)
+        fused = [i for i in unit if fusable(i.extract_type)]
+        out = [
+            (i.spec_hash, i.kind,
+             zonal_extract(cells, i.extract_type, categories=self.categories).toArrow())
+            for i in unit
+            if i not in fused
+        ]
+        if fused:
+            table = zonal_aggregate(cells, [i.extract_type for i in fused]).toArrow()
+            out += [(i.spec_hash, i.kind, _unfused(table, i)) for i in fused]
         return out
 
     def run_request(self, request: dict[str, Any], dry_run: bool = False) -> RunResult:
@@ -148,9 +171,7 @@ class Engine:
 
         try:
             if missing:
-                self.cache.put_many(
-                    [(i.spec_hash, i.kind, self._execute(i)) for i in missing]
-                )
+                self.cache.put_many(self._results(missing))
         except Exception as e:  # noqa: BLE001 - E4 error state
             # reference parity: failed requests land in status −2 with
             # nothing partially merged (processing.py:144-216)
@@ -158,21 +179,16 @@ class Engine:
             return RunResult(STATUS_ERROR, items, missing, error=str(e))
 
         merge_items = [
-            MergeItem(
-                self.cache.table(i.spec_hash),
-                i.dataset,
-                i.temporal,
-                i.extract_type,
-            )
+            MergeItem(self.cache.table(i.spec_hash), i.dataset, i.temporal, i.extract_type)
             for i in items
             if i.kind == "extract"
         ]
         merged = None
         if merge_items:
-            table = merge_extracts(merge_items)
-            merged = self.spark.createDataFrame(
-                table, schema=_merged_schema(table, merge_items)
-            )
+            # every artifact is written from Arrow (its footer's Spark
+            # schema is derived from its Arrow schema), so the merged
+            # table's Arrow types are the Spark types
+            merged = self.spark.createDataFrame(merge_extracts(merge_items))
         self.notify(
             "complete",
             {

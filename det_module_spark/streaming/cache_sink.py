@@ -2,15 +2,17 @@
 
 Ties the streaming front-end to the engine's defining feature: extract
 results computed incrementally land in the same content-addressed
-cache the batch planner anti-joins against. ``foreachBatch`` gives
-exactly the transactional seam needed — each micro-batch groups its
-rows by spec hash and commits them through ``CacheManifest.put_many``
-(artifact-then-manifest, so a crashed batch can't fake a hit; replays
-of the same batch are idempotent upserts).
+cache the batch planner probes. ``foreachBatch`` gives
+exactly the transactional seam needed — each micro-batch is collected
+once with ``toArrow``, split by spec hash on the driver and committed
+through ``CacheManifest.put_many`` (publish-then-commit, so a crashed
+batch can't fake a hit; replays of the same batch are idempotent
+upserts).
 """
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from det_module_spark.plans.cache import CacheManifest
@@ -28,30 +30,18 @@ def stream_to_cache(
     the cache, grouped by spec hash. Returns the StreamingQuery."""
 
     def commit(batch: DataFrame, batch_id: int) -> None:
-        # a NULL spec hash cannot address an artifact: result_path(None)
-        # would TypeError inside os.path.join and kill the whole
-        # streaming query (and its filter would be null-semantics
-        # empty anyway) — drop such rows before grouping. The batch is
-        # persisted because it fans out to 1 + |hashes| jobs (the
-        # distinct collect plus one filtered write per hash); without
-        # the cache each job re-computes the micro-batch source.
-        batch = batch.filter(batch[hash_col].isNotNull()).persist()
-        try:
-            hashes = [
-                r[0] for r in batch.select(hash_col).distinct().collect()
+        # one job per micro-batch: collect it once (results are bounded
+        # — one row per boundary feature per hash) and split it by hash
+        # on the driver. A NULL spec hash cannot address an artifact,
+        # so its rows are dropped.
+        table = batch.toArrow()
+        hashes = pc.unique(table[hash_col].drop_null()).to_pylist()
+        cache.put_many(
+            [
+                (h, kind, table.filter(pc.equal(table[hash_col], h)).drop_columns(hash_col))
+                for h in hashes
             ]
-            entries = []
-            for h in hashes:
-                entries.append(
-                    (
-                        h,
-                        kind,
-                        batch.filter(batch[hash_col] == h).drop(hash_col),
-                    )
-                )
-            cache.put_many(entries)
-        finally:
-            batch.unpersist()
+        )
 
     writer = (
         results.writeStream.foreachBatch(commit)

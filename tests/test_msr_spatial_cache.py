@@ -488,3 +488,41 @@ def test_manifest_time_travel(spark, tmp_path):
     assert state() == state(v2)
     # as-of before any commit: empty
     assert state(v0 - 1) == []
+
+
+def test_vacuum_reclaims_abandoned_publish_dirs(spark, tmp_path):
+    """put_many writes each result into a ``.tmp-*`` directory under
+    results/ and renames it into place; a writer that dies before the
+    rename abandons that directory. vacuum() removes it once it is past
+    the retention window, and never one inside it (a live publish)."""
+    import os
+    import time
+
+    cache = CacheManifest(spark, str(tmp_path / "cache"))
+    cache.put("live", "extract", spark.createDataFrame([Row(asdf_id=1, exfield_0=1.0)]))
+    results = os.path.dirname(cache.result_path("live"))
+    abandoned, writing = (os.path.join(results, f".tmp-{n}") for n in ("dead", "busy"))
+    for d in (abandoned, writing):
+        os.makedirs(d)
+        open(os.path.join(d, "part-00000.parquet"), "w").close()
+    old = time.time() - 100
+    os.utime(abandoned, (old, old))
+    os.utime(cache.result_path("live"), (old, old))
+    assert cache.vacuum(retention_s=10) == [abandoned]
+    assert sorted(os.listdir(results)) == [".tmp-busy", "live"]
+    assert cache.get("live").count() == 1
+
+
+def test_publish_never_adopts_a_crashed_writers_leftover(spark, tmp_path):
+    """A result directory left by a writer that crashed mid-write (no
+    ``_SUCCESS`` marker) is replaced by the new publish, not adopted."""
+    import os
+
+    cache = CacheManifest(spark, str(tmp_path / "cache"))
+    leftover = cache.result_path("h1")
+    os.makedirs(os.path.join(leftover, "_temporary"))
+    open(os.path.join(leftover, "part-00000.parquet"), "w").close()  # torn file
+    cache.put("h1", "extract", spark.createDataFrame([Row(asdf_id=1, exfield_0=4.2)]))
+    assert sorted(os.listdir(leftover)) == ["_SUCCESS", "part-00000.parquet"]
+    assert cache.table("h1").to_pylist() == [{"asdf_id": 1, "exfield_0": 4.2}]
+    assert os.listdir(os.path.dirname(leftover)) == ["h1"]

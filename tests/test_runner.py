@@ -294,3 +294,100 @@ def test_cached_request_starts_no_spark_job(engine, spark):
     assert [(i.dataset, i.temporal, i.extract_type) for i in res.missing] == [
         ("udel_precip", "1998", "max")
     ]
+
+
+def test_concurrent_cold_requests_share_items(engine, spark, tmp_path):
+    """Four threads run the same cold request on one engine. Each
+    computes the missing items and publishes them by rename: the first
+    rename wins, the others drop their equal copies, so every request
+    ends done and every artifact reads back as a sequential run's."""
+    import threading
+
+    barrier = threading.Barrier(4)
+    results = [None] * 4
+
+    def run(n):
+        barrier.wait()
+        results[n] = engine.run_request(REQUEST)
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert [(r.status, r.error) for r in results] == [(STATUS_DONE, None)] * 4
+
+    sequential = Engine(
+        spark,
+        str(tmp_path / "sequential"),
+        cell_source=engine.cell_source,
+        release_source=engine.release_source,
+        categories=engine.categories,
+    )
+    assert sequential.run_request(REQUEST).status == STATUS_DONE
+    hashes = [i.spec_hash for i in results[0].items]
+    assert engine.cache.cached(hashes) == set(hashes)
+    for h in hashes:
+        got, want = engine.cache.table(h), sequential.cache.table(h)
+        assert got.schema.equals(want.schema, check_metadata=True), h
+        rows = lambda t: sorted(tuple(r.values()) for r in t.to_pylist())  # noqa: E731
+        assert rows(got) == rows(want), h
+    # no publish temp directory is left behind
+    results_dir = os.path.join(engine.cache.root, "results")
+    assert sorted(os.listdir(results_dir)) == sorted(hashes)
+
+
+def _jobs_started(spark, action) -> int:
+    """Spark jobs started while ``action`` runs, in any thread: counted
+    in the status store, since pool threads carry no job group. Jobs in
+    a group (a streaming query's micro-batches) are left out."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        listed = sc._jsc.sc().statusStore().jobsList(None)
+        return [listed.apply(i) for i in range(listed.size())]
+
+    before = max((j.jobId() for j in jobs()), default=-1)
+    action()
+    return len([j for j in jobs() if j.jobId() > before and j.jobGroup().isEmpty()])
+
+
+def test_cold_request_runs_one_aggregation_per_file(spark, tmp_path):
+    """k plain extract types requested on one file fuse into one
+    aggregation: the cold request starts as many jobs as collecting a
+    single zonal extract, and writes its artifacts without Spark."""
+    from det_module_spark.operators.extract_types import zonal_extract
+
+    cells = spark.createDataFrame(
+        [Row(asdf_id=i % 3, value=float(i), coverage=0.5, potential=float(i * 2))
+         for i in range(12)]
+    )
+    types = ["mean", "min", "max", "reliability"]
+    req = {
+        "_id": "fused01",
+        "boundary": {"name": "b"},
+        "raster_data": [
+            {
+                "name": "cov",
+                "options": {"extract_types": types},
+                "files": [{"name": "cov_1998", "path": "/x"}],
+            }
+        ],
+    }
+    eng = Engine(spark, str(tmp_path / "cache"), cell_source=lambda item: cells)
+    one = _jobs_started(spark, lambda: zonal_extract(cells, "mean").toArrow())
+    assert one >= 1
+    res = []
+    assert _jobs_started(spark, lambda: res.append(eng.run_request(req))) == one
+    assert res[0].status == STATUS_DONE and len(res[0].missing) == len(types)
+
+    # each item's artifact holds exactly its own type's fields
+    for item in res[0].items:
+        want = zonal_extract(cells, item.extract_type).toArrow()
+        got = eng.cache.table(item.spec_hash)
+        assert got.column_names == want.column_names
+        assert sorted(got.to_pylist(), key=lambda r: r["asdf_id"]) == sorted(
+            want.to_pylist(), key=lambda r: r["asdf_id"]
+        )

@@ -10,9 +10,10 @@ fails on the four patterns that are correct-at-sf0.1 but fatal at
    human adds it WITH a boundedness justification — this is the gate
    that would have caught the setsim.py/basket.py corpus-side hints
    the round-4 verdict flagged),
-3. a ``.collect()`` / ``.toPandas()`` in the library that is not on
-   the reviewed control-plane whitelist (data-plane collects are how
-   a distributed operator silently becomes a driver-side loop),
+3. a ``.collect()`` / ``.toPandas()`` / ``.toArrow()`` in the library
+   that is not on the reviewed control-plane whitelist (data-plane
+   collects are how a distributed operator silently becomes a
+   driver-side loop),
 4. a Window node with an EMPTY partition spec whose input is not a
    whitelisted bounded frame (the single-task sort that shipped
    woe_bins/sequence_gaps/equidepth_hist in round 5 — now rewritten
@@ -306,10 +307,10 @@ def test_verdict_named_files_stay_hint_free():
 # 3. driver-side collect gate
 # ---------------------------------------------------------------------------
 
-# Reviewed .collect()/.toPandas() sites, file -> (count, what makes it
-# control-plane). Control-plane = the collected frame's row count is
-# bounded by a parameter/structure (k, #partitions, vocab budget,
-# manifest size), never by the corpus.
+# Reviewed .collect()/.toPandas()/.toArrow() sites, file -> (count,
+# what makes it control-plane). Control-plane = the collected frame's
+# row count is bounded by a parameter/structure (k, #partitions, vocab
+# budget, manifest size, boundary features), never by the corpus.
 COLLECT_WHITELIST = {
     "det_module_spark/operators/bloom.py": (
         1,
@@ -373,18 +374,32 @@ COLLECT_WHITELIST = {
         "spill-aware sink sizing: two 1-row aggregates (row-width "
         "estimate; per-bucket max/mean) — control plane, never data",
     ),
-    # plans/cache.py has no collect site: the manifest log is replayed
-    # with pyarrow on the driver, never scanned by a Spark job.
+    # the manifest log is replayed with pyarrow on the driver, never
+    # scanned by a Spark job; cache.py's one site collects a result
+    "det_module_spark/plans/cache.py": (
+        1,
+        "put_many's toArrow of a DataFrame result: one row per boundary "
+        "feature (an extract) or per cell of an MSR grid",
+    ),
+    "det_module_spark/plans/runner.py": (
+        3,
+        "the engine's toArrow of each missing result: a two-phase or a "
+        "fused extract (one row per boundary feature) and an MSR surface "
+        "(one row per grid cell)",
+    ),
     "det_module_spark/streaming/cache_sink.py": (
         1,
-        "distinct spec hashes within one micro-batch: batch-bounded",
+        "toArrow of one micro-batch of extract results: one row per "
+        "boundary feature per spec hash in the batch",
     ),
     # optimization r10: replay.py's sink-table collect() was REMOVED —
     # results now hand off via a columnar parquet spill + rescan, no
     # driver row roundtrip — so it no longer appears here.
 }
 
-_COLLECT_RE = re.compile(r"\.collect\(\)|\.toPandas\(\)|\.collectAsMap\(")
+_COLLECT_RE = re.compile(
+    r"\.collect\(\)|\.toPandas\(\)|\.toArrow\(\)|\.collectAsMap\("
+)
 
 
 def test_library_collect_sites_are_whitelisted():
@@ -395,7 +410,7 @@ def test_library_collect_sites_are_whitelisted():
             found[str(path.relative_to(REPO))] = n
     expected = {f: c for f, (c, _why) in COLLECT_WHITELIST.items()}
     assert found == expected, (
-        "library collect/toPandas sites changed. A data-plane collect "
+        "library collect/toPandas/toArrow sites changed. A data-plane collect "
         "turns a distributed operator into a driver loop — review each "
         f"new site and update COLLECT_WHITELIST.\nfound={found}\n"
         f"expected={expected}"
