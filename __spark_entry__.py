@@ -6679,7 +6679,7 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cents") * 10000000 + F.col("o_custkey")).alias("okey"),
         "cents",
     )
-    ranked = dense_ids(keyed, "okey", out="rid", num_partitions=8)
+    ranked = dense_ids(keyed, "okey", out="rid")
     n = ranked.count()
     return (
         ranked.select(
@@ -7607,36 +7607,23 @@ def entry(spark: SparkSession) -> DataFrame:
 #      sorted by their latest round in CORRECTNESS_r*.json, then by
 #      name (names with no record sort first).
 # The registry keeps its own order after the window.
-# the request engine (plans/runner.py, plans/cache.py) and the users
-# of the fused zonal aggregate (extract_types.zonal_aggregate): every
-# zonal_extract call is now its one-type case
+# the request engine (plans/runner.py: the merge now fails inside the
+# request's error handling) and every registered user of the shared
+# ordered scan (operators/ids.ordered_scan: dense_ids, global_ntile,
+# global_cumsum, pack_sequences, skyline, sequence_gaps), whose range
+# layout is now sized by AQE instead of a fixed partition count
 _CHANGED_PATHS = [
     "request_lifecycle",
-    "wide_merge",
-    "raster_file_zonal",
-    "zonal_weighted_spatial",
-    "zonal_weighted_polygon",
-    "zonal_weighted_triangle",
-    "zonal_spatial_join",
-    "zonal_mean",
-    "zonal_count",
-    "zonal_sum",
-    "zonal_min",
-    "zonal_max",
-    "zonal_weighted_mean",
-    "zonal_weighted_count",
-    "zonal_weighted_sum",
-    "zonal_categorical",
-    "zonal_reliability",
-    "zonal_std",
-    "zonal_median",
-    "zonal_majority",
-    "zonal_minority",
-    "zonal_unique",
-    "zonal_range",
-    "zonal_percentile_25",
-    "zonal_var",
-    "zonal_mode",
+    "dense_ids",
+    "lorenz_deciles",
+    "snb_pairs",
+    "layout_pruning",
+    "equidepth_hist",
+    "woe_bins",
+    "rank_agreement",
+    "sequence_gaps",
+    "skyline_frontier",
+    "pack_sequences",
 ]
 _WINDOW = 50
 

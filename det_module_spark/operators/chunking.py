@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from det_module_spark.operators.ids import global_cumsum
 from det_module_spark.operators.text import token_count, tokens
 
 
@@ -72,7 +73,6 @@ def pack_sequences(
     id_col: str = "doc_id",
     text: str = "text",
     part_col: str | None = "lang",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Concat-then-chunk packing plan: documents are laid end-to-end in
     ``id_col`` order (within each ``part_col`` shard) and the stream is
@@ -89,11 +89,9 @@ def pack_sequences(
     partition's running sum independent. With ``part_col=None`` the
     single global stream does NOT fall back to an empty-partition-spec
     window (the single-task scale killer ids.global_ntile exists to
-    avoid): it runs the same two-phase recipe — pinned range layout on
-    ``id_col``, per-partition token totals prefix-summed on the driver
-    (#partitions scalars, control plane), then one Arrow pass adds the
-    partition's token offset to a local cumulative sum. Identical
-    output, distributed at any size.
+    avoid): it is the exclusive global prefix sum of token counts in
+    ``id_col`` order, :func:`ids.global_cumsum` over the shared ordered
+    scan. Identical output, distributed at any size.
     """
     if budget < 1:
         raise ValueError("budget must be >= 1")
@@ -102,10 +100,8 @@ def pack_sequences(
     # cum_before = its stream position; its bin_start is well-defined,
     # bin_end — the bin of its LAST token — is degenerate for a
     # zero-token doc and may come out < bin_start at a cut boundary).
-    # Without the coalesce, size(split(NULL)) is NULL under ANSI: the
-    # grouped branch would emit NULL bins while the ungrouped branch
-    # CRASHED the whole stage (NaN -> to_numpy('int64') ValueError) —
-    # one null row aborting a 100 TB packing job.
+    # Without the coalesce, size(split(NULL)) is NULL under ANSI and
+    # the document's bins would come out NULL.
     tok = F.coalesce(
         token_count(F.col(text)).cast("long"), F.lit(0).cast("long")
     )
@@ -134,56 +130,13 @@ def pack_sequences(
             part_col, id_col, "n_tokens", "cum_before", *bins
         )
 
-    # ungrouped: two-phase exact global prefix sum. Project to the
-    # two integer columns FIRST so the pinned layout holds ~16 bytes
-    # a row, not the corpus text.
-    slim = (
-        df.select(F.col(id_col), tok.alias("n_tokens"))
-        .repartitionByRange(num_partitions, F.col(id_col))
-        .sortWithinPartitions(id_col)
-        .localCheckpoint(eager=True)  # pin: both jobs must see the
-        # same range layout (the partitioner re-samples per action)
+    # ungrouped: the exact global prefix sum (ids.global_cumsum) over
+    # the two integer columns only, so the pinned layout holds ~16
+    # bytes a row, not the corpus text
+    slim = df.select(F.col(id_col), tok.alias("n_tokens"))
+    packed = global_cumsum(
+        slim, [id_col], "n_tokens", out="cum_before", inclusive=False
     )
-    totals = (
-        slim.select(
-            F.spark_partition_id().alias("pid"),
-            F.col("n_tokens").cast("long").alias("v"),
-        )
-        .groupBy("pid")
-        .agg(F.sum("v").alias("s"))
-        .collect()
-    )
-    sums = {r["pid"]: r["s"] for r in totals}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in range(num_partitions):
-        offsets[pid] = acc
-        acc += int(sums.get(pid, 0))
-
-    from pyspark.sql import types as T
-
-    from det_module_spark.operators.ids import _with_appended_field
-
-    fields = slim.schema.fieldNames()
-    out_schema = _with_appended_field(
-        slim.schema, "cum_before", T.LongType()
-    )
-
-    def add_cum(iterator):
-        from pyspark import TaskContext
-
-        run = offsets[TaskContext.get().partitionId()]
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            n = pdf["n_tokens"].to_numpy("int64")
-            cum = n.cumsum()
-            out = pdf[fields].copy()
-            out["cum_before"] = run + (cum - n)
-            run += int(cum[-1])
-            yield out
-
-    packed = slim.mapInPandas(add_cum, schema=out_schema)
     return packed.select(id_col, "n_tokens", "cum_before", *bins)
 
 

@@ -184,11 +184,7 @@ def sorted_neighborhood_pairs(
             ),
         ).alias("__ord"),
     )
-    # jvm strategy: rank via Column arithmetic over the pinned range
-    # layout — no Arrow round-trip of the keyed frame (ids.dense_ids)
-    ranked = dense_ids(
-        keyed, "__ord", out="__rn", strategy="jvm"
-    ).drop("__ord")
+    ranked = dense_ids(keyed, "__ord", out="__rn").drop("__ord")
     left = ranked.select(
         F.col(id_col).alias("id_a"),
         F.col(key_col).alias("key_a"),

@@ -1,17 +1,22 @@
-"""Global dense-id assignment (surrogate keys) without a global window.
+"""Ordered scans over the whole table without a global window.
 
 ``ROW_NUMBER() OVER (ORDER BY key)`` is the classic surrogate-key
 recipe and the classic scale trap: an empty-partition-spec window
-collapses the whole table onto ONE task. The distributed equivalent is
-two-phase range enumeration:
+collapses the whole table onto ONE task. Every operator here that
+needs a running quantity in global key order (dense ids, ntile,
+cumulative sums; also ``chunking.pack_sequences``, ``skyline.skyline``
+and ``sequence.sequence_gaps``) runs the one distributed equivalent,
+:func:`ordered_scan`:
 
 1. range-partition by the order key and sort within partitions — the
    standard total-order layout (same machinery as ``orderBy``, no
-   single-task stage);
-2. count rows per partition, prefix-sum the counts on the driver
-   (#partitions scalars — control plane);
-3. enumerate within each partition (Arrow-batched) and add the
-   partition's offset.
+   single-task stage). No partition number is given: AQE coalesces
+   adjacent range partitions by size, so a small input is one
+   partition and a large one splits by data volume;
+2. pin the layout and collect one summary row per partition
+   (#partitions rows — control plane);
+3. fold the summaries into a per-partition carry on the driver
+   (:func:`exclusive_prefix`) and finish each partition locally.
 
 The result depends only on the global key order, not on partition
 boundaries, so it is deterministic at any parallelism — PROVIDED the
@@ -22,81 +27,86 @@ to break ties, as with ``shard_plan``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from operator import add
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _range_enumerated(
-    df: DataFrame, cols: list[str], num_partitions: int
-):
-    """Shared two-phase layout for dense_ids/global_ntile: range
-    partition on ``cols``, sort within partitions, PIN the layout
-    (the range partitioner re-samples per action — the count job and
-    the consumer job must see IDENTICAL partitions), then prefix-sum
-    the per-partition counts on the driver (#partitions scalars —
-    control plane). Returns (pinned_df, offsets_by_pid, total)."""
-    parted = df.repartitionByRange(
-        num_partitions, *[F.col(c) for c in cols]
-    ).sortWithinPartitions(*cols)
-    parted = parted.localCheckpoint(eager=True)
-    counts = (
-        parted.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"))
+def ordered_scan(
+    df: DataFrame, order: list[str], *aggs: Column
+) -> tuple[DataFrame, list]:
+    """Range partition ``df`` on ``order``, sort within partitions and
+    PIN the layout (the range partitioner re-samples per action — the
+    summary job and the consumer job must see IDENTICAL partitions),
+    then collect one summary Row per partition: its row count ``n``
+    and each of ``aggs``.
+
+    Returns ``(pinned, parts)``: ``parts[pid]`` is partition ``pid``'s
+    summary, or None when that partition is empty. The list stops at
+    the last non-empty partition: any later partition is empty, and
+    the final carry of :func:`exclusive_prefix` is its carry."""
+    pinned = (
+        df.repartitionByRange(*order)
+        .sortWithinPartitions(*order)
+        .localCheckpoint(eager=True)
+    )
+    rows = (
+        pinned.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count(F.lit(1)).alias("n"), *aggs)
         .collect()
     )
-    sizes = {r["pid"]: r["n"] for r in counts}
-    # one range partition must stay under 2^33 rows: the jvm rank
-    # strategy packs (pid << 33) | row, and past the cap the row
-    # counter bleeds into the pid bits and ranks corrupt SILENTLY
-    # (the pandas enumerator would need an ~8.6-billion-row pandas
-    # frame — equally mis-sized). Fail loudly with the fix.
-    if sizes and max(sizes.values()) >= (1 << 33):
+    parts = [None] * (1 + max((r["pid"] for r in rows), default=-1))
+    for r in rows:
+        parts[r["pid"]] = r
+    # one range partition must stay under 2^33 rows: _jvm_rank packs
+    # (pid << 33) | row, and past the cap the row counter bleeds into
+    # the pid bits and ranks corrupt SILENTLY. Fail loudly with the fix.
+    biggest = max((r["n"] for r in rows), default=0)
+    if biggest >= 1 << 33:
         raise ValueError(
-            f"range layout holds {max(sizes.values())} rows in one "
-            f"partition, >= 2^33 — raise num_partitions "
-            f"(currently {num_partitions})"
+            f"range layout holds {biggest} rows in one partition, "
+            ">= 2^33 — lower spark.sql.adaptive.advisoryPartitionSizeInBytes "
+            "(or raise spark.sql.shuffle.partitions) so the range splits"
         )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in range(num_partitions):
-        offsets[pid] = acc
-        acc += sizes.get(pid, 0)
-    return parted, offsets, acc
+    return pinned, parts
 
 
-def _with_appended_field(schema, name, dtype):
-    from pyspark.sql import types as T
+def exclusive_prefix(parts, field: str, op, start=None) -> list:
+    """``op`` folded over ``field`` of the partitions before each one:
+    entry ``pid`` is the carry into partition ``pid`` and the extra last
+    entry folds them all. Empty partitions and NULL fields carry
+    through unchanged; with ``start=None`` the carry stays None until
+    the first value."""
+    acc, out = start, []
+    for p in parts:
+        out.append(acc)
+        v = None if p is None else p[field]
+        if v is not None:
+            acc = v if acc is None else op(acc, v)
+    return out + [acc]
 
-    # StructType.add MUTATES the receiver (it would corrupt the
-    # DataFrame's cached schema object) — build a fresh StructType
-    return T.StructType(
-        list(schema.fields) + [T.StructField(name, dtype, False)]
-    )
+
+def by_pid(values: list, pid: Column) -> Column:
+    """The entry of ``values`` for each row's partition id ``pid``."""
+    return F.element_at(F.array(*[F.lit(v) for v in values]), pid + 1)
 
 
-def _jvm_rank(parted: DataFrame, offsets: dict[int, int], out: str):
+def _jvm_rank(pinned: DataFrame, offsets: list[int], out: str):
     """Rank over a PINNED sorted range layout, entirely JVM-side:
     ``monotonically_increasing_id`` encodes (partition id << 33) |
     in-partition row number over the checkpointed partitions, so the
-    global rank is offsets[pid] + low bits — no Python crossing.
-    The nondeterministic id is materialized once in its own
+    global rank is offsets[pid] + low bits — no Python crossing of the
+    dataset (a mapInPandas enumerator ships every row through a Python
+    worker). The nondeterministic id is materialized once in its own
     projection (multiple references are multiple stateful instances;
-    see global_ntile's note).
-
-    The bit split caps a single partition at 2^33 rows: past that the
-    per-partition counter bleeds into the pid bits and ranks corrupt
-    SILENTLY. ``_range_enumerated`` enforces the cap loudly for both
-    strategies (it holds the true per-partition sizes)."""
-    num_partitions = max(offsets) + 1 if offsets else 1
-    off_arr = F.array(
-        *[F.lit(offsets.get(p, 0)) for p in range(num_partitions)]
-    )
-    staged = parted.withColumn("__mid", F.monotonically_increasing_id())
+    see global_ntile's note). ``ordered_scan`` enforces the 2^33-row
+    partition cap of the bit split."""
+    staged = pinned.withColumn("__mid", F.monotonically_increasing_id())
     pid = F.shiftrightunsigned(F.col("__mid"), 33).cast("int")
     local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
     return staged.withColumn(
-        out, (F.element_at(off_arr, pid + 1) + local).cast("long")
+        out, (by_pid(offsets, pid) + local).cast("long")
     ).drop("__mid")
 
 
@@ -104,46 +114,14 @@ def dense_ids(
     df: DataFrame,
     order_col: str | list[str],
     out: str = "row_id",
-    num_partitions: int = 32,
-    strategy: str = "jvm",
 ) -> DataFrame:
     """Assign contiguous ids 0..n-1 in ``order_col`` order (which must
-    be unique; pass a list for a composite total order). Two jobs: one
-    to size the range partitions, one for the enumerated result.
-
-    ``strategy="jvm"`` (the default) derives the id from
-    monotonically_increasing_id over the pinned layout (pure Column
-    arithmetic, no Arrow round-trip of the dataset — the scale path:
-    a mapInPandas enumerator ships every row through a Python worker,
-    ~30% at sf0.1 and a full corpus transfer at 100 TB; same trick as
-    global_ntile); ``"pandas"`` keeps the original mapInPandas
-    enumerator (results are identical — pinned by
-    tests/test_scale_windows.py — only the physical plan differs)."""
+    be unique; pass a list for a composite total order). Two jobs: the
+    :func:`ordered_scan` summary that sizes the range partitions, and
+    the enumerated result (pure Column arithmetic, see ``_jvm_rank``)."""
     cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    parted, offsets, _ = _range_enumerated(df, cols, num_partitions)
-
-    if strategy == "jvm":
-        return _jvm_rank(parted, offsets, out)
-    if strategy != "pandas":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    from pyspark.sql import types as T
-
-    schema_out = _with_appended_field(parted.schema, out, T.LongType())
-
-    def enumerate_part(iterator):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        base = offsets.get(pid, 0)
-        seen = 0
-        for pdf in iterator:
-            pdf = pdf.copy()
-            pdf[out] = range(base + seen, base + seen + len(pdf))
-            seen += len(pdf)
-            yield pdf
-
-    return parted.mapInPandas(enumerate_part, schema=schema_out)
+    pinned, parts = ordered_scan(df, cols)
+    return _jvm_rank(pinned, exclusive_prefix(parts, "n", add, 0), out)
 
 
 def global_ntile(
@@ -151,7 +129,6 @@ def global_ntile(
     order_cols: list[str],
     n_buckets: int,
     out: str = "bucket",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """``NTILE(k) OVER (ORDER BY ...)`` without the single-partition
     global window — the distributed exact equi-depth bucketer.
@@ -166,15 +143,11 @@ def global_ntile(
         bucket = r div (q+1) + 1                      if r < rem·(q+1)
         bucket = rem + (r − rem·(q+1)) div q + 1      otherwise
 
-    The rank comes from the pinned range layout entirely JVM-side:
-    ``monotonically_increasing_id`` over the checkpointed sorted
-    partitions encodes (partition id << 33) | in-partition row
-    number, so r = driver-side offset[pid] + low bits — no Python
-    crossing of the dataset (the Arrow round-trip of a mapInPandas
-    enumerator costs ~30% at sf0.1 and a full worker transfer of
-    every row at scale). The nondeterministic id is materialized
-    ONCE in its own projection: each reference is a separate
-    stateful instance, and a reference inside a when/otherwise
+    The rank comes from the pinned range layout entirely JVM-side
+    (``_jvm_rank``: r = driver-side offset[pid] + the low bits of
+    ``monotonically_increasing_id``). The nondeterministic id is
+    materialized ONCE in its own projection: each reference is a
+    separate stateful instance, and a reference inside a when/otherwise
     branch would silently desync its per-row counter on
     short-circuited rows (observed, and pinned by the randomized
     equivalence test in tests/test_scale_windows.py).
@@ -189,14 +162,14 @@ def global_ntile(
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    parted, offsets, n_total = _range_enumerated(
-        df, list(order_cols), num_partitions
-    )
-    q, rem = divmod(n_total, n_buckets) if n_total else (0, 0)
+    pinned, parts = ordered_scan(df, list(order_cols))
+    offsets = exclusive_prefix(parts, "n", add, 0)
+    n_total = offsets[-1]
+    q, rem = divmod(n_total, n_buckets)
     pivot = rem * (q + 1)  # first rank served by a size-q bucket
     qq = max(q, 1)
 
-    staged = _jvm_rank(parted, offsets, "__r")
+    staged = _jvm_rank(pinned, offsets, "__r")
     # SQL `div` is true int64 division — the (x − x%d)/d float form
     # is only exact below 2^53, and this module's contract is exact
     # ranks at any size
@@ -213,49 +186,27 @@ def global_cumsum(
     order_cols: list[str],
     value_col: str,
     out: str = "cumsum",
-    num_partitions: int = 32,
     inclusive: bool = True,
 ) -> DataFrame:
     """``SUM(value) OVER (ORDER BY ...)`` without the single-partition
-    global window — the distributed exact prefix sum, same two-phase
-    recipe as :func:`dense_ids`/:func:`global_ntile`:
-
-    1. range-partition on ``order_cols`` (a total order — unique
-       composite), sort within partitions, PIN the layout;
-    2. per-partition value totals → driver-side exclusive offsets
-       (#partitions scalars — control plane);
-    3. a window partitioned by the MATERIALIZED partition id (never
-       an empty partition spec — each window partition is one range
-       partition, bounded by the layout) gives the within-partition
-       prefix; offset + prefix is the global cumulative sum.
+    global window — the distributed exact prefix sum over
+    :func:`ordered_scan` (``order_cols`` a total order — unique
+    composite): per-partition value totals become driver-side
+    exclusive offsets, and a window partitioned by the MATERIALIZED
+    partition id (never an empty partition spec — each window
+    partition is one range partition, bounded by the layout) gives the
+    within-partition prefix; offset + prefix is the global cumulative
+    sum.
 
     ``inclusive=False`` returns the exclusive prefix (sum of strictly
     earlier rows). ``value_col`` must be integral for an exact
     result (the contract of this module); the per-partition window
     sum is long arithmetic.
     """
-    parted = df.repartitionByRange(
-        num_partitions, *[F.col(c) for c in order_cols]
-    ).sortWithinPartitions(*order_cols)
-    parted = parted.localCheckpoint(eager=True).withColumn(
-        "__pid", F.spark_partition_id()
+    pinned, parts = ordered_scan(
+        df, order_cols, F.sum(value_col).cast("long").alias("s")
     )
-    per_part = (
-        parted.groupBy("__pid")
-        .agg(F.sum(value_col).cast("long").alias("s"))
-        .collect()
-    )  # control plane: #partitions scalar rows
-    sums = {r["__pid"]: r["s"] or 0 for r in per_part}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in range(num_partitions):
-        offsets[pid] = acc
-        acc += sums.get(pid, 0)
-    off_arr = F.array(
-        *[F.lit(offsets.get(p, 0)) for p in range(num_partitions)]
-    )
-    from pyspark.sql import Window
-
+    offsets = exclusive_prefix(parts, "s", add, 0)
     frame = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)
@@ -264,7 +215,10 @@ def global_cumsum(
     local = F.coalesce(
         F.sum(F.col(value_col)).over(frame).cast("long"), F.lit(0)
     )
-    return parted.withColumn(
-        out,
-        (F.element_at(off_arr, F.col("__pid") + 1) + local).cast("long"),
-    ).drop("__pid")
+    return (
+        pinned.withColumn("__pid", F.spark_partition_id())
+        .withColumn(
+            out, (by_pid(offsets, F.col("__pid")) + local).cast("long")
+        )
+        .drop("__pid")
+    )

@@ -463,15 +463,7 @@ def layout_pruning_eval(
 
     if probes is None:
         probes = [(0, 31, 0, 31), (96, 127, 96, 127), (0, 15, 112, 127)]
-    # ranks are partitioning-independent (global key order), so the
-    # enumeration width is a pure throughput knob — 8 range
-    # partitions halve the fixed checkpoint/count cost of the three
-    # per-layout enumerations at diagnostic scales; raise it when
-    # evaluating a full production table
-    ranked = dense_ids(
-        df.select(order_col, x, y), order_col, out="_rid",
-        num_partitions=8,
-    )
+    ranked = dense_ids(df.select(order_col, x, y), order_col, out="_rid")
     n = ranked.count()
     stats = (
         ranked.select(

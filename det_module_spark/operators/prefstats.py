@@ -211,7 +211,6 @@ def spearman_rho(
     df: DataFrame,
     x: str,
     y: str,
-    num_partitions: int = 32,
     n_limit: int = SPEARMAN_N_LIMIT,
 ) -> DataFrame:
     """Spearman rank correlation between two columns — the ranker-
@@ -251,12 +250,7 @@ def spearman_rho(
             F.count(F.lit(1)).cast("long").alias("c")
         )
         pref = global_cumsum(
-            counts,
-            ["v"],
-            "c",
-            out="smaller",
-            num_partitions=num_partitions,
-            inclusive=False,
+            counts, ["v"], "c", out="smaller", inclusive=False
         )
         return pref.select(
             F.col("v").alias(col),

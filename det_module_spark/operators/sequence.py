@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from det_module_spark.operators.ids import by_pid, exclusive_prefix, ordered_scan
+
 
 def _transition_counts(
     events: DataFrame, key: str, state: str, ts: str, tiebreak: str
@@ -65,7 +67,6 @@ def sequence_gaps(
     df: DataFrame,
     id_col: str,
     group: str | None = None,
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Find holes in an integer id sequence: → (group?, gap_start,
     gap_end, gap_len) for every maximal run of missing ids between
@@ -74,99 +75,41 @@ def sequence_gaps(
 
     Gap columns are always BIGINT (ids are cast to long in both
     paths — one output contract regardless of the input id width).
+    Both paths pair each distinct id with its predecessor by a ``lag``
+    window in exact long arithmetic.
 
     Grouped: one per-``group`` lag window (hash-partitioned, scale-
     safe). Ungrouped: a global lag window would collapse onto one
-    partition, so instead the distinct ids are range-partitioned and
-    sorted within partitions, each partition scans its own sorted run
-    for gaps (exact int64 numpy arithmetic — pandas diff/shift would
-    round ids above 2^53 through float64), and the ≤ #partitions−1
-    boundary gaps are closed from the per-partition (min, max) —
-    control-plane scalars — on the driver. The range layout is pinned
-    (localCheckpoint) so the boundary job and the gap job see
-    identical partitions; output is partition-independent because it
-    depends only on the id set.
+    partition, so the distinct ids go through the shared ordered scan
+    (``ids.ordered_scan``: range layout on the id, pinned) and the lag
+    runs per pinned partition. Each partition's first id is seeded
+    with the max id of the nearest earlier non-empty partition (the
+    scan's per-partition max, prefix-maxed on the driver), so gaps
+    that straddle a partition boundary are found in the same pass.
+    The output depends only on the id set, not on the layout.
     """
+    keys = [group] if group else []
+    ids = df.select(*keys, F.col(id_col).cast("long").alias("id")).distinct()
     if group:
-        ids = df.select(
-            group, F.col(id_col).cast("long").alias("id")
-        ).distinct()
-        w = Window.partitionBy(group).orderBy(F.asc("id"))
-        with_prev = ids.withColumn("prev", F.lag("id").over(w))
-        return with_prev.filter(
-            F.col("prev").isNotNull() & (F.col("id") - F.col("prev") > 1)
-        ).select(
-            group,
+        prev = F.lag("id").over(Window.partitionBy(group).orderBy("id"))
+    else:
+        ids, parts = ordered_scan(ids, ["id"], F.max("id").alias("hi"))
+        ids = ids.withColumn("__pid", F.spark_partition_id())
+        seed = by_pid(exclusive_prefix(parts, "hi", max), F.col("__pid"))
+        prev = F.coalesce(
+            F.lag("id").over(Window.partitionBy("__pid").orderBy("id")),
+            seed,
+        )
+    return (
+        ids.withColumn("prev", prev)
+        .filter(F.col("id") - F.col("prev") > 1)
+        .select(
+            *keys,
             (F.col("prev") + 1).alias("gap_start"),
             (F.col("id") - 1).alias("gap_end"),
             (F.col("id") - F.col("prev") - 1).alias("gap_len"),
         )
-
-    ids = (
-        df.select(F.col(id_col).cast("long").alias("id"))
-        .distinct()
-        .repartitionByRange(num_partitions, F.col("id"))
-        .sortWithinPartitions("id")
-        .localCheckpoint(eager=True)
     )
-    spark = df.sparkSession
-    bounds = (
-        ids.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
-        .collect()
-    )
-
-    from pyspark.sql import types as T
-
-    gap_schema = T.StructType(
-        [
-            T.StructField("gap_start", T.LongType(), False),
-            T.StructField("gap_end", T.LongType(), False),
-            T.StructField("gap_len", T.LongType(), False),
-        ]
-    )
-
-    def local_gaps(iterator):
-        import numpy as np
-        import pandas as pd
-
-        prev_tail = None
-        for pdf in iterator:  # sorted within the partition
-            a = pdf["id"].to_numpy(dtype="int64", copy=False)
-            if prev_tail is not None:
-                a = np.concatenate(([prev_tail], a))
-            if len(a) >= 2:
-                # exact int64: never route ids through float64
-                d = a[1:] - a[:-1]
-                hit = d > 1
-                if hit.any():
-                    yield pd.DataFrame(
-                        {
-                            "gap_start": a[:-1][hit] + 1,
-                            "gap_end": a[1:][hit] - 1,
-                            "gap_len": d[hit] - 1,
-                        }
-                    )
-            if len(a):
-                prev_tail = int(a[-1])
-
-    inner = ids.mapInPandas(local_gaps, schema=gap_schema)
-    # boundary gaps between consecutive non-empty partitions
-    edges = sorted(
-        ((r["pid"], r["lo"], r["hi"]) for r in bounds),
-        key=lambda t: t[0],
-    )
-    boundary = []
-    for (_, _, hi_prev), (_, lo_next, _) in zip(edges, edges[1:]):
-        if lo_next - hi_prev > 1:
-            boundary.append(
-                (hi_prev + 1, lo_next - 1, lo_next - hi_prev - 1)
-            )
-    if boundary:
-        inner = inner.unionByName(
-            spark.createDataFrame(boundary, schema=gap_schema)
-        )
-    return inner
 
 
 def transition_matrix_ppm(

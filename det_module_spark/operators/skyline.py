@@ -5,20 +5,22 @@ The textbook SQL form — ``NOT EXISTS (SELECT ... WHERE x' <= x AND
 y' >= y AND (x' < x OR y' > y))`` — is an O(n²) self-join; the
 textbook single-node form is one pass over an x-sorted stream keeping
 the running max of y. The distributed version keeps the one-pass idea
-without a global window (the same two-job recipe as
-``operators/ids.dense_ids``):
+without a global window, over the shared ordered scan
+(``operators/ids.ordered_scan``):
 
 1. range-partition by x and sort within partitions — the standard
    total-order layout; equal x values land in ONE partition (the range
    partitioner assigns by key), so cross-partition state reduces to a
    single scalar per partition;
-2. first job: per-partition max(y) — #partitions rows collected on the
-   driver (control plane) and prefix-maxed, giving each partition the
-   best y among ALL strictly-cheaper partitions;
-3. second job: Arrow-batched pass per partition. A row survives iff
-   its y beats the running max of y over strictly-smaller x (partition
+2. the scan's summary job: per-partition max(y), prefix-maxed on the
+   driver (``ids.exclusive_prefix``), giving each partition the best y
+   among ALL strictly-cheaper partitions;
+3. an Arrow-batched pass per partition. A row survives iff its y
+   beats the running max of y over strictly-smaller x (partition
    prefix ∪ earlier groups in the partition) AND it holds the max y of
    its own x-group (ties on both dims all survive — neither dominates).
+   Within a partition only x order matters: a group's max comes from
+   ``_emit_groups``, not from the row order.
 
 Scale shape: one range exchange + one tiny collect + one map — no
 self-join, no global single-task stage. Caveat shared with dense_ids:
@@ -35,50 +37,24 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from det_module_spark.operators.ids import exclusive_prefix, ordered_scan
 
-def skyline(
-    df: DataFrame,
-    x: str,
-    y: str,
-    num_partitions: int = 32,
-) -> DataFrame:
+
+def skyline(df: DataFrame, x: str, y: str) -> DataFrame:
     """Rows of ``df`` on the Pareto frontier minimizing ``x`` while
     maximizing ``y`` (negate a column to flip its direction). Rows
     with a NULL in either dimension are not comparable and are
     dropped. Duplicate (x, y) points on the frontier all survive."""
     clean = df.filter(F.col(x).isNotNull() & F.col(y).isNotNull())
-    parted = clean.repartitionByRange(
-        num_partitions, F.col(x)
-    ).sortWithinPartitions(F.asc(x), F.desc(y))
-    # pin the range boundaries: the max job and the scan job must see
-    # IDENTICAL partitions (the range partitioner re-samples per
-    # action otherwise) — same move as dense_ids
-    parted = parted.localCheckpoint(eager=True)
-
-    maxes = (
-        parted.select(
-            F.spark_partition_id().alias("pid"), F.col(y).alias("y")
-        )
-        .groupBy("pid")
-        .agg(F.max("y").alias("m"))
-        .collect()
-    )
-    part_max = {r["pid"]: r["m"] for r in maxes}
-    prefix: dict[int, object] = {}
-    best = None
-    for pid in range(num_partitions):
-        prefix[pid] = best
-        m = part_max.get(pid)
-        if m is not None and (best is None or m > best):
-            best = m
-
-    schema = parted.schema
+    pinned, parts = ordered_scan(clean, [x], F.max(y).alias("m"))
+    prefix = exclusive_prefix(parts, "m", max)
 
     def scan(iterator):
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        run_max = prefix.get(pid)  # best y among strictly smaller x
+        # best y among strictly smaller x (all earlier partitions;
+        # the last carry is that of every empty partition after them)
+        run_max = prefix[min(TaskContext.get().partitionId(), len(prefix) - 1)]
         pending = None  # buffered rows of the (possibly open) x-group
         for pdf in iterator:
             if pending is not None:
@@ -97,7 +73,7 @@ def skyline(
         if pending is not None and len(pending):
             yield _emit_groups(pending, x, y, run_max)
 
-    return parted.mapInPandas(scan, schema=schema)
+    return pinned.mapInPandas(scan, schema=pinned.schema)
 
 
 def _emit_groups(pdf: pd.DataFrame, x: str, y: str, run_max) -> pd.DataFrame:

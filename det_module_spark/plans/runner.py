@@ -172,23 +172,23 @@ class Engine:
         try:
             if missing:
                 self.cache.put_many(self._results(missing))
+            merge_items = [
+                MergeItem(self.cache.table(i.spec_hash), i.dataset, i.temporal, i.extract_type)
+                for i in items
+                if i.kind == "extract"
+            ]
+            merged = None
+            if merge_items:
+                # every artifact is written from Arrow (its footer's Spark
+                # schema is derived from its Arrow schema), so the merged
+                # table's Arrow types are the Spark types
+                merged = self.spark.createDataFrame(merge_extracts(merge_items))
         except Exception as e:  # noqa: BLE001 - E4 error state
             # reference parity: failed requests land in status −2 with
             # nothing partially merged (processing.py:144-216)
             self.notify("error", {"request_id": request.get("_id"), "error": str(e)})
             return RunResult(STATUS_ERROR, items, missing, error=str(e))
 
-        merge_items = [
-            MergeItem(self.cache.table(i.spec_hash), i.dataset, i.temporal, i.extract_type)
-            for i in items
-            if i.kind == "extract"
-        ]
-        merged = None
-        if merge_items:
-            # every artifact is written from Arrow (its footer's Spark
-            # schema is derived from its Arrow schema), so the merged
-            # table's Arrow types are the Spark types
-            merged = self.spark.createDataFrame(merge_extracts(merge_items))
         self.notify(
             "complete",
             {

@@ -51,19 +51,18 @@ def test_pack_sequences_null_text_grouped(spark):
     assert rows[1]["n_tokens"] == 3
 
 
-def test_pack_sequences_null_text_ungrouped_no_crash(spark):
+def test_pack_sequences_null_text_ungrouped_no_crash(spark, partitions):
     from det_module_spark.operators.chunking import pack_sequences
 
     df = spark.createDataFrame(
         [(1, "a b c"), (2, None), (3, "d e"), (4, None), (5, "f")],
         "doc_id long, text string",
     )
-    rows = {
-        r["doc_id"]: r
-        for r in pack_sequences(
-            df, budget=4, part_col=None, num_partitions=3
-        ).collect()
-    }
+    with partitions(3):
+        rows = {
+            r["doc_id"]: r
+            for r in pack_sequences(df, budget=4, part_col=None).collect()
+        }
     assert rows[2]["n_tokens"] == 0 and rows[4]["n_tokens"] == 0
     # stream positions identical to the branch with the nulls dropped
     # to zero-width entries: 3 + 0 + 2 + 0 + 1
@@ -72,7 +71,7 @@ def test_pack_sequences_null_text_ungrouped_no_crash(spark):
     ]
 
 
-def test_pack_sequences_branches_agree_with_nulls(spark):
+def test_pack_sequences_branches_agree_with_nulls(spark, partitions):
     """The docstring's 'identical output' claim between the grouped
     and ungrouped branches, on null-bearing input (the ADVICE
     counterexample)."""
@@ -87,12 +86,11 @@ def test_pack_sequences_branches_agree_with_nulls(spark):
             df.withColumn("g", F.lit("x")), budget=8, part_col="g"
         ).collect()
     }
-    ungrouped = {
-        r["doc_id"]: (r["n_tokens"], r["cum_before"], r["bin_start"])
-        for r in pack_sequences(
-            df, budget=8, part_col=None, num_partitions=5
-        ).collect()
-    }
+    with partitions(5):
+        ungrouped = {
+            r["doc_id"]: (r["n_tokens"], r["cum_before"], r["bin_start"])
+            for r in pack_sequences(df, budget=8, part_col=None).collect()
+        }
     assert grouped == ungrouped
 
 

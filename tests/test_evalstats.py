@@ -25,9 +25,12 @@ pytestmark = pytest.mark.usefixtures("spark")
 
 
 def _compare(sdf, odf):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
     from check_parity import canon, dtype_kinds
 
     assert len(sdf) == len(odf)

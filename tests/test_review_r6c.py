@@ -76,17 +76,16 @@ def test_profile_diff_added_column_flags_change(spark):
     assert got["id"]["min_changed"] is False
 
 
-def test_pack_sequences_ungrouped_is_distributed_and_exact(spark):
+def test_pack_sequences_ungrouped_is_distributed_and_exact(spark, partitions):
     from det_module_spark.operators.chunking import pack_sequences
 
     rows = [(i, " ".join(["w"] * (3 + i % 5))) for i in range(1, 41)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r
-        for r in pack_sequences(
-            df, budget=8, part_col=None, num_partitions=7
-        ).collect()
-    }
+    with partitions(7):
+        got = {
+            r["doc_id"]: r
+            for r in pack_sequences(df, budget=8, part_col=None).collect()
+        }
     # reference single-stream packing in plain python
     cum = 0
     for i in range(1, 41):
@@ -98,12 +97,15 @@ def test_pack_sequences_ungrouped_is_distributed_and_exact(spark):
         assert r["bin_end"] == (cum + n - 1) // 8
         assert r["bin_offset"] == cum % 8
         cum += n
-    # and no empty-partition-spec window in the plan
-    plan = (
-        pack_sequences(df, budget=8, part_col=None, num_partitions=7)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Window" not in plan
+    # and no empty-partition-spec window in the plan: its one window is
+    # global_cumsum's, partitioned by the pinned range partition id
+    with partitions(7):
+        plan = (
+            pack_sequences(df, budget=8, part_col=None)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+    assert "SinglePartition" not in plan
+    assert plan.count("Window [") == plan.count("windowspecdefinition(__pid") == 1
 
 
 def test_dsir_weights_zero_token_docs_keep_a_row(spark):

@@ -73,29 +73,23 @@ def test_skyline_nulls_dropped(spark):
     assert got == [3]
 
 
-def test_skyline_matches_brute_force_across_partitions(spark):
+def test_skyline_matches_brute_force_across_partitions(spark, partitions):
     # enough rows that repartitionByRange(32) actually splits; values
     # chosen so the frontier crosses several partitions
     rows = [
         (i, float((i * 37) % 101), int((i * 53) % 89)) for i in range(400)
     ]
-    got = sorted(
-        r.id
-        for r in skyline(
-            _pts(spark, rows), "x", "y", num_partitions=8
-        ).collect()
-    )
+    with partitions(8):
+        got = sorted(r.id for r in skyline(_pts(spark, rows), "x", "y").collect())
     assert got == _brute_skyline(rows)
 
 
-def test_skyline_monotone_staircase_all_survive(spark):
+def test_skyline_monotone_staircase_all_survive(spark, partitions):
     # y rises with x: pricier points are always bigger, so no point
     # dominates another and the whole staircase is the frontier
     rows = [(i, float(i), i) for i in range(50)]
-    got = sorted(
-        r.id
-        for r in skyline(_pts(spark, rows), "x", "y", num_partitions=4).collect()
-    )
+    with partitions(4):
+        got = sorted(r.id for r in skyline(_pts(spark, rows), "x", "y").collect())
     assert got == list(range(50))
 
 

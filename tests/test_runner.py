@@ -391,3 +391,36 @@ def test_cold_request_runs_one_aggregation_per_file(spark, tmp_path):
         assert sorted(got.to_pylist(), key=lambda r: r["asdf_id"]) == sorted(
             want.to_pylist(), key=lambda r: r["asdf_id"]
         )
+
+
+def test_merge_failure_ends_in_error_status(spark, tmp_path):
+    """A merge that fails ends the request in status −2 with the error
+    notification, like a failed extract. ``sum`` and ``reliability`` on
+    one file both name a merged column ``<ds>.<temporal>.sum``, which
+    the merge rejects as a duplicate field."""
+    cells = spark.createDataFrame(
+        [Row(asdf_id=i % 3, value=float(i), coverage=0.5) for i in range(6)]
+    )
+    events = []
+    eng = Engine(
+        spark,
+        str(tmp_path / "cache"),
+        cell_source=lambda item: cells,
+        notify=lambda event, payload: events.append((event, payload)),
+    )
+    req = {
+        "_id": "mergefail01",
+        "boundary": {"name": "b"},
+        "raster_data": [
+            {
+                "name": "cov",
+                "options": {"extract_types": ["sum", "reliability"]},
+                "files": [{"name": "cov_1998", "path": "/x"}],
+            }
+        ],
+    }
+    r = eng.run_request(req)
+    assert r.status == -2 and r.merged is None
+    assert "cov.1998.sum" in r.error
+    assert [e for e, _ in events] == ["received", "error"]
+    assert events[1][1]["error"] == r.error

@@ -331,21 +331,11 @@ COLLECT_WHITELIST = {
         "top-k heavy-hitter candidates: k rows",
     ),
     "det_module_spark/operators/ids.py": (
-        2,
-        "per-partition counts for dense-id / global-ntile offsets "
-        "(shared _range_enumerated helper) and per-partition value "
-        "totals for global_cumsum offsets: #partitions rows each",
-    ),
-    "det_module_spark/operators/sequence.py": (
         1,
-        "sequence_gaps boundary handoff: per-partition (min, max) ids, "
-        "#partitions rows",
-    ),
-    "det_module_spark/operators/chunking.py": (
-        1,
-        "pack_sequences ungrouped path: per-partition token totals "
-        "prefix-summed into bin offsets, #partitions rows (same "
-        "two-phase recipe as ids._range_enumerated)",
+        "ordered_scan's per-partition summary (row count plus the "
+        "caller's aggregates), the one collect behind dense_ids, "
+        "global_ntile, global_cumsum, pack_sequences, skyline and "
+        "sequence_gaps: #partitions rows",
     ),
     "det_module_spark/sources/vector.py": (
         1,
@@ -356,10 +346,6 @@ COLLECT_WHITELIST = {
     "det_module_spark/operators/similarity.py": (
         2,
         "IVF/PQ codebook fit samples: orderBy().limit(sample) bounded + deterministic",
-    ),
-    "det_module_spark/operators/skyline.py": (
-        1,
-        "per-partition max(y) for prefix maxes: #partitions rows",
     ),
     "det_module_spark/operators/text.py": (
         3,

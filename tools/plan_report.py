@@ -46,7 +46,6 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "PLAN_REPORT.json",
     )
-    sys.path.insert(0, "/root/repo")
     from tests.test_scale_audit import PLAN_OPAQUE  # single source of truth
 
     spark = get_spark("plan-report")

@@ -14,11 +14,12 @@ action) for apples-to-apples comparison with BENCH_FULL.json numbers.
 from __future__ import annotations
 
 import argparse
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
