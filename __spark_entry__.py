@@ -1852,8 +1852,7 @@ def _leakage_split_sql(threshold: float = 0.12, max_df: int = 1000) -> str:
 
 def q_kv_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delimited key=value record expansion (semistructured.kv_records)
-    # — the log-parsing primitive, codegen fast path (the equivalent
-    # Python UDTF surface is pytest-verified identical)
+    # — the log-parsing primitive, pure Column expressions
     from det_module_spark.operators.semistructured import kv_records
 
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -6708,11 +6707,10 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# R9 registration queue — implemented and pytest-verified in r8, NOT
-# yet in queries()/oracle_sql() (the r8 window closes the driver
-# drain; these two enter at the r9 rotation head per the standing
-# discipline). tests/test_r9_queue.py runs the exact driver
-# comparison for both today.
+# Preference, agreement and eval-statistics queries. Each was checked
+# against its DuckDB twin in tests/test_r9_queue.py, test_r10_queue.py,
+# test_r11_queue.py or test_evalrank.py before it entered
+# queries()/oracle_sql().
 # --------------------------------------------------------------------
 
 
@@ -7092,7 +7090,7 @@ def _weighted_consensus_sql() -> str:
 
 
 def q_supplier_rank_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R10 QUEUE (UNREGISTERED): Kendall tau-b between two supplier
+    # Kendall tau-b between two supplier
     # rankings — financial standing (account balance) vs sales volume
     # (total lineitem revenue). The bounded-leaderboard rank
     # correlation (operators/prefstats.kendall_tau: all-pairs with a
@@ -7134,7 +7132,7 @@ def _supplier_rank_tau_sql() -> str:
 
 
 def q_preference_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R10 QUEUE (UNREGISTERED): transitivity audit of the supplier
+    # transitivity audit of the supplier
     # preference log (operators/prefstats.preference_cycles) — the
     # share of circular triads among decisive head-to-head triples,
     # the consistency check that justifies (or indicts) the scalar
@@ -7198,12 +7196,11 @@ def _elo_calibration_sql() -> str:
 
 
 def q_pairwise_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R11 QUEUE (UNREGISTERED): comparison-matrix completeness audit
+    # comparison-matrix completeness audit
     # (prefstats.pairwise_coverage) over the supplier games — how
     # much of the C(n,2) head-to-head matrix the log actually
     # sampled, and how much of it with >= 5 games. Gated by
-    # tests/test_r11_queue.py with the driver's own comparison;
-    # registration = two dict lines at the r11 head.
+    # tests/test_r11_queue.py against its DuckDB twin.
     from det_module_spark.operators.prefstats import pairwise_coverage
 
     return pairwise_coverage(_supplier_comps(spark, sf_dir), min_games=5)
@@ -7216,7 +7213,7 @@ def _pairwise_coverage_sql() -> str:
 
 
 def q_player_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R11 QUEUE (UNREGISTERED): per-player upset profile
+    # per-player upset profile
     # (prefstats.player_consistency) — the share of each supplier's
     # decisive head-to-heads that contradict the Copeland ordering,
     # the per-player drill-down of preference_cycles' global number.
@@ -7418,7 +7415,7 @@ def _rater_reliability_sql() -> str:
 
 
 def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R11 QUEUE (UNREGISTERED): Fleiss' multi-rater kappa
+    # Fleiss' multi-rater kappa
     # (agreement.fleiss_kappa) over the SAME shared _abstaining_votes
     # derivation krippendorff_alpha and weighted_consensus read — the
     # third agreement lens (per-item pairwise agreement vs squared
@@ -7473,7 +7470,7 @@ _EVAL_ATTEMPTS_SQL = f"""
 
 
 def q_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R11 QUEUE (UNREGISTERED): unbiased pass@k estimator
+    # unbiased pass@k estimator
     # (evalstats.pass_at_k, the Chen et al. 2021 HumanEval
     # estimator) at k in {1,2,4,8} over the sample-level eval log —
     # exact stepwise-integer binomial ratios, one corpus pass.
@@ -7490,7 +7487,7 @@ def _pass_at_k_sql() -> str:
 
 
 def q_mcnemar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R11 QUEUE (UNREGISTERED): McNemar's paired test
+    # McNemar's paired test
     # (evalstats.mcnemar_pairs) over every supplier-model pair on
     # their COMMON tasks — the discordant-cell significance check
     # behind "is A actually better than B?". Bounded to suppliers
@@ -7512,7 +7509,7 @@ def _mcnemar_pairs_sql() -> str:
 
 
 def q_item_discrimination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R11 QUEUE (UNREGISTERED): classical-test-theory item analysis
+    # classical-test-theory item analysis
     # (evalstats.item_discrimination) — per-task difficulty +
     # point-biserial discrimination against model ability, the
     # eval-curation "drop the noise items" primitive. Bounded to
@@ -7543,7 +7540,7 @@ _AUC_SCORED_SQL = """
 
 
 def q_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R11 QUEUE (UNREGISTERED): exact rank-sum ROC-AUC
+    # exact rank-sum ROC-AUC
     # (evalstats.auc_roc) of "price predicts returned" over lineitem
     # — score = integer cents, label = returnflag R. Mann-Whitney
     # identity over the distinct-score count table + the
@@ -7566,7 +7563,7 @@ def _auc_roc_sql() -> str:
 
 
 def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # R11 QUEUE (UNREGISTERED): two-sample Kolmogorov-Smirnov drift
+    # two-sample Kolmogorov-Smirnov drift
     # statistic (evalstats.ks_test) — returned vs kept lineitem price
     # distributions, exact integer D over the common n_a*n_b
     # denominator. Gated by tests/test_evalrank.py.
@@ -7607,23 +7604,23 @@ def entry(spark: SparkSession) -> DataFrame:
 #      sorted by their latest round in CORRECTNESS_r*.json, then by
 #      name (names with no record sort first).
 # The registry keeps its own order after the window.
-# the request engine (plans/runner.py: the merge now fails inside the
-# request's error handling) and every registered user of the shared
-# ordered scan (operators/ids.ordered_scan: dense_ids, global_ntile,
-# global_cumsum, pack_sequences, skyline, sequence_gaps), whose range
-# layout is now sized by AQE instead of a fixed partition count
+# every registered caller of range_join (ranges always broadcast), of
+# kv_records (Column path only) and of polygon_coverage (edges always
+# broadcast), and the eight newly registered eval-statistics and
+# agreement queries
 _CHANGED_PATHS = [
-    "request_lifecycle",
-    "dense_ids",
-    "lorenz_deciles",
-    "snb_pairs",
-    "layout_pruning",
-    "equidepth_hist",
-    "woe_bins",
-    "rank_agreement",
-    "sequence_gaps",
-    "skyline_frontier",
-    "pack_sequences",
+    "range_join",
+    "kv_records",
+    "zonal_weighted_polygon",
+    "zonal_weighted_triangle",
+    "pairwise_coverage",
+    "player_consistency",
+    "fleiss_kappa",
+    "pass_at_k",
+    "mcnemar_pairs",
+    "item_discrimination",
+    "auc_roc",
+    "ks_test",
 ]
 _WINDOW = 50
 
@@ -7779,6 +7776,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "copeland_ranking": q_copeland_ranking,
         "cycles_by_gap": q_cycles_by_gap,
         "elo_calibration": q_elo_calibration,
+        # --- eval-statistics and agreement queries, each checked
+        #     against its DuckDB twin in tests/test_r11_queue.py or
+        #     tests/test_evalrank.py before registration ---
+        "pairwise_coverage": q_pairwise_coverage,
+        "player_consistency": q_player_consistency,
+        "fleiss_kappa": q_fleiss_kappa,
+        "pass_at_k": q_pass_at_k,
+        "mcnemar_pairs": q_mcnemar_pairs,
+        "item_discrimination": q_item_discrimination,
+        "auc_roc": q_auc_roc,
+        "ks_test": q_ks_test,
         # --- round-4 additions ---
         "join_delta_retract": q_join_delta_retract,
         "events_running_totals": q_events_running_totals,
@@ -13848,6 +13856,14 @@ QUALIFY ROW_NUMBER() OVER (
     out["copeland_ranking"] = _copeland_ranking_sql()
     out["cycles_by_gap"] = _cycles_by_gap_sql()
     out["elo_calibration"] = _elo_calibration_sql()
+    out["pairwise_coverage"] = _pairwise_coverage_sql()
+    out["player_consistency"] = _player_consistency_sql()
+    out["fleiss_kappa"] = _fleiss_kappa_sql()
+    out["pass_at_k"] = _pass_at_k_sql()
+    out["mcnemar_pairs"] = _mcnemar_pairs_sql()
+    out["item_discrimination"] = _item_discrimination_sql()
+    out["auc_roc"] = _auc_roc_sql()
+    out["ks_test"] = _ks_test_sql()
     try:
         out["approx_stats"] = _approx_stats_sql()
     except ValueError:

@@ -608,8 +608,9 @@ def fleiss_kappa(
     Scale shape: ONE corpus-touching aggregation — the (item, label)
     count table, localCheckpoint'ed so the per-item, global, and
     per-category aggregates all read the compact count table (the
-    krippendorff_alpha materialization pattern, d3177e0). Work ∝
-    items + distinct labels; no window, no collect, no float.
+    krippendorff_alpha materialization pattern, d3177e0). The 1-row
+    totals enter as scalar subqueries, not joins. Work ∝ items +
+    distinct labels; no window, no collect, no float.
     """
     v = votes.filter(F.col(label).isNotNull()).select(
         F.col(item).alias("item"),
@@ -665,7 +666,7 @@ def fleiss_kappa(
             .cast("long")
             .alias("pic_sum_ppm")
         )
-        .crossJoin(totals.select("n_pairable"))
+        .withColumn("n_pairable", totals.select("n_pairable").scalar())
         .agg(
             F.sum(
                 F.expr(
@@ -677,8 +678,8 @@ def fleiss_kappa(
         .select(F.expr(f"pe_num div {PPM}L").alias("pe_ppm"))
     )
     return (
-        totals.crossJoin(pe)
-        .crossJoin(all_units)
+        totals.withColumn("pe_ppm", pe.scalar())
+        .withColumn("n_units", all_units.scalar())
         .select(
             "n_units",
             "n_pairable",

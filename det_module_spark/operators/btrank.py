@@ -72,31 +72,6 @@ def _overflow_guard(col: str, what: str, limit: int):
     ).otherwise(F.col(col))
 
 
-def bt_pair_stats(
-    comparisons: DataFrame, winner: str = "winner", loser: str = "loser"
-) -> tuple[DataFrame, DataFrame]:
-    """(games, wins) from a raw comparison log: ``games`` is one row
-    per unordered pair (lo < hi, n = total games), ``wins`` one row
-    per player (player, w). NULL participants are dropped (a
-    comparison without both sides is not a game)."""
-    c = comparisons.filter(
-        F.col(winner).isNotNull() & F.col(loser).isNotNull()
-    )
-    games = (
-        c.select(
-            F.least(F.col(winner), F.col(loser)).alias("lo"),
-            F.greatest(F.col(winner), F.col(loser)).alias("hi"),
-        )
-        .groupBy("lo", "hi")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    wins = (
-        c.groupBy(F.col(winner).alias("player"))
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    return games, wins
-
-
 def bt_strengths(
     comparisons: DataFrame,
     winner: str = "winner",

@@ -527,90 +527,6 @@ def simhash(
     return per_doc.select(id_col, packed.cast("long").alias("simhash"))
 
 
-def simhash_pairs(
-    hashes: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup candidates: hamming(simhash_a, simhash_b) ≤ h via
-    xor + bit_count. All-pairs (exact) — the verifier; use
-    ``simhash_banded_pairs`` at scale."""
-    a = hashes.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
-    b = hashes.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_banded_pairs(
-    hashes: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bits: int = 16,
-) -> DataFrame:
-    """Scale path for simhash pairing: split the hash into
-    ``max_hamming + 1`` bit-slices. A pair within ``max_hamming`` bits
-    must agree exactly on ≥1 slice (pigeonhole), so candidates come
-    from equi-joins on (slice index, slice value) — no all-pairs
-    product — and the exact hamming filter then runs on candidates
-    only. LOSSLESS vs the all-pairs verifier (proved in tests), unlike
-    probabilistic LSH.
-
-    Slices come from exploding one array of (slice, slice_val) structs
-    (single pass — a union of per-slice selects would re-evaluate the
-    upstream simhash aggregation once per slice per join side), and
-    the sliced table is checkpointed before the self-join."""
-    n_slices = max_hamming + 1
-    width = (bits + n_slices - 1) // n_slices
-    mask = (1 << width) - 1
-    slice_structs = [
-        F.struct(
-            F.lit(s).alias("slice"),
-            F.shiftright(F.col("simhash"), s * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("slice_val"),
-        )
-        for s in range(n_slices)
-    ]
-    sliced = hashes.select(
-        F.col(id_col).alias("id"),
-        F.col("simhash").alias("sh"),
-        F.explode(F.array(*slice_structs)).alias("sv"),
-    ).select(
-        "id",
-        "sh",
-        F.col("sv.slice").alias("slice"),
-        F.col("sv.slice_val").alias("slice_val"),
-    )
-    sliced = sliced.localCheckpoint(eager=True)
-    a, b = sliced.alias("a"), sliced.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.slice") == F.col("b.slice"))
-            & (F.col("a.slice_val") == F.col("b.slice_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 def containment_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -90,15 +90,14 @@ def pass_at_k(
 
     Scale shape: ONE corpus-touching aggregation — the per-task
     (n, c) table, localCheckpoint'ed so the |ks| per-k aggregates
-    read the compact task table, then a broadcast-sized ks frame
-    cross-multiplied (|tasks|×|ks| rows, one hash agg). Work ∝
-    tasks·|ks|; no window, no collect, no float.
+    read the compact task table, then each task row exploded over
+    the ks literals (|tasks|×|ks| rows, one hash agg). Work ∝
+    tasks·|ks|; no join, no window, no collect, no float.
     """
     ks = tuple(sorted(set(int(k) for k in ks)))
     if not ks or ks[0] < 1:
         raise ValueError("ks must be positive ints")
     max_k = ks[-1]
-    spark = attempts.sparkSession
     tc = (
         attempts.groupBy(F.col(task).alias("task"))
         .agg(
@@ -127,10 +126,10 @@ def pass_at_k(
         )
         .localCheckpoint(eager=True)
     )
-    kdf = spark.createDataFrame([(k,) for k in ks], "k long")
     fail = _passk_expr("n", "c", "k", max_k, "div")
+    k_lits = F.array(*[F.lit(k).cast("long") for k in ks])
     return (
-        tc.crossJoin(F.broadcast(kdf))
+        tc.select("*", F.explode(k_lits).alias("k"))
         .groupBy("k")
         .agg(
             F.sum(F.expr("CASE WHEN n >= k THEN 1 ELSE 0 END"))
@@ -452,8 +451,8 @@ def auc_roc(
     table, localCheckpoint'ed), then :func:`~det_module_spark.
     operators.ids.global_cumsum` for the negatives-below prefix (the
     two-phase range-partition recipe — no empty-partition-spec
-    window, no sort of the corpus, work ∝ distinct scores) and a
-    1-row total. No float anywhere.
+    window, no sort of the corpus, work ∝ distinct scores) and the
+    1-row totals, joined as a scalar subquery. No float anywhere.
     """
     from det_module_spark.operators.ids import global_cumsum
 
@@ -479,7 +478,7 @@ def auc_roc(
         F.sum("pos").cast("long").alias("n_pos"),
         F.sum("neg").cast("long").alias("n_neg"),
     )
-    return tot.crossJoin(u2).select(
+    return tot.withColumn("u2", u2.scalar()).select(
         "n_pos",
         "n_neg",
         F.coalesce(F.col("u2"), F.lit(0)).cast("long").alias("u2"),
@@ -552,7 +551,8 @@ def ks_test(
     Scale shape: ONE corpus aggregation (per-distinct-value counts of
     both samples, localCheckpoint'ed), two two-phase prefix sums over
     the compact count table (:func:`global_cumsum` — no global
-    window, no corpus sort), one max. No float anywhere.
+    window, no corpus sort), one max with the sample sizes read as
+    scalar subqueries. No float anywhere.
     """
     from det_module_spark.operators.ids import global_cumsum
 
@@ -575,15 +575,15 @@ def ks_test(
         F.sum("ca").cast("long").alias("n_a"),
         F.sum("cb").cast("long").alias("n_b"),
     )
-    d = cum.crossJoin(F.broadcast(tot)).agg(
+    d = cum.agg(
         F.max(
             F.abs(
-                F.col("cum_a") * F.col("n_b")
-                - F.col("cum_b") * F.col("n_a")
+                F.col("cum_a") * tot.select("n_b").scalar()
+                - F.col("cum_b") * tot.select("n_a").scalar()
             )
         ).cast("long").alias("d_raw"),
     )
-    return tot.crossJoin(d).select(
+    return tot.withColumn("d_raw", d.scalar()).select(
         "n_a",
         "n_b",
         F.coalesce(F.col("d_raw"), F.lit(0)).cast("long").alias("d_num"),

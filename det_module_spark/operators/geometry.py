@@ -9,8 +9,7 @@ JVM (no Python, no shapely):
   edge sweep is ``zip_with(ring, rotated_ring)`` + ``filter`` +
   ``size`` — O(vertices) per point, vectorized by codegen. This is
   the exact-refinement step of the bucketed spatial join for real
-  polygons; shapely (spatial.spatial_join_wkt) remains an optional
-  fast path for huge rings.
+  polygons.
 - ``rect_coverage_fraction``: the fraction of a grid cell's area
   covered by an axis-aligned boundary rectangle — the coverage weight
   feeding the ``weighted_*`` extract types (SURVEY.md hard-list (b)).
@@ -300,7 +299,6 @@ def polygon_coverage(
     cell_miny: str = "miny",
     poly_id: str = "asdf_id",
     ring_col: str = "ring",
-    broadcast_polygons: bool = True,
     slab_cells: int = 16,
     bucket_by_slab: bool = True,
 ) -> "DataFrame":
@@ -309,10 +307,9 @@ def polygon_coverage(
     (queue/extract_check.py:29-31).
 
     Plan shape: the polygon table is exploded ONCE into edges, each
-    edge replicated to the x-slabs its span can touch, then
-    EQUI-JOINED to the cell grid on the slab key (broadcast hash join
-    for small boundary tables, shuffled hash/sort-merge when the edge
-    table is itself large — the equi-key makes both possible). Each
+    edge replicated to the x-slabs its span can touch, then broadcast
+    and EQUI-JOINED to the cell grid on the slab key (boundary sets
+    are small dims, one row per edge per slab). Each
     (cell, edge) pair reduces to one closed-form scalar term
     (edge_coverage_integral), then a single hash aggregation sums
     terms per (cell, polygon). The probe side stays in whole-stage
@@ -337,8 +334,6 @@ def polygon_coverage(
     ≈1 for feature-scale polygons while cutting the per-cell candidate
     set to the local neighbourhood. ``bucket_by_slab=False`` restores
     the all-pairs crossJoin (the property-test baseline)."""
-    from pyspark.sql import DataFrame as _DF  # noqa: F401
-
     edges = polygons.select(
         poly_id,
         F.explode(ring_edges(F.col(ring_col))).alias("e"),
@@ -355,16 +350,16 @@ def polygon_coverage(
         w = F.lit(float(slab_cells) * cell_size)
         xlo = F.least(F.col("xa"), F.col("xb"))
         xhi = F.greatest(F.col("xa"), F.col("xb"))
-        edges = edges.withColumn(
-            "__cov_slab",
-            F.explode(
-                F.sequence(
-                    F.floor((xlo - s) / w) - 1, F.floor(xhi / w) + 1
-                )
-            ),
+        edges = F.broadcast(
+            edges.withColumn(
+                "__cov_slab",
+                F.explode(
+                    F.sequence(
+                        F.floor((xlo - s) / w) - 1, F.floor(xhi / w) + 1
+                    )
+                ),
+            )
         )
-        if broadcast_polygons:
-            edges = F.broadcast(edges)
         keyed = cells.withColumn(
             "__cell_slab", F.floor(F.col(cell_minx) / w)
         )
@@ -372,9 +367,7 @@ def polygon_coverage(
             edges, keyed["__cell_slab"] == edges["__cov_slab"]
         )
     else:
-        if broadcast_polygons:
-            edges = F.broadcast(edges)
-        paired = cells.crossJoin(edges)
+        paired = cells.crossJoin(F.broadcast(edges))
     x0, y0 = F.col(cell_minx), F.col(cell_miny)
     term = edge_coverage_integral(
         F.col("xa"), F.col("ya"), F.col("xb"), F.col("yb"),

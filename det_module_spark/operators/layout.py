@@ -41,15 +41,6 @@ def morton_key(x: Column, y: Column) -> Column:
     return spread_bits16(x).bitwiseOR(F.shiftleft(spread_bits16(y), 1))
 
 
-def zorder_by(df: DataFrame, x: str, y: str, key_col: str = "zkey") -> DataFrame:
-    """Return ``df`` with a Morton key column, range-repartitioned and
-    sorted by it — the write-time layout step: each output file covers
-    a contiguous Z-range, i.e. a small rectangle in (x, y) space, so
-    min/max file statistics prune 2-D predicates."""
-    keyed = df.withColumn(key_col, morton_key(F.col(x), F.col(y)))
-    return keyed.repartitionByRange(key_col).sortWithinPartitions(key_col)
-
-
 def morton_sql(x_expr: str, y_expr: str) -> str:
     """The identical interleave as a SQL scalar expression (DuckDB /
     ANSI bit operators) — used by the oracle so both engines compute
@@ -374,23 +365,6 @@ def hilbert_by(
         )
         s >>= 1
     return out.drop("_hx", "_hy")
-
-
-def hilbert_xy2d(bits: int, x: int, y: int) -> int:
-    """Pure-Python reference for tests: identical recurrence."""
-    d = 0
-    s = 1 << (bits - 1)
-    x, y = x % (1 << bits), y % (1 << bits)
-    while s > 0:
-        rx, ry = x // s, y // s
-        x, y = x % s, y % s
-        d += s * s * ((3 * rx) ^ ry)
-        if ry == 0:
-            if rx == 1:
-                x, y = s - 1 - x, s - 1 - y
-            x, y = y, x
-        s >>= 1
-    return d
 
 
 def hilbert_sql(

@@ -1012,7 +1012,8 @@ def pairwise_coverage(
     to ~3e9 players — far past any leaderboard.
 
     Scale shape: the shared :func:`pair_counts` corpus aggregation,
-    then two 1-row scalars crossed; no window, no collect.
+    then one 1-row aggregate reading the player count as a scalar
+    subquery; no join, no window, no collect.
     """
     pairs = pair_counts(comparisons, winner, loser)
     np_df = (
@@ -1028,7 +1029,7 @@ def pairwise_coverage(
         .alias("n_pairs_min_games"),
     )
     return (
-        np_df.crossJoin(stats)
+        stats.withColumn("n_players", np_df.scalar())
         .select(
             "n_players",
             F.coalesce("n_games", F.lit(0)).cast("long").alias("n_games"),

@@ -31,7 +31,6 @@ def range_join(
     end_key: str,
     bin_size: int,
     inclusive_end: bool = False,
-    broadcast_ranges: bool = True,
 ) -> DataFrame:
     """Join rows of ``points`` to every range with
     start <= point < end (or <= end when ``inclusive_end``).
@@ -51,9 +50,9 @@ def range_join(
     )
     b0 = F.floor(as_long(ranges, start_key) / F.lit(bin_size))
     b1 = F.floor(as_long(ranges, end_key) / F.lit(bin_size))
-    r = ranges.withColumn("_bin", F.explode(F.sequence(b0, b1)))
-    if broadcast_ranges:
-        r = F.broadcast(r)
+    r = F.broadcast(
+        ranges.withColumn("_bin", F.explode(F.sequence(b0, b1)))
+    )
     joined = p.join(r, "_bin")
     upper = (
         F.col(point_key) <= F.col(end_key)

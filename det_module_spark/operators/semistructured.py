@@ -49,45 +49,15 @@ def kv_records(
     col: str,
     pair_sep: str = ",",
     kv_sep: str = "=",
-    use_udtf: bool = False,
 ) -> DataFrame:
     """Explode delimited key=value records ("a=1,b=2") into one row
     per pair — the log-parsing primitive. Malformed parts (no
     separator) are skipped; only the FIRST ``kv_sep`` splits, so
-    values may contain it.
-
-    Two equivalent implementations (pytest-verified identical):
-
-    - default: pure Column expressions (split + explode + substring
-      math) — whole-stage codegen, the hot path;
-    - ``use_udtf=True``: a Python UDTF joined laterally — the
-      §2.11 table-function surface. Row-at-a-time Python: keep it
-      for genuinely imperative expansions, not this one (measured
-      slower, as every row-wise Python path is).
+    values may contain it. Pure Column expressions (split + explode +
+    substring math), so the whole plan stays in whole-stage codegen.
 
     Output: input columns + (k, v).
     """
-    if use_udtf:
-        from pyspark.sql.functions import udtf
-
-        @udtf(returnType="k string, v string")
-        class _KV:
-            def eval(self, s):
-                for part in (s or "").split(pair_sep):
-                    if kv_sep in part:
-                        k, v = part.split(kv_sep, 1)
-                        yield (k, v)
-
-        spark = df.sparkSession
-        name = "kv_udtf_tmp"
-        spark.udtf.register(name, _KV)
-        view = f"kv_records_in_{abs(hash(col)) % 10**8}"
-        df.createOrReplaceTempView(view)
-        cols = ", ".join(f"t.{c}" for c in df.columns)
-        return spark.sql(
-            f"SELECT {cols}, u.k, u.v FROM {view} t, LATERAL {name}(t.{col}) u"
-        )
-
     import re
 
     # F.split treats the separator as a REGEX: escape it so literal

@@ -74,16 +74,12 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return cosine_with_norms(a, b, _norm(a), _norm(b))
-
-
 def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine given precomputed L2 norms. Higher-order lambdas run
     interpreted, so norms are hoisted out of pairwise joins: computed
     once per ROW on each side (O(|A|+|B|) aggregate evals) instead of
-    once per PAIR (O(|A|·|B|)). The arithmetic is the identical
-    sequential sum, so values are bit-equal to ``cosine()``.
+    once per PAIR (O(|A|·|B|)): the dot product over the product of
+    the two norms.
 
     A zero norm (all-zero embedding — padding or a failed encoder
     row) yields NULL, not a crash: cosine is undefined there, and

@@ -62,18 +62,6 @@ def salted_agg(
     return partials.groupBy(key).agg(*finals)
 
 
-def salted_sum(df: DataFrame, key: str, value: str, n_salts: int = 16) -> DataFrame:
-    return salted_agg(
-        df, key, [AlgebraicAgg("sum_" + value, F.sum(value))], n_salts
-    )
-
-
-def salted_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
-    return salted_agg(
-        df, key, [AlgebraicAgg("n_rows", F.count(F.lit(1)))], n_salts
-    )
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,

@@ -12,9 +12,8 @@ extract row is one boundary feature). Strategy, 100 TB-first:
 2. **Refine**: within a bucket, exact containment. For axis-aligned
    rectangle boundaries (the synthetic-fixture case, FIXTURES.md §2)
    refinement is 4 native comparisons — whole-stage codegen, no Python.
-   For general polygons the refinement is a vectorized Pandas UDF over
-   WKT (shapely), gated behind an import-try since the geo stack isn't
-   in every image.
+   For general polygons it is an even-odd ray cast
+   (geometry.point_in_polygon), also a Column expression.
 
 The bucket fan-out factor is bounded: a boundary covering B buckets
 appears B times on the build side, but the build side (boundary
@@ -154,53 +153,6 @@ def nearest_centroid_join(
         )
     )
     return best
-
-
-def spatial_join_wkt(
-    points: DataFrame,
-    boundaries: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    geom: str = "geom_wkt",
-    bucket_size: float = 1.0,
-) -> DataFrame:
-    """General polygon containment: bucket on the polygon bbox, then
-    exact point-in-polygon refinement in an Arrow-batched Pandas UDF.
-
-    Requires shapely (not bundled in this container); the bucketing
-    plumbing is real and tested via the rectangle path, the exact
-    kernel raises until the geo stack is present.
-    """
-    try:
-        from shapely import wkt as _wkt  # noqa: F401
-    except ImportError as e:  # pragma: no cover - geo stack not bundled
-        raise NotImplementedError(
-            "polygon refinement needs shapely; bucketed-join plumbing is "
-            "covered by spatial_join_rect"
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def _contains(geom_s: pd.Series, lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        from shapely import wkt
-        from shapely.geometry import Point
-
-        geoms = {g: wkt.loads(g) for g in geom_s.unique()}
-        return pd.Series(
-            [
-                geoms[g].contains(Point(x, y))
-                for g, x, y in zip(geom_s, lon_s, lat_s)
-            ]
-        )
-
-    p = bucket_points(points, lon, lat, bucket_size)
-    b = F.broadcast(explode_boundary_buckets(boundaries, bucket_size=bucket_size))
-    joined = p.join(b, ["bucket_x", "bucket_y"])
-    return joined.filter(_contains(F.col(geom), F.col(lon), F.col(lat))).drop(
-        "bucket_x", "bucket_y"
-    )
 
 
 def hex_bin(

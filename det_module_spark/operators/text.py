@@ -36,13 +36,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: split on whitespace AND on
-    letter/digit boundaries — a cheap deterministic proxy for BPE
-    token counts used for budget estimates."""
-    return F.size(F.split(text, r"\s+|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])"))
-
-
 def stopword_hits(text: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens(text), lambda t: t.isin(*words)))
 

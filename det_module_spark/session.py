@@ -79,24 +79,3 @@ def get_spark(app_name: str = "det_module_spark", master: str | None = None) -> 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def get_spark_with_retries(
-    app_name: str = "det_module_spark",
-    master: str | None = None,
-    attempts: int = 5,
-    backoff_s: float = 1.0,
-) -> SparkSession:
-    """Bootstrap with bounded retries (reference parity: the ≤5-attempt
-    config retry loop, queue/processing.py:37-42) — transient JVM/port
-    contention at startup shouldn't fail a cron-style run."""
-    import time
-
-    last: Exception | None = None
-    for i in range(attempts):
-        try:
-            return get_spark(app_name, master)
-        except Exception as e:  # noqa: BLE001 - bootstrap only
-            last = e
-            time.sleep(backoff_s * (i + 1))
-    raise RuntimeError(f"SparkSession bootstrap failed after {attempts} attempts") from last

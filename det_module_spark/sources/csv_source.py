@@ -29,20 +29,3 @@ def read_extract_csv(
     else:
         reader = reader.option("inferSchema", True)
     return reader.csv(path)
-
-
-def write_single_csv(df: DataFrame, path: str) -> str:
-    """Single-file CSV sink (reference contract: one merged CSV,
-    queue/request_tools.py:698-703). Delegates to
-    ``sinks.write_merged_csv`` — the previous inline implementation
-    delivered a DIRECTORY of part files (not the single file the name
-    promises) and skipped the ''-NA write options, silently diverging
-    from the K1 round-trip contract. Returns the final file path.
-    """
-    import os
-
-    from det_module_spark.sources.sinks import write_merged_csv
-
-    return write_merged_csv(
-        df, os.path.dirname(path) or ".", os.path.basename(path)
-    )

@@ -325,10 +325,3 @@ def write_bucketed_spill_aware(
         "max_bucket_rows": max_bucket_rows,
         "skew_ratio": round(skew_ratio, 2),
     }
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` sees the
-    same names the DuckDB oracle does."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -10,8 +10,8 @@ The engine's model keeps geometry as WKT-ish strings / bbox columns:
   arrays with higher-order functions, which is all the grid-bucketed
   spatial join (operators/spatial.py) needs for rectangles and for
   the bucketing stage of general polygons;
-- exact polygon refinement (shapely) stays in spatial.spatial_join_wkt
-  behind its import-try.
+- exact polygon coverage is operators/geometry.polygon_coverage, pure
+  Column expressions with no geo library.
 
 Boundary tables are small (10²–10⁵ features) — always the broadcast
 side of the zonal join.

@@ -424,42 +424,6 @@ def replay_bucket_counts(
     )
 
 
-def replay_combined_stats(
-    df: DataFrame,
-    batch_col: str,
-    key_col: str,
-    value_col: str,
-    bucket_col: str,
-    k: int = 3,
-) -> DataFrame:
-    """Replay through the one-pass CombinedStatsProcessor (running
-    totals + top-k distinct + bucket counts in three state variables
-    of ONE processor). Emission schedule is identical to the three
-    single-purpose replays — one wide row per key per touched
-    micro-batch — so each summary's projection of the combined output
-    equals its standalone replay row-for-row (the single-purpose
-    processors stay the tested protocol-coverage units; this pass
-    exists because three replays over the same stream pay the fixed
-    micro-batch/state-store cost three times for one stream's worth
-    of semantics — VERDICT r04 #5)."""
-    from det_module_spark.streaming.state import combined_stats
-
-    return replay_stream(
-        df,
-        batch_col,
-        lambda s: combined_stats(
-            s,
-            key_col=key_col,
-            value_col=value_col,
-            bucket_col=bucket_col,
-            k=k,
-        ),
-        output_mode="update",
-        extra_conf=_ROCKSDB_CONF,
-        no_data_batches=False,
-    )
-
-
 def replay_session_flush(
     df: DataFrame,
     batch_col: str,

@@ -357,129 +357,6 @@ def bucket_counts(
     )
 
 
-COMBINED_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-        T.StructField("topk", T.StringType()),
-        T.StructField("n_buckets", T.LongType()),
-        T.StructField("n_bucket_events", T.LongType()),
-    ]
-)
-
-
-class CombinedStatsProcessor(StatefulProcessor):
-    """All three bounded-state summaries — running (count, sum)
-    ValueState, top-k-distinct ListState, bucket-count MapState — in
-    ONE transformWithState pass, emitting one wide row per key per
-    touched micro-batch.
-
-    Motivation (VERDICT r04 #5): each TWS replay pays a fixed
-    micro-batch/state-store cost that dwarfs the per-row work at
-    harness scale; a production pipeline computing several per-key
-    summaries over ONE stream should likewise fold them into one
-    processor — state is still per-key/per-variable (three column
-    families in the same RocksDB store), so the fold changes constant
-    factors, not the scale story. The per-summary semantics are
-    identical to the single-purpose processors above, which remain
-    the protocol-coverage units (and the tested public API).
-
-    Null discipline, aligned PER-PROJECTION with the standalone
-    processors: n_events/sum_value count EVERY row but sum only
-    non-null values (RunningTotalsProcessor's contract — an event
-    with a null value is still an event); null values contribute
-    nothing to the top-k and null buckets nothing to the bucket map
-    (the wrappers' drop-before-state guard). One structural caveat a
-    single wide row cannot avoid: a key touched ONLY by null
-    values/buckets emits a wide row here (its event count advanced),
-    whereas the standalone topk/bucket replays — which filter null
-    rows before the processor — emit no row for it. So the
-    row-for-row projection equivalence claimed in
-    replay_combined_stats holds exactly when every touched key has at
-    least one non-null contribution per batch (and always on
-    null-free streams, which the driver replays are).
-    """
-
-    def __init__(self, k: int = 3) -> None:
-        self._k = k
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-        self._vals = handle.getListState("vals", "v BIGINT")
-        self._m = handle.getMapState("buckets", "bucket BIGINT", "cnt BIGINT")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        n, s = 0, 0.0
-        if self._totals.exists():
-            prev = self._totals.get()
-            n, s = int(prev[0]), float(prev[1])
-        cur = {int(t[0]) for t in self._vals.get()}
-        for pdf in rows:
-            # totals mirror RunningTotalsProcessor exactly: n counts
-            # every event row, the pandas sum skips null values
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-            # top-k state only sees non-null values (drop-before-state)
-            vals = pdf["value"].dropna()
-            cur.update(int(v) for v in vals)
-            for b, cnt in pdf["bucket"].dropna().value_counts().items():
-                b = int(b)
-                prev = (
-                    self._m.getValue((b,))
-                    if self._m.containsKey((b,))
-                    else (0,)
-                )
-                self._m.updateValue((b,), (int(prev[0]) + int(cnt),))
-        self._totals.update((n, s))
-        top = sorted(cur, reverse=True)[: self._k]
-        self._vals.clear()
-        self._vals.put([(v,) for v in top])
-        counts = [int(v[0]) for v in self._m.values()]
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_events": [n],
-                "sum_value": [s],
-                "topk": [",".join(map(str, top))],
-                "n_buckets": [len(counts)],
-                "n_bucket_events": [sum(counts)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def combined_stats(
-    events: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    bucket_col: str = "bucket",
-    k: int = 3,
-) -> DataFrame:
-    """One-pass streaming per-key (running totals + top-k distinct +
-    bucket counts) via transformWithStateInPandas. ``value_col`` must
-    be integer-valued (cents discipline — exact double accumulation);
-    the top-k reads it as a long."""
-    from pyspark.sql import functions as F
-
-    _ship_fallback(events.sparkSession)
-    prepared = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("value"),
-        F.col(bucket_col).cast("long").alias("bucket"),
-    )
-    return prepared.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=CombinedStatsProcessor(k),
-        outputStructType=COMBINED_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 SESSION_FLUSH_SCHEMA = T.StructType(
     [
         T.StructField("key", T.StringType()),

@@ -34,14 +34,19 @@ def test_jsonl_corrupt_lines_quarantined(spark, tmp_path):
 
 
 def test_kv_records_fast_equals_udtf(spark):
+    """The Column path against a plain-Python split of the same
+    rows."""
     from det_module_spark.operators.semistructured import kv_records
 
-    df = spark.createDataFrame(
-        [(1, "a=1,b=2,junk"), (2, "c=x=y"), (3, ""), (4, None)],
-        ["id", "s"],
-    )
+    rows = [(1, "a=1,b=2,junk"), (2, "c=x=y"), (3, ""), (4, None)]
+    df = spark.createDataFrame(rows, ["id", "s"])
     fast = sorted(map(tuple, kv_records(df, "s").collect()))
-    slow = sorted(map(tuple, kv_records(df, "s", use_udtf=True).collect()))
+    slow = sorted(
+        (i, s, *part.split("=", 1))
+        for i, s in rows
+        for part in (s or "").split(",")
+        if "=" in part
+    )
     assert fast == slow
     assert fast == [
         (1, "a=1,b=2,junk", "a", "1"),

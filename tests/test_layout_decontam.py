@@ -11,7 +11,7 @@ from det_module_spark.operators.decontaminate import (
     contamination_report,
     decontaminate,
 )
-from det_module_spark.operators.layout import morton_key, zorder_by
+from det_module_spark.operators.layout import morton_key
 from det_module_spark.operators.profile import grouped_corr_exact, histogram
 from det_module_spark.operators.text import repetition_features
 
@@ -40,7 +40,7 @@ def test_zorder_locality(spark):
     n = 32
     pts = [(x, y) for x in range(n) for y in range(n)]
     df = spark.createDataFrame(pts, "x int, y int")
-    keyed = zorder_by(df, "x", "y")
+    keyed = df.withColumn("zkey", morton_key(F.col("x"), F.col("y")))
     rows = keyed.select("x", "y", "zkey").collect()
     assert len({r.zkey for r in rows}) == n * n  # bijective
     # quadrant (x<16, y<16) occupies exactly the first quarter of keys

@@ -12,7 +12,6 @@ from det_module_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
-    simhash_pairs,
 )
 from det_module_spark.operators.multimodal import (
     decode_features,
@@ -85,9 +84,12 @@ def test_minhash_signature_stability(docs):
 
 
 def test_simhash_near_dup_distance(docs):
+    sig = {r["doc_id"]: r["simhash"] for r in simhash(docs, bits=16).collect()}
     pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_pairs(simhash(docs, bits=16), max_hamming=16).collect()
+        (a, b): bin(sig[a] ^ sig[b]).count("1")
+        for a in sig
+        for b in sig
+        if a < b
     }
     # near-dup pair is closer than unrelated pair
     assert pairs[(0, 1)] < pairs[(2, 4)]

@@ -11,7 +11,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from det_module_spark.operators.queue import get_status, update_status
+from det_module_spark.operators.queue import check_id, get_status, update_status
 from det_module_spark.operators.rollup_time import (
     finalize,
     rollup_from_partials,
@@ -96,3 +96,4 @@ def test_queue_update_status(spark):
     assert rows["a"]["status"] == 2 and rows["a"]["stage_prep_time"] == 1234
     assert rows["b"]["status"] == 0 and rows["b"]["stage_prep_time"] == 0
     assert [r["status"] for r in get_status(updated, "a").collect()] == [2]
+    assert [r["_id"] for r in check_id(updated, "b").collect()] == ["b"]

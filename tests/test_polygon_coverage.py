@@ -231,9 +231,8 @@ def test_slab_bucketed_equals_unbucketed(spark):
 
 
 def test_slab_bucketed_negative_coords_and_shuffle_join(spark):
-    # slabs work for negative coordinates (floor semantics) and
-    # without broadcast (the equi-key enables a shuffled join — the
-    # 100 TB path when the boundary table itself is big)
+    # slabs work for negative coordinates (floor semantics); one cell
+    # per slab puts every edge in several slab keys of the equi-join
     ring = [(-3.0, -3.0), (1.0, -3.0), (1.0, 1.0), (-3.0, 1.0)]
     bounds = spark.createDataFrame(
         [(0, ring)], "asdf_id INT, ring ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>"
@@ -245,7 +244,6 @@ def test_slab_bucketed_negative_coords_and_shuffle_join(spark):
     got = (
         polygon_coverage(
             cells, bounds, cell_size=1.0, slab_cells=1,
-            broadcast_polygons=False,
         )
         .agg(F.sum("coverage").alias("s"))
         .collect()[0]["s"]

@@ -69,38 +69,6 @@ def test_normalize_filters_idempotent_and_noop_free(filters):
             assert out[k] == v
 
 
-def test_simhash_banded_equals_allpairs(spark):
-    """Pigeonhole banding is lossless vs the all-pairs verifier."""
-    from pyspark.sql import Row
-
-    from det_module_spark.operators.dedup import (
-        simhash,
-        simhash_banded_pairs,
-        simhash_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=0, text="the quick brown fox jumps over the lazy dog"),
-            Row(doc_id=1, text="the quick brown fox jumps over the lazy cat"),
-            Row(doc_id=2, text="totally different content entirely here now"),
-            Row(doc_id=3, text="the quick brown fox leaps over the lazy dog"),
-            Row(doc_id=4, text="dog lazy the over jumps fox brown quick the"),
-        ]
-    )
-    hashes = simhash(docs, bits=16)
-    for h in (0, 2, 5):
-        exact = {
-            (r["id_a"], r["id_b"], r["hamming"])
-            for r in simhash_pairs(hashes, max_hamming=h).collect()
-        }
-        banded = {
-            (r["id_a"], r["id_b"], r["hamming"])
-            for r in simhash_banded_pairs(hashes, max_hamming=h).collect()
-        }
-        assert banded == exact, f"banding lost pairs at h={h}"
-
-
 def test_cdc_apply_is_idempotent(spark):
     """Applying the same change batch twice equals applying it once —
     the property that makes at-least-once delivery safe."""

@@ -4,9 +4,9 @@ streaming/state).
 
 Edge/ops-input-only: duplicate spec hashes racing one overwrite path,
 manifest path spellings vs vacuum, malformed request shapes, NULL
-spec hashes and NULL event times in streaming, and the combined-stats
-null alignment. Driver tables carry none of these (events probed
-null-free), so registered-query values are unchanged.
+spec hashes and NULL event times in streaming. The registered
+queries' tables carry none of these (events probed null-free), so
+registered-query values are unchanged.
 """
 
 from __future__ import annotations
@@ -115,73 +115,6 @@ def test_stream_to_cache_null_hash_rows_dropped_not_fatal(spark, tmp_path):
     rows = cache.read().collect()
     assert [r["spec_hash"] for r in rows] == ["h1"]
     assert cache.get("h1").count() == 2  # the null-hash row is dropped
-
-
-def test_combined_stats_totals_match_standalone_on_nulls(spark):
-    """The combined processor's totals projection mirrors
-    RunningTotalsProcessor byte-for-byte, including its null
-    contract (count every event, sum non-null values) — exercised
-    directly on the processor objects, not through a stream."""
-    import pandas as pd
-
-    from det_module_spark.streaming.state import (
-        CombinedStatsProcessor,
-        RunningTotalsProcessor,
-    )
-
-    class _FakeValue:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class _FakeList:
-        def __init__(self):
-            self._v = []
-
-        def get(self):
-            return list(self._v)
-
-        def clear(self):
-            self._v = []
-
-        def put(self, v):
-            self._v = list(v)
-
-    class _FakeMap(dict):
-        def containsKey(self, k):
-            return k in self
-
-        def getValue(self, k):
-            return self[k]
-
-        def updateValue(self, k, v):
-            self[k] = v
-
-    batch = pd.DataFrame(
-        {"value": [1.0, None, 3.0], "bucket": [7, None, 8]}
-    )
-
-    rt = RunningTotalsProcessor()
-    rt._state = _FakeValue()
-    (row_rt,) = list(rt.handleInputRows(("k",), [batch.copy()], None))
-
-    cb = CombinedStatsProcessor(k=3)
-    cb._totals, cb._vals, cb._m = _FakeValue(), _FakeList(), _FakeMap()
-    (row_cb,) = list(cb.handleInputRows(("k",), [batch.copy()], None))
-
-    assert int(row_cb["n_events"][0]) == int(row_rt["n_events"][0]) == 3
-    assert float(row_cb["sum_value"][0]) == float(row_rt["sum_value"][0]) == 4.0
-    # null value/bucket contribute nothing to topk / bucket map
-    assert row_cb["topk"][0] == "3,1"
-    assert int(row_cb["n_buckets"][0]) == 2
 
 
 def test_session_flush_null_ts_dropped_before_state(spark):

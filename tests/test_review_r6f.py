@@ -4,8 +4,8 @@ Ops/edge-input-only: stale protorecord shards resurrected by a
 smaller re-write, the session-wide nanosAsLong conf leak (current
 testdata is TIMESTAMP(MICROS) — the conf did nothing but retype
 later reads), MultiPolygon/multi-file GeoJSON, non-integer raster
-temporal tokens killing the doc bundle, write_single_csv delivering
-a directory, and the raster (file × tile) fan-out.
+temporal tokens killing the doc bundle, the single-file CSV sink
+delivering a directory, and the raster (file × tile) fan-out.
 """
 
 from __future__ import annotations
@@ -151,16 +151,14 @@ def test_overview_tolerates_non_integer_temporal_tokens():
 
 
 def test_write_single_csv_is_a_file(spark, tmp_path):
-    from det_module_spark.sources.csv_source import (
-        read_extract_csv,
-        write_single_csv,
-    )
+    from det_module_spark.sources.csv_source import read_extract_csv
+    from det_module_spark.sources.sinks import write_merged_csv
 
     df = spark.createDataFrame(
         [Row(a=1, b="x"), Row(a=2, b=None)], "a long, b string"
     )
     out = str(tmp_path / "res.csv")
-    final = write_single_csv(df, out)
+    final = write_merged_csv(df, str(tmp_path), "res.csv")
     assert os.path.isfile(final) and final == out
     back = read_extract_csv(spark, out).orderBy("a").collect()
     assert [r["a"] for r in back] == [1, 2]

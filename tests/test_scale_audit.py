@@ -193,7 +193,8 @@ BROADCAST_WHITELIST = {
     ),
     "det_module_spark/operators/rangejoin.py": (
         1,
-        "right side broadcast only when caller passes broadcast_right=True",
+        "ranges side, always broadcast: the range table is a small dim "
+        "exploded to the bins each range overlaps",
     ),
     "det_module_spark/operators/quality.py": (
         4,
@@ -212,7 +213,7 @@ BROADCAST_WHITELIST = {
         "query-vector frame: bounded by contract (same as cosine_topk)",
     ),
     "det_module_spark/operators/spatial.py": (
-        4,
+        3,
         "boundary bucket tables: one row per (boundary, bucket), boundaries are dims",
     ),
     "det_module_spark/operators/anomaly.py": (
@@ -232,11 +233,10 @@ BROADCAST_WHITELIST = {
         "per-group totals)",
     ),
     "det_module_spark/operators/evalstats.py": (
-        3,
-        "pass_at_k ks frame: len(ks) literal rows, parameter-bounded; "
+        1,
         "item_discrimination ability table: one row per model, models "
         "are a bounded dim (same class as agreement.py's per-rater "
-        "accuracy table); ks_test totals: 1-row aggregate scalar",
+        "accuracy table)",
     ),
     "det_module_spark/operators/survival.py": (
         2,

@@ -11,9 +11,7 @@ from det_module_spark.operators.extract_types import zonal_extract
 from det_module_spark.operators.skew import (
     AlgebraicAgg,
     salted_agg,
-    salted_count,
     salted_mean,
-    salted_sum,
 )
 
 
@@ -35,8 +33,16 @@ def test_salted_matches_plain(skewed):
         .agg(F.sum("v").alias("s"), F.count("v").alias("n"))
         .collect()
     }
-    s = {r["k"]: r["sum_v"] for r in salted_sum(skewed, "k", "v").collect()}
-    c = {r["k"]: r["n_rows"] for r in salted_count(skewed, "k").collect()}
+    sc = salted_agg(
+        skewed,
+        "k",
+        [
+            AlgebraicAgg("sum_v", F.sum("v")),
+            AlgebraicAgg("n_rows", F.count(F.lit(1))),
+        ],
+    ).collect()
+    s = {r["k"]: r["sum_v"] for r in sc}
+    c = {r["k"]: r["n_rows"] for r in sc}
     m = {r["k"]: r["mean_v"] for r in salted_mean(skewed, "k", "v").collect()}
     assert len(s) == len(plain)
     for k, (ps, pn) in plain.items():

@@ -6,9 +6,25 @@ import math
 from pyspark.sql import functions as F
 
 
-def test_hilbert_reference_is_a_space_filling_curve():
-    from det_module_spark.operators.layout import hilbert_xy2d
+def hilbert_xy2d(bits: int, x: int, y: int) -> int:
+    """Pure-Python reference for ``layout.hilbert_by``: identical
+    recurrence."""
+    d = 0
+    s = 1 << (bits - 1)
+    x, y = x % (1 << bits), y % (1 << bits)
+    while s > 0:
+        rx, ry = x // s, y // s
+        x, y = x % s, y % s
+        d += s * s * ((3 * rx) ^ ry)
+        if ry == 0:
+            if rx == 1:
+                x, y = s - 1 - x, s - 1 - y
+            x, y = y, x
+        s >>= 1
+    return d
 
+
+def test_hilbert_reference_is_a_space_filling_curve():
     for bits in (3, 4):
         n = 1 << bits
         pos = {}
@@ -25,7 +41,7 @@ def test_hilbert_reference_is_a_space_filling_curve():
 
 
 def test_hilbert_column_matches_reference(spark):
-    from det_module_spark.operators.layout import hilbert_by, hilbert_xy2d
+    from det_module_spark.operators.layout import hilbert_by
 
     rows = [(i, (i * 37) % 256, (i * 91) % 256) for i in range(300)]
     df = spark.createDataFrame(rows, ["id", "x", "y"])
@@ -40,8 +56,6 @@ def test_hilbert_column_matches_reference(spark):
 def test_hilbert_locality_beats_zorder_on_range_boxes(spark):
     """Mean Manhattan step along the curve: Hilbert is exactly 1,
     Morton jumps. (Locality rationale for offering both.)"""
-    from det_module_spark.operators.layout import hilbert_xy2d
-
     n = 16
     pos = {}
     for x in range(n):
