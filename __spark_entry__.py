@@ -7604,23 +7604,29 @@ def entry(spark: SparkSession) -> DataFrame:
 #      sorted by their latest round in CORRECTNESS_r*.json, then by
 #      name (names with no record sort first).
 # The registry keeps its own order after the window.
-# every registered caller of range_join (ranges always broadcast), of
-# kv_records (Column path only) and of polygon_coverage (edges always
-# broadcast), and the eight newly registered eval-statistics and
-# agreement queries
+# every registered caller of the graph operators whose code changed
+# (one edge-frame builder, one relax, rank and walk loop each; not
+# bfs_reach or adamic_adar, whose operators did not change), and
+# pass_at_k (its unrolled expression now gates the factors)
 _CHANGED_PATHS = [
-    "range_join",
-    "kv_records",
-    "zonal_weighted_polygon",
-    "zonal_weighted_triangle",
-    "pairwise_coverage",
-    "player_consistency",
-    "fleiss_kappa",
+    "cluster_representatives",
+    "clustering_coeff",
+    "dedup_clusters",
+    "degree_assort",
+    "entity_resolution",
+    "graph_voronoi",
+    "hits_scores",
+    "k_core",
+    "leakage_safe_split",
+    "lpa_communities",
+    "pagerank",
+    "ppr_scores",
+    "random_walk_corpus",
+    "sssp_dist",
+    "temporal_reach",
+    "triangle_count",
+    "weighted_walks",
     "pass_at_k",
-    "mcnemar_pairs",
-    "item_discrimination",
-    "auc_roc",
-    "ks_test",
 ]
 _WINDOW = 50
 

@@ -54,13 +54,16 @@ def _passk_expr(n: str, c: str, k: int, max_k: int, intdiv: str) -> str:
     pass@k = 1) before any negative factor is touched. Each step
     floors once: ≤ k ppm ≈ 8 ppm total error, same class as
     cohens_kappa's two-step pe. ``k`` is data (one row per requested
-    k), so the unroll goes to ``max_k`` with each step gated on
-    i < k.
+    k), so the unroll goes to ``max_k`` with each step's factors gated
+    on i < k: a step past k multiplies and divides by 1. Gating the
+    factors, not the step, keeps one copy of ``acc`` per step, so the
+    text (and the generated code) grows linearly in ``max_k``.
     """
     acc = str(PPM)
     for i in range(max_k):
-        step = f"(({acc}) * ({n} - {c} - {i}) {intdiv} ({n} - {i}))"
-        acc = f"(CASE WHEN {i} < {k} THEN {step} ELSE ({acc}) END)"
+        num = f"(CASE WHEN {i} < {k} THEN {n} - {c} - {i} ELSE 1 END)"
+        den = f"(CASE WHEN {i} < {k} THEN {n} - {i} ELSE 1 END)"
+        acc = f"(({acc}) * {num} {intdiv} {den})"
     return acc
 
 

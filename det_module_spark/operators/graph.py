@@ -1,29 +1,194 @@
-"""Iterative graph operators: connected components for dedup clusters.
+"""Iterative graph operators over edge-list DataFrames: connected
+components and the dedup-cluster layer on top of them, label
+propagation, k-core peeling, PageRank (uniform and personalized),
+HITS, shortest paths, graph-Voronoi, time-respecting reachability,
+random walks, triangles and degree statistics. Each loop has an
+unrolled-CTE ``*_sql`` twin for the DuckDB oracle; integer arithmetic
+and fixed round caps keep both engines bit-identical.
 
-Near-duplicate detection produces *pairs*; deduplication needs
-*clusters* (every doc labeled with its group's canonical id). That is
-connected components — inherently iterative, the one algorithm in this
-engine that a single SQL statement can't express (the oracle uses a
-recursive CTE).
+Edge frames. An operator reads its edge input once, into one
+materialized frame, before anything else touches it: ``_undirected``
+(distinct (a, b) pairs in both orientations, built by one explode per
+input row) or ``_edges`` (distinct directed (src, dst)). The upstream
+pair generation is often the most expensive part of a query, and each
+branch of a union, like each consumer of an unmaterialized frame,
+would run it again.
 
-Implementation: large-star/small-star-style min-label propagation.
-Each round every node adopts the minimum label in its neighborhood;
-fixpoint in O(diameter) rounds (near-dup clusters are shallow — pairs
-chain through shared shingles, diameters of 2-5 are typical, so 3-6
-shuffle rounds).
-
-Scale notes: each round is one join + one aggregation on the edge
-list. Labels are checkpointed (``localCheckpoint``) every round to cut
-the growing lineage — without it the plan doubles per iteration and
-the driver OOMs on plan serialization long before data is a problem.
-Convergence is detected with a count of changed labels (a scalar per
-round, not a collect of data).
+Checkpoints. Loop state is cut with an eager ``localCheckpoint`` each
+round. Without it the plan doubles per round, and serializing it runs
+out of memory long before the data is a problem. Convergence tests
+read the checkpointed rows, or a metric observed while they were
+written, never a collect. The shared loops are ``_relax`` (monotone
+min-relaxation that stops at its fixpoint, which equals the fully
+unrolled oracle), ``_rank`` (the PageRank family, which only
+checkpoints past 4 rounds: no win was measured at 3) and ``_walk``
+(hash-drawn walks).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from det_module_spark.operators.dedup import stable_hash64
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct (a, b) pairs in both orientations, self-loops kept
+    (callers that exclude them filter ``a != b``). Both orientations
+    come from one explode per input row, so the edge input is
+    evaluated once."""
+    both = F.array(
+        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+        F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+    )
+    return (
+        edges.select(F.explode(both).alias("p"))
+        .select("p.a", "p.b")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct directed (src, dst) pairs."""
+    return (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """Every endpoint of an ``_edges`` frame → (node)."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .union(e.select("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _relax(
+    state: DataFrame,
+    extend: Callable[[DataFrame], DataFrame],
+    rounds: int,
+) -> DataFrame:
+    """Monotone min-relaxation keyed by ``node``: each round unions
+    ``state`` with the candidate rows ``extend(state)`` and keeps, per
+    node, the candidate whose non-key columns are smallest (compared in
+    column order). Values only improve, so a round that changes no row
+    is the fixpoint and the loop stops there with the result of all
+    ``rounds`` unrolled rounds.
+
+    The fixpoint test reads the row count and the count and sum of the
+    first value column, observed by the checkpoint job itself, so it
+    costs no job of its own. Nodes are never dropped and a value never
+    turns NULL, so with both counts unchanged every changed row lowered
+    its value and the sum fell. That holds when a row changes only by
+    lowering its first value column: always with one value column, and
+    for ``nearest_seed``'s (hops, seed), whose rows never change once
+    reached (a node is first reached at its least hop count, from every
+    seed at that count at once)."""
+    vals = [c for c in state.columns if c != "node"]
+    if len(vals) == 1:  # a struct, even of one field, sorts to aggregate
+        key, unpack = F.col(vals[0]), [F.col("m").alias(vals[0])]
+    else:
+        key, unpack = F.struct(*vals), [F.col(f"m.{c}").alias(c) for c in vals]
+    first = F.col(vals[0])
+    probe = [
+        F.count(F.lit(1)).alias("rows"),
+        F.count(first).alias("vals"),
+        F.sum(first.cast("decimal(38,0)")).alias("sum"),
+    ]
+    state = state.localCheckpoint(eager=True)
+    last = None
+    for _ in range(rounds):
+        seen = Observation()
+        state = (
+            state.unionByName(extend(state))
+            .groupBy("node")
+            .agg(F.min(key).alias("m"))
+            .select("node", *unpack)
+            .observe(seen, *probe)
+            .localCheckpoint(eager=True)
+        )
+        now = seen.get
+        if now == last:
+            break
+        last = now
+    return state
+
+
+def _idiv(a, b):
+    """Exact integer floor-division as Column arithmetic: (a - a%b)/b.
+    The numerator is an exact multiple of b, so the double division is
+    exact for |a| < 2^53 — unlike floor(a/b), whose pre-rounded double
+    quotient can land on the wrong side of an integer boundary."""
+    return ((a - a % b) / b).cast("long")
+
+
+def _rank(e: DataFrame, restart: DataFrame, iterations: int) -> DataFrame:
+    """PageRank rounds with damping 0.85 over an ``_edges`` frame, all
+    in integer units: → (node, rank_fp). ``restart`` holds (node,
+    seed_fp) for every node, the teleport mass, which is also the
+    starting rank."""
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    ranks = restart.select("node", F.col("seed_fp").alias("rank_fp"))
+    for _ in range(iterations):
+        contrib = (
+            e.join(deg, "src")
+            .join(ranks.withColumnRenamed("node", "src"), "src")
+            .select("dst", _idiv(F.col("rank_fp"), F.col("outdeg")).alias("share"))
+            .groupBy("dst")
+            .agg(F.sum("share").alias("contrib"))
+        )
+        ranks = restart.join(
+            contrib, restart.node == contrib.dst, "left"
+        ).select(
+            "node",
+            (
+                _idiv(F.lit(15) * F.col("seed_fp"), F.lit(100))
+                + _idiv(F.lit(85) * F.coalesce("contrib", F.lit(0)), F.lit(100))
+            ).alias("rank_fp"),
+        )
+        if iterations > 4:
+            ranks = ranks.localCheckpoint(eager=True)
+    return ranks
+
+
+def _walk(
+    seeds: DataFrame,
+    node: str,
+    steps: int,
+    pick: Callable[[DataFrame, Column], DataFrame],
+) -> DataFrame:
+    """Deterministic walks, one per distinct seed: → (walk_id, step,
+    node) with step 0 at the seed. At step t the draw is
+    md5-hash(walk_id:t:cur), and ``pick(frontier, draw)`` maps the
+    frontier (walk_id, cur) to the next one; a walk that ``pick``
+    drops (a sink node) stops. Each level is checkpointed because the
+    output union reads all of them: lazy levels would recompute level
+    t-1 under level t."""
+    frontier = seeds.select(
+        F.col(node).alias("walk_id"), F.col(node).alias("cur")
+    ).distinct()
+    out = frontier.select(
+        "walk_id", F.lit(0).alias("step"), F.col("cur").alias("node")
+    )
+    for t in range(1, steps + 1):
+        draw = stable_hash64(
+            F.concat_ws(":", F.col("walk_id"), F.lit(str(t - 1)), F.col("cur"))
+        )
+        frontier = pick(frontier, draw).localCheckpoint(eager=True)
+        out = out.unionByName(
+            frontier.select(
+                "walk_id", F.lit(t).alias("step"), F.col("cur").alias("node")
+            )
+        )
+    return out
 
 
 def connected_components(
@@ -31,52 +196,26 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Edge list → (id, component) with component = min node id in the
-    connected component. Isolated endpoints of self-loops are fine;
-    nodes absent from the edge list are absent from the output (join
-    the full vertex set afterwards if singletons need labels).
+    connected component (the dedup-cluster label: near-dup detection
+    yields pairs, dedup needs clusters). Isolated endpoints of
+    self-loops are fine; nodes absent from the edge list are absent
+    from the output (join the full vertex set afterwards if singletons
+    need labels).
 
-    ``checkpoint_every`` is the materialization cadence: rounds
-    between checkpoints stay LAZY (no job at all — their joins fold
-    into the next checkpoint's plan), so per-fixpoint job count is
-    ~2·rounds/cadence instead of 2·rounds. Convergence is only
-    tested on checkpoint rounds; a fixpoint reached mid-stride costs
-    one extra (data-idempotent) lazy round inside the same job.
-
-    Default 1 (= checkpoint every round) is the MEASURED winner:
-    isolated idle-host A/B on the sf0.1 entity-resolution edge set
-    (262k edges, 5 samples each) gave cad1 2.22s / cad2 2.67s /
-    cad3 2.62s median — the lazy stride's extra in-job recompute
-    (one data-idempotent round past the fixpoint, plus a 2-deep
-    join plan per materialization) costs more than the job-scheduling
-    overhead it saves. The knob stays for graphs where per-job
-    overhead dominates (many tiny rounds, e.g. high-diameter paths
-    on small frames)."""
-    # undirected: symmetrize once. The edge input is materialized
-    # FIRST — a union's branches are evaluated independently, so
-    # without the cut the (often expensive) pair-generation upstream
-    # runs twice, once per direction (measured ~2x on the fuzzy-join
-    # and shingle-join pipelines feeding this).
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
-    sym = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    sym = sym.localCheckpoint(eager=True)
-
+    Min-label propagation with pointer jumping: each round every node
+    adopts the minimum label in its neighborhood, then follows its
+    label one hop. One join + one aggregation on the edge list per
+    round; the loop stops at the first round that changes no label."""
+    sym = _undirected(edges, src, dst)
     labels = (
         sym.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
         .localCheckpoint(eager=True)
     )
-
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
-    for it in range(max_iterations):
+    for _ in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym.b == labels.id)
             .groupBy("a")
@@ -115,21 +254,11 @@ def connected_components(
                     | (F.col("p_comp") < F.col("component"))
                 ).alias("_changed"),
             )
+            .localCheckpoint(eager=True)
         )
-        if (
-            it % checkpoint_every == checkpoint_every - 1
-            or it == max_iterations - 1
-        ):
-            updated = updated.localCheckpoint(eager=True)
-            # convergence = the LAST round changed nothing (_changed
-            # is recomputed fresh each round, so the stride's earlier
-            # rounds don't mask a settled final round)
-            n_changed = updated.filter(F.col("_changed")).count()
-            labels = updated.drop("_changed")
-            if n_changed == 0:
-                break
-        else:
-            labels = updated.drop("_changed")
+        labels = updated.drop("_changed")
+        if updated.filter(F.col("_changed")).isEmpty():
+            break
     return labels
 
 
@@ -207,17 +336,9 @@ def k_core(
 
     Scale shape per round: one degree aggregation + two semi-joins of
     the live edge list against the survivor set (equi-joins, AQE
-    broadcasts the survivor list once it shrinks). Edge list is
-    checkpointed per round to keep lineage flat.
+    broadcasts the survivor list once it shrinks).
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cur = sym
+    cur = _undirected(edges, src, dst).filter(F.col("a") != F.col("b"))
     prev_edges = cur.count()
     for _ in range(rounds):
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("c"))
@@ -267,14 +388,6 @@ SELECT a AS node, COUNT(*) AS degree FROM {prev}
 GROUP BY a HAVING COUNT(*) >= {k}"""
 
 
-def _idiv(a, b):
-    """Exact integer floor-division as Column arithmetic: (a - a%b)/b.
-    The numerator is an exact multiple of b, so the double division is
-    exact for |a| < 2^53 — unlike floor(a/b), whose pre-rounded double
-    quotient can land on the wrong side of an integer boundary."""
-    return ((a - a % b) / b).cast("long")
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
@@ -293,50 +406,16 @@ def pagerank(
 
     Scale shape per iteration: one join edge⋈rank (broadcastable when
     the rank table is small; hash otherwise) + one aggregation keyed by
-    dst + one left join back to the node set. For long loops, lineage
-    is cut with ``localCheckpoint`` like connected_components; short
-    fixed counts skip it (measured: no win at 3 rounds) — at 1000
-    executors the cost per round is two shuffles of the edge list.
+    dst + one left join back to the node set — at 1000 executors the
+    cost per round is two shuffles of the edge list. This is
+    :func:`personalized_pagerank` with every node a seed.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e = _edges(edges, src, dst)
+    nodes = _nodes(e)
+    restart = nodes.withColumn(
+        "seed_fp", F.lit(scale // nodes.count()).cast("long")
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    base = 15 * (scale // n) // 100  # (1-d) term, exact ints
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ranks = nodes.withColumn("rank_fp", F.lit(scale // n))
-    for _ in range(iterations):
-        contrib = (
-            e.join(deg, "src")
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select("dst", _idiv(F.col("rank_fp"), F.col("outdeg")).alias("share"))
-            .groupBy("dst")
-            .agg(F.sum("share").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + _idiv(F.lit(85) * F.coalesce("contrib", F.lit(0)), F.lit(100))
-                ).alias("rank_fp"),
-            )
-        )
-        # fixed small iteration counts keep lineage shallow; only
-        # checkpoint when the loop is long enough for plan growth to
-        # hurt (mirrors connected_components, which loops to fixpoint)
-        if iterations > 4:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return _rank(e, restart, iterations)
 
 
 def pagerank_sql(
@@ -394,20 +473,6 @@ def dedup_clusters(
     )
 
 
-def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Self-loop-free symmetric closure of an edge list, materialized.
-    The symmetrized frame feeds degree counting, orientation and the
-    closing-edge semi-join — without the cut the upstream
-    edge-producing pipeline re-executes per consumer (measured
-    16.8s -> ~2s on the brand co-purchase graph)."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
-        F.col("u") != F.col("v")
-    )
-    return e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct().localCheckpoint(eager=False)
-
-
 def triangle_listing(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
@@ -421,40 +486,36 @@ def triangle_listing(
     (degree, id) order), instead of Σ deg² for naive orientation.
     Two shuffle joins; no iteration.
     """
-    return _triangles_from_und(_symmetrized(edges, src, dst))
+    und = _undirected(edges, src, dst).filter(F.col("a") != F.col("b"))
+    return _triangles(und)
 
 
-def _triangles_from_und(und: DataFrame) -> DataFrame:
-    """Triangle listing over a pre-materialized symmetric edge frame
-    (``_symmetrized``) — split out so clustering_coefficients can
-    share ONE symmetrization between the degree agg and the listing
-    instead of re-running the edge-producing pipeline per consumer."""
-    deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # orient edge u->v iff (deg_u, u) < (deg_v, v): every vertex's
+def _triangles(und: DataFrame) -> DataFrame:
+    """Triangle listing over an ``_undirected`` frame without
+    self-loops → (v1, v2, v3)."""
+    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    # orient edge a->b iff (deg_a, a) < (deg_b, b): every vertex's
     # out-degree is bounded by O(sqrt(m))
     ranked = (
-        und.join(deg.withColumnRenamed("u", "__x").withColumnRenamed("deg", "deg_u"), F.col("u") == F.col("__x"))
+        und.join(deg.withColumnRenamed("a", "__x").withColumnRenamed("deg", "deg_a"), F.col("a") == F.col("__x"))
         .drop("__x")
-        .join(deg.withColumnRenamed("u", "__y").withColumnRenamed("deg", "deg_v"), F.col("v") == F.col("__y"))
+        .join(deg.withColumnRenamed("a", "__y").withColumnRenamed("deg", "deg_b"), F.col("b") == F.col("__y"))
         .drop("__y")
     )
-    # consumed by both wedge sides + the closing list: materialize
+    # consumed by both wedge sides: materialize
     oriented = (
         ranked.filter(
-            (F.col("deg_u") < F.col("deg_v"))
-            | ((F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v")))
+            (F.col("deg_a") < F.col("deg_b"))
+            | ((F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b")))
         )
-        .select("u", "v")
+        .select("a", "b")
         .localCheckpoint(eager=False)
     )
-    w1 = oriented.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    w2 = oriented.select(F.col("u").alias("b2"), F.col("v").alias("c"))
-    wedges = w1.join(w2, F.col("b") == F.col("b2")).select("a", "b", "c")
-    closing = oriented.select(
-        F.col("u").alias("a2"), F.col("v").alias("c2")
-    ).unionByName(
-        oriented.select(F.col("v").alias("a2"), F.col("u").alias("c2"))
-    )
+    w2 = oriented.select(F.col("a").alias("b2"), F.col("b").alias("c"))
+    wedges = oriented.join(w2, F.col("b") == F.col("b2")).select("a", "b", "c")
+    # the closing edge a-c has either orientation: match it in und,
+    # which holds both
+    closing = und.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
     tri = wedges.join(
         closing,
         (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")),
@@ -513,9 +574,8 @@ def cluster_representatives(
 
     Output: (cluster, rep_id, rep_score, cluster_size).
 
-    Scale shape: components via iterative min-label propagation
-    (bounded rounds, per-round localCheckpoint — see
-    ``connected_components``); the representative choice is ONE hash
+    Scale shape: components via :func:`connected_components`; the
+    representative choice is ONE hash
     aggregation with an argmax encoded as ``min(struct(-score, id))``
     — no window, no per-cluster sort. The negation sits on the
     (numeric) score, not the id, so ANY orderable id type works — a
@@ -573,19 +633,13 @@ def label_propagation(
     Scale shape per round: one join edges⋈labels + two hash
     aggregations ((vertex, label) counts, then per-vertex argmax via
     min(struct(-count, label)) — no window). State = one label per
-    vertex; per-round localCheckpoint truncates lineage exactly as
-    the other iterative operators do."""
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
-    sym = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    vertex."""
+    sym = _undirected(edges, src, dst)
+    labels = (
+        sym.select(F.col("a").alias("id"))
         .distinct()
+        .withColumn("community", F.col("id"))
         .localCheckpoint(eager=True)
-    )
-    verts = sym.select(F.col("a").alias("id")).distinct()
-    labels = verts.withColumn("community", F.col("id")).localCheckpoint(
-        eager=True
     )
     for _ in range(rounds):
         nbr = (
@@ -599,8 +653,7 @@ def label_propagation(
             ).alias("m")
         )
         labels = (
-            verts.join(labels, "id")
-            .join(best, verts.id == best.a, "left")
+            labels.join(best, labels.id == best.a, "left")
             .select(
                 "id",
                 F.coalesce(F.col("m.community"), F.col("community")).alias(
@@ -678,30 +731,19 @@ def sssp(
     ).localCheckpoint(eager=True)
     if e.filter(F.col("w") < 0).limit(1).count() > 0:
         raise ValueError("sssp requires non-negative integer weights")
-    dist = (
+    start = (
         sources.select(F.col(node).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
-        cand = (
-            dist.join(e, dist.node == e.src)
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
+
+    def extend(dist: DataFrame) -> DataFrame:
+        return dist.join(e, dist.node == e.src).select(
+            F.col("dst").alias("node"),
+            (F.col("dist") + F.col("w")).alias("dist"),
         )
-        new = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        # monotone: the fixpoint is reached exactly when no node's
-        # tentative distance improved (anti-join on the pair is empty)
-        if new.join(dist, ["node", "dist"], "left_anti").isEmpty():
-            dist = new
-            break
-        dist = new
-    return dist
+
+    return _relax(start, extend, rounds)
 
 
 def sssp_sql(edges_cte: str, sources_cte: str, rounds: int = 4) -> str:
@@ -752,17 +794,8 @@ def hits(
             f"hits() needs rounds >= 1 (auth is only defined after a "
             f"round), got {rounds}"
         )
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _edges(edges, src, dst)
+    nodes = _nodes(e)
     hub = nodes.withColumn("hub", F.lit(1).cast("long"))
     auth = None
     for _ in range(rounds):
@@ -910,8 +943,6 @@ def random_walks(
     a sink node stop. Frontier size ≤ #walks throughout; the edge
     list shuffles once per step on the join key.
     """
-    from det_module_spark.operators.dedup import stable_hash64
-
     e = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).distinct()
@@ -920,17 +951,9 @@ def random_walks(
         "u", "v", (F.row_number().over(wn) - 1).alias("rk")
     ).localCheckpoint(eager=True)
     deg = nbrs.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
-    frontier = seeds.select(
-        F.col(node).alias("walk_id"), F.col(node).alias("cur")
-    ).distinct()
-    out = frontier.select(
-        "walk_id", F.lit(0).alias("step"), F.col("cur").alias("node")
-    )
-    for t in range(1, steps + 1):
-        draw = stable_hash64(
-            F.concat_ws(":", F.col("walk_id"), F.lit(str(t - 1)), F.col("cur"))
-        )
-        picked = (
+
+    def pick(frontier: DataFrame, draw: Column) -> DataFrame:
+        return (
             frontier.join(deg, frontier.cur == deg.u)
             .select(
                 "walk_id", "cur", (draw % F.col("outdeg")).alias("pick")
@@ -941,13 +964,8 @@ def random_walks(
             )
             .select("walk_id", F.col("v").alias("cur"))
         )
-        frontier = picked.localCheckpoint(eager=True)
-        out = out.unionByName(
-            frontier.select(
-                "walk_id", F.lit(t).alias("step"), F.col("cur").alias("node")
-            )
-        )
-    return out
+
+    return _walk(seeds, node, steps, pick)
 
 
 def random_walks_sql(
@@ -1003,23 +1021,14 @@ def degree_assortativity(
     the estimator orientation-free.
 
     One edge-list self-describing pass: deg agg, two joins back, one
-    moment agg. No windows, no collects. The symmetrized edge list is
-    localCheckpoint-ed (the connected_components discipline): it
-    feeds the degree aggregation AND both endpoint joins, and without
-    the cut the upstream edge derivation re-runs per consumer
-    (measured 24 static scans on the orders⋈lineitem-derived graph).
+    moment agg. No windows, no collects.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
-    sym = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    sym = _undirected(edges, src, dst)
+    deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     pairs = (
-        sym.join(deg, "u")
-        .select(F.col("v").alias("u"), F.col("d").alias("x"))
-        .join(deg, "u")
+        sym.join(deg, "a")
+        .select(F.col("b").alias("a"), F.col("d").alias("x"))
+        .join(deg, "a")
         .select("x", F.col("d").alias("y"))
     )
     m = pairs.agg(
@@ -1096,36 +1105,16 @@ def weighted_random_walks(
     ).localCheckpoint(eager=True)
     if nbrs.filter(F.col("w") <= 0).limit(1).count() > 0:
         raise ValueError("weighted_random_walks requires positive weights")
-    from det_module_spark.operators.dedup import stable_hash64
 
-    frontier = seeds.select(
-        F.col(node).alias("walk_id"), F.col(node).alias("cur")
-    ).distinct()
-    out = frontier.select(
-        "walk_id", F.lit(0).alias("step"), F.col("cur").alias("node")
-    )
-    for t in range(1, steps + 1):
-        draw = stable_hash64(
-            F.concat_ws(
-                ":", F.col("walk_id"), F.lit(str(t - 1)), F.col("cur")
-            )
-        )
+    def pick(frontier: DataFrame, draw: Column) -> DataFrame:
         d = draw % F.col("strength")
-        picked = (
+        return (
             frontier.join(nbrs, frontier.cur == nbrs.u)
             .where((d >= F.col("cum_lo")) & (d < F.col("cum_hi")))
             .select("walk_id", F.col("v").alias("cur"))
         )
-        # eager per-round cut: the out union references every frontier
-        # level; without materialization the final collect recomputes
-        # level t-1 under level t (quadratic in steps — measured)
-        frontier = picked.localCheckpoint(eager=True)
-        out = out.unionByName(
-            frontier.select(
-                "walk_id", F.lit(t).alias("step"), F.col("cur").alias("node")
-            )
-        )
-    return out
+
+    return _walk(seeds, node, steps, pick)
 
 
 def weighted_random_walks_sql(
@@ -1189,41 +1178,23 @@ def nearest_seed(
     form; the oracle unrolls the same rounds with ARG-MIN by
     (hops, seed).
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct().localCheckpoint(eager=True)
-    state = (
+    e = _edges(edges, src, dst)
+    start = (
         seeds.select(F.col(node).alias("node"))
         .distinct()
         .select(
             "node", F.lit(0).alias("hops"), F.col("node").alias("seed")
         )
-        .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
-        cand = (
-            state.join(e, state.node == e.src)
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("hops") + 1).alias("hops"),
-                "seed",
-            )
+
+    def extend(state: DataFrame) -> DataFrame:
+        return state.join(e, state.node == e.src).select(
+            F.col("dst").alias("node"),
+            (F.col("hops") + 1).alias("hops"),
+            "seed",
         )
-        new = (
-            state.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min(F.struct("hops", "seed")).alias("b"))
-            .select("node", F.col("b.hops").alias("hops"),
-                    F.col("b.seed").alias("seed"))
-            .localCheckpoint(eager=True)
-        )
-        if new.join(
-            state, ["node", "hops", "seed"], "left_anti"
-        ).isEmpty():
-            state = new
-            break
-        state = new
-    return state
+
+    return _relax(start, extend, rounds)
 
 
 def nearest_seed_sql(
@@ -1267,20 +1238,18 @@ def clustering_coefficients(
     Composes the degree-oriented triangle listing (O(m^1.5) wedge
     bound, see triangle_listing) with one degree agg; the ratio is a
     single integer div on exact counts — cc_ppm = 2·10⁶·T div
-    (deg·(deg−1)). The symmetrized edge frame is materialized ONCE
-    and shared by the degree agg and the listing — building each its
-    own would run the (often expensive) edge-producing pipeline
-    twice."""
-    und = _symmetrized(edges, src, dst)
-    tri = _corner_counts(_triangles_from_und(und))
-    deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+    (deg·(deg−1)). One edge frame serves the degree agg and the
+    listing."""
+    und = _undirected(edges, src, dst).filter(F.col("a") != F.col("b"))
+    tri = _corner_counts(_triangles(und))
+    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     return (
         deg.where(F.col("deg") >= 2)
         .join(
-            tri.withColumnRenamed("vertex", "u"), "u", "left"
+            tri.withColumnRenamed("vertex", "a"), "a", "left"
         )
         .select(
-            F.col("u").alias("vertex"),
+            F.col("a").alias("vertex"),
             "deg",
             F.coalesce("n_triangles", F.lit(0)).alias("n_triangles"),
             F.expr(
@@ -1310,60 +1279,20 @@ def personalized_pagerank(
     across engines/partitionings; the SQL twin is
     ``personalized_pagerank_sql``. Dangling nodes leak mass
     (documented, as in pagerank). Two shuffles per round; the seed
-    restart term is a seed-count-sized frame joined per round.
+    mass joins the node set once, before the loop.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _edges(edges, src, dst)
     s = seeds.select(F.col("node")).distinct().localCheckpoint(eager=True)
-    n_seeds = s.count()
-    seed_mass = s.withColumn("seed_fp", F.lit(scale // n_seeds))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ranks = (
-        nodes.join(seed_mass, "node", "left")
-        .select(
-            "node", F.coalesce("seed_fp", F.lit(0)).alias("rank_fp")
-        )
+    seed_mass = s.withColumn(
+        "seed_fp", F.lit(scale // s.count()).cast("long")
     )
-    for _ in range(iterations):
-        contrib = (
-            e.join(deg, "src")
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                "dst",
-                _idiv(F.col("rank_fp"), F.col("outdeg")).alias("share"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("share").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .join(seed_mass, "node", "left")
-            .select(
-                "node",
-                (
-                    _idiv(
-                        F.lit(15) * F.coalesce("seed_fp", F.lit(0)),
-                        F.lit(100),
-                    )
-                    + _idiv(
-                        F.lit(85) * F.coalesce("contrib", F.lit(0)),
-                        F.lit(100),
-                    )
-                ).alias("rank_fp"),
-            )
-        )
-        if iterations > 4:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    restart = (
+        _nodes(e)
+        .join(seed_mass, "node", "left")
+        .select("node", F.coalesce("seed_fp", F.lit(0)).alias("seed_fp"))
+        .localCheckpoint(eager=True)
+    )
+    return _rank(e, restart, iterations)
 
 
 def personalized_pagerank_sql(
@@ -1424,10 +1353,9 @@ def temporal_reachability(
     round count gives the exact ≤rounds-hop earliest arrival on every
     engine — same bounded-round contract as sssp. One edge equi-join
     + one min-agg per round."""
-    cols = seeds.columns
-    arr = seeds.select(
+    start = seeds.select(
         F.col("node"),
-        (F.col("arrival") if "arrival" in cols else F.lit(0))
+        (F.col("arrival") if "arrival" in seeds.columns else F.lit(0))
         .cast("long")
         .alias("arrival"),
     ).distinct()
@@ -1436,19 +1364,15 @@ def temporal_reachability(
         F.col(dst).alias("edst"),
         F.col(t).cast("long").alias("et"),
     ).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        ext = (
+
+    def extend(arr: DataFrame) -> DataFrame:
+        return (
             arr.join(e, arr.node == e.esrc)
             .where(F.col("et") >= F.col("arrival"))
             .select(F.col("edst").alias("node"), F.col("et").alias("arrival"))
         )
-        arr = (
-            arr.unionByName(ext)
-            .groupBy("node")
-            .agg(F.min("arrival").alias("arrival"))
-            .localCheckpoint(eager=True)
-        )
-    return arr
+
+    return _relax(start, extend, rounds)
 
 
 def temporal_reachability_sql(

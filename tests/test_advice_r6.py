@@ -3,10 +3,7 @@
 - graph.hits(rounds=0) raises a clear ValueError instead of joining
   against a None auth frame;
 - temporal_reachability_sql can honor a seed ``arrival`` column
-  (parity with the DataFrame twin) via ``seeds_have_arrival``;
-- protorecords._decode_stream yields NULL (not a raise) when a field
-  number arrives at an unexpected wire type — the documented
-  forward-compatibility contract.
+  (parity with the DataFrame twin) via ``seeds_have_arrival``.
 """
 
 import duckdb
@@ -17,7 +14,6 @@ from det_module_spark.operators.graph import (
     temporal_reachability,
     temporal_reachability_sql,
 )
-from det_module_spark.sources.protorecords import _decode_stream, _wire
 
 
 def test_hits_rejects_zero_rounds(spark):
@@ -51,40 +47,6 @@ def test_temporal_reach_sql_honors_seed_arrival(spark):
         map(tuple, temporal_reachability(e, s, rounds=2).collect())
     )
     assert got == [("a", 10)]
-
-
-def _frame(body: bytes) -> bytes:
-    out = bytearray()
-    _wire().write_varint(out, len(body))
-    return bytes(out) + body
-
-
-def test_decode_stream_null_on_wire_type_mismatch():
-    mini = _wire()
-    fields = [(1, "a", "int64"), (2, "s", "string"), (3, "d", "double")]
-
-    # int64 field arrives LENGTH-DELIMITED (wire 2), string arrives as
-    # a VARINT (wire 0), double arrives as a varint (wire 0)
-    body = bytearray()
-    mini.write_varint(body, (1 << 3) | 2)
-    mini.write_varint(body, 3)
-    body += b"xyz"
-    mini.write_varint(body, (2 << 3) | 0)
-    mini.write_varint(body, 42)
-    mini.write_varint(body, (3 << 3) | 0)
-    mini.write_varint(body, 7)
-    recs = list(_decode_stream(_frame(bytes(body)), fields))
-    assert recs == [{"a": None, "s": None, "d": None}]
-
-    # well-typed record still decodes
-    good = bytearray()
-    mini.write_varint(good, (1 << 3) | 0)
-    mini.write_varint(good, 99)
-    mini.write_varint(good, (2 << 3) | 2)
-    mini.write_varint(good, 2)
-    good += b"ok"
-    recs = list(_decode_stream(_frame(bytes(good)), fields))
-    assert recs == [{"a": 99, "s": "ok", "d": None}]
 
 
 def test_similarity_kernels_null_embedding_yields_null(spark):

@@ -2,7 +2,8 @@
 round's plan changes (dense_ids jvm default, ahash multiprobe scheme
 + bounded top-k deliverable).
 
-ADVICE items covered:
+ADVICE items covered (the third, protorecords' staged overwrite,
+went with the module):
 1. chunking.pack_sequences NULL text — the ungrouped branch crashed
    the whole stage (NaN -> to_numpy('int64') ValueError) while the
    grouped branch emitted NULL bins; both now apply the same
@@ -10,14 +11,9 @@ ADVICE items covered:
 2. vector.read_geojson_boundaries per-file id offsets — the chained
    WHEN built an O(#files)-deep expression tree; now a flat
    create_map lookup (constant depth).
-3. protorecords.write_proto_records — deleted the previous dataset
-   BEFORE running the write job; now staged + swapped after success,
-   so a failed rewrite leaves the old shards intact.
 """
 
-import glob
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -128,65 +124,6 @@ def test_geojson_many_files_offsets_flat(spark, tmp_path):
     # create_map once)
     plan = df._jdf.queryExecution().analyzed().toString()
     assert plan.count("CASE WHEN") < n_files
-
-
-# ---------------------------------------------------------------
-# 3. protorecords staged overwrite
-# ---------------------------------------------------------------
-
-FIELDS = [(1, "k", "int64"), (2, "s", "string")]
-
-
-def test_proto_failed_rewrite_preserves_old_data(spark, tmp_path):
-    from det_module_spark.sources.protorecords import (
-        read_proto_records,
-        write_proto_records,
-    )
-
-    path = str(tmp_path / "recs")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string")
-    write_proto_records(df.repartition(2), path, FIELDS)
-    before = sorted(
-        (r["k"], r["s"])
-        for r in read_proto_records(spark, path, FIELDS).collect()
-    )
-    assert before == [(1, "a"), (2, "b")]
-
-    bad = spark.createDataFrame([(9, "z")], "k long, s string")
-    with pytest.raises(Exception):
-        # unknown kind raises inside the executor task -> job fails
-        write_proto_records(bad, path, [(1, "k", "bogus")])
-    after = sorted(
-        (r["k"], r["s"])
-        for r in read_proto_records(spark, path, FIELDS).collect()
-    )
-    assert after == before  # previous dataset fully intact
-    # and no staging litter survives
-    assert not glob.glob(os.path.join(path, ".staging-*"))
-
-
-def test_proto_rewrite_fewer_partitions_drops_stale_shards(
-    spark, tmp_path
-):
-    from det_module_spark.sources.protorecords import (
-        read_proto_records,
-        write_proto_records,
-    )
-
-    path = str(tmp_path / "recs2")
-    wide = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(8)], "k long, s string"
-    )
-    write_proto_records(wide.repartition(4), path, FIELDS)
-    assert len(glob.glob(os.path.join(path, "*.pbrec"))) == 4
-    narrow = spark.createDataFrame([(100, "x")], "k long, s string")
-    write_proto_records(narrow.repartition(1), path, FIELDS)
-    assert len(glob.glob(os.path.join(path, "*.pbrec"))) == 1
-    got = [
-        (r["k"], r["s"])
-        for r in read_proto_records(spark, path, FIELDS).collect()
-    ]
-    assert got == [(100, "x")]  # no resurrected rows
 
 
 # ---------------------------------------------------------------

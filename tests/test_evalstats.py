@@ -209,6 +209,16 @@ def test_pass_at_k_overflow_guard_trips(spark, monkeypatch):
     assert ev.pass_at_k(df, ks=(1,)).collect()[0]["pass_ppm"] == 1_000_000
 
 
+def test_passk_expr_grows_linearly():
+    # each step must hold one copy of the running product: a copy per
+    # CASE branch doubles the text per step and pushes the generated
+    # aggregate past the 64 KB method limit
+    from det_module_spark.operators.evalstats import _passk_expr
+
+    small = len(_passk_expr("n", "c", "k", 4, "div"))
+    assert len(_passk_expr("n", "c", "k", 16, "div")) < 5 * small
+
+
 # ------------------------------------------------------------------
 # mcnemar_pairs
 # ------------------------------------------------------------------

@@ -187,28 +187,33 @@ def test_connected_components_randomized_vs_union_find(spark):
         assert got == want, f"CC mismatch on case n={n_nodes}"
 
 
-@pytest.mark.parametrize("cadence", [2, 3])
-def test_connected_components_lazy_stride_equals_cadence1(spark, cadence):
-    # ADVICE r8: the checkpoint_every>1 lazy-stride path was never
-    # executed by CI (default cadence 1). A long chain forces multiple
-    # pointer-jumping rounds so strides actually span checkpoints, and
-    # the deeply self-referential lazy plans (labels ⋈ sym repeatedly)
-    # must neither trip analyzer self-join ambiguity nor change the
-    # fixpoint. A 16-node path has diameter 15 → ~4 doubling rounds.
-    chain = [(i, i + 1) for i in range(1, 16)]
-    extra = [(30, 31), (31, 32), (40, 41)]
-    edges = spark.createDataFrame(
-        [Row(id_a=a, id_b=b) for a, b in chain + extra]
+@pytest.mark.parametrize(
+    "op",
+    [
+        "connected_components",
+        "label_propagation",
+        "k_core",
+        "degree_assortativity",
+        "clustering_coefficients",
+    ],
+)
+def test_undirected_operators_read_edge_input_once(spark, op):
+    # the edge input is often an expensive pair pipeline: building both
+    # orientations must not run it once per orientation or per consumer
+    from pyspark.sql.types import LongType
+
+    from det_module_spark.operators import graph
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        calls.add(1)
+        return x
+
+    rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 3), (6, 6)]
+    edges = spark.createDataFrame(rows, "src long, raw long").select(
+        "src", F.udf(tick, LongType())("raw").alias("dst")
     )
-    base = {
-        r["id"]: r["component"]
-        for r in connected_components(edges, checkpoint_every=1).collect()
-    }
-    strided = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            edges, checkpoint_every=cadence
-        ).collect()
-    }
-    assert strided == base
-    assert base[15] == 1 and base[32] == 30 and base[41] == 40
+    extra = {"k": 2} if op == "k_core" else {}
+    assert getattr(graph, op)(edges, src="src", dst="dst", **extra).collect()
+    assert calls.value == len(rows)

@@ -58,10 +58,6 @@ DEFERRED = {
     "sources.fixedwidth.read_fixedwidth": "test_wave21_sources",
     "sources.fixedwidth.write_fixedwidth": "test_wave21_sources",
     "sources.fixedwidth.fixedwidth_schema_projection": "test_wave21_sources",
-    "sources.protorecords.read_proto_records": "test_wave21_sources, test_advice_r7, test_review_r6f",
-    "sources.protorecords.write_proto_records": "test_wave21_sources, test_advice_r7, test_review_r6f",
-    "sources.protorecords._decode_stream": "test_wave21_sources, test_advice_r6",
-    "sources.protorecords._encode_record": "test_wave21_sources",
     "sources.binary.ingest_media_dir": "test_binary_maintenance",
     "sources.binary.media_dir_stats": "test_binary_maintenance",
     "sources.maintenance.compact_parquet": "test_binary_maintenance",

@@ -1,7 +1,6 @@
 """Regression pins for the round-6 sixth code-review pass (sources).
 
-Ops/edge-input-only: stale protorecord shards resurrected by a
-smaller re-write, the session-wide nanosAsLong conf leak (current
+Ops/edge-input-only: the session-wide nanosAsLong conf leak (current
 testdata is TIMESTAMP(MICROS) — the conf did nothing but retype
 later reads), MultiPolygon/multi-file GeoJSON, non-integer raster
 temporal tokens killing the doc bundle, the single-file CSV sink
@@ -15,26 +14,6 @@ import os
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
-
-
-def test_write_proto_records_overwrites_stale_shards(spark, tmp_path):
-    from det_module_spark.sources.protorecords import (
-        read_proto_records,
-        write_proto_records,
-    )
-
-    fields = [(1, "id", "int64"), (2, "name", "string")]
-    out = str(tmp_path / "rec")
-    big = spark.createDataFrame(
-        [(i, f"n{i}") for i in range(8)], "id long, name string"
-    ).repartition(4)
-    write_proto_records(big, out, fields)
-    small = spark.createDataFrame([(99, "only")], "id long, name string")
-    small = small.coalesce(1)
-    write_proto_records(small, out, fields)
-    got = read_proto_records(spark, out, fields).collect()
-    # no resurrection of the old 4-shard write
-    assert [(r["id"], r["name"]) for r in got] == [(99, "only")]
 
 
 def test_events_micros_load_leaves_session_conf_alone(spark, tmp_path):

@@ -70,3 +70,32 @@ def test_temporal_reachability_takes_earliest_path(spark):
         for r in temporal_reachability(e, s, rounds=3).collect()
     }
     assert got["c"] == 2
+
+
+def test_temporal_reachability_stops_at_fixpoint(spark):
+    import duckdb
+
+    from det_module_spark.operators.graph import (
+        temporal_reachability,
+        temporal_reachability_sql,
+    )
+
+    # round 1 reaches b at 1 and c at 5 (direct); round 2 improves c
+    # to 2 via b; c -> d (t=1) is in c's past: nothing changes after
+    # round 2, so 8 rounds stop early with the 2-round rows
+    edges = [("a", "b", 1), ("b", "c", 2), ("a", "c", 5), ("c", "d", 1)]
+    e = spark.createDataFrame(edges, ["src", "dst", "t"])
+    s = spark.createDataFrame([("a",)], ["node"])
+
+    def run(rounds):
+        return sorted(
+            map(tuple, temporal_reachability(e, s, rounds=rounds).collect())
+        )
+
+    assert run(2) == [("a", 0), ("b", 1), ("c", 2)]
+    assert run(8) == run(2)
+    edges_cte = " UNION ALL ".join(
+        f"SELECT '{u}' AS src, '{v}' AS dst, {t} AS t" for u, v, t in edges
+    )
+    sql = temporal_reachability_sql(edges_cte, "SELECT 'a' AS node", rounds=8)
+    assert sorted(duckdb.connect().execute(sql).fetchall()) == run(8)

@@ -1,7 +1,4 @@
-"""Units for the round-5 wave-21 sources: fixed-width text and
-varint-delimited protobuf record files."""
-
-import os
+"""Units for the round-5 wave-21 source: fixed-width text."""
 
 
 FW_SPECS = [
@@ -63,62 +60,3 @@ def test_fixedwidth_malformed_numeric_is_null_not_fatal(spark, tmp_path):
     assert r["id"] == 1 and r["name"] == "hello"
     assert r["qty"] is None  # '12ab' -> NULL, scan survives
     assert r["price"] == 3.5
-
-
-PB_FIELDS = [
-    (1, "doc_id", "int64"),
-    (2, "text", "string"),
-    (3, "score", "double"),
-]
-
-
-def test_proto_records_round_trip_multishard(spark, tmp_path):
-    from det_module_spark.sources.protorecords import (
-        read_proto_records,
-        write_proto_records,
-    )
-
-    rows = [
-        (i, "hällo-%d" % i, i * 0.5 - 3) for i in range(50)
-    ] + [(-7, None, None)]
-    df = spark.createDataFrame(
-        rows, ["doc_id", "text", "score"]
-    ).repartition(4)
-    path = str(tmp_path / "pb")
-    write_proto_records(df, path, PB_FIELDS)
-    shards = [f for f in os.listdir(path) if f.endswith(".pbrec")]
-    assert len(shards) == 4  # one shard per partition = read tasks
-    back = read_proto_records(spark, path, PB_FIELDS)
-    got = sorted(
-        (r["doc_id"], r["text"], r["score"]) for r in back.collect()
-    )
-    assert got == sorted(rows)
-
-
-def test_proto_records_skip_unknown_fields(tmp_path):
-    """Forward compatibility: a stream with an extra field decodes."""
-    from det_module_spark.sources.protorecords import (
-        _decode_stream,
-        _encode_record,
-    )
-
-    extra = [(9, "future", "string")] + PB_FIELDS
-    buf = _encode_record(
-        {"future": "x", "doc_id": 5, "text": "t", "score": 1.25}, extra
-    )
-    got = list(_decode_stream(buf, PB_FIELDS))
-    assert got == [{"doc_id": 5, "text": "t", "score": 1.25}]
-
-
-def test_proto_records_negative_int_round_trip(tmp_path):
-    from det_module_spark.sources.protorecords import (
-        _decode_stream,
-        _encode_record,
-    )
-
-    buf = b"".join(
-        _encode_record({"doc_id": v, "text": None, "score": None}, PB_FIELDS)
-        for v in (-1, -(2**62), 2**62, 0)
-    )
-    got = [r["doc_id"] for r in _decode_stream(buf, PB_FIELDS)]
-    assert got == [-1, -(2**62), 2**62, 0]

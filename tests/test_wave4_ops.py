@@ -47,6 +47,30 @@ def test_sssp_round_cap_limits_path_length(spark):
     assert got == {"a": 0, "b": 1, "c": 2}  # d needs 3 hops
 
 
+def test_sssp_fixpoint_test_sees_null_distance_filled(spark):
+    from det_module_spark.operators.graph import sssp
+
+    # round 1 reaches n through a NULL weight (dist NULL); round 2
+    # fills n with 2 while c falls 4 -> 2, so the node count and the
+    # distance sum both hold. Only the non-NULL count shows the change,
+    # and round 3 still lowers d to 3 through n.
+    e = spark.createDataFrame(
+        [
+            ("a", "n", None),
+            ("a", "b", 1),
+            ("a", "c", 4),
+            ("a", "d", 100),
+            ("b", "n", 1),
+            ("b", "c", 1),
+            ("n", "d", 1),
+        ],
+        "src string, dst string, w long",
+    )
+    s = spark.createDataFrame([("a",)], ["node"])
+    got = {r["node"]: r["dist"] for r in sssp(e, s, rounds=6).collect()}
+    assert got == {"a": 0, "b": 1, "c": 2, "n": 2, "d": 3}
+
+
 def test_sssp_rejects_negative_weights(spark):
     from det_module_spark.operators.graph import sssp
 
