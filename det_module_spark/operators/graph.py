@@ -216,6 +216,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     for _ in range(max_iterations):
+        changed = Observation()
         neighbor_min = (
             sym.join(labels, sym.b == labels.id)
             .groupBy("a")
@@ -254,10 +255,11 @@ def connected_components(
                     | (F.col("p_comp") < F.col("component"))
                 ).alias("_changed"),
             )
-            .localCheckpoint(eager=True)
+            .observe(changed, F.sum(F.col("_changed").cast("int")).alias("n"))
+            .select("id", "component")
         )
-        labels = updated.drop("_changed")
-        if updated.filter(F.col("_changed")).isEmpty():
+        labels = updated.localCheckpoint(eager=True)
+        if not changed.get["n"]:
             break
     return labels
 
@@ -339,8 +341,9 @@ def k_core(
     broadcasts the survivor list once it shrinks).
     """
     cur = _undirected(edges, src, dst).filter(F.col("a") != F.col("b"))
-    prev_edges = cur.count()
+    prev_edges = None
     for _ in range(rounds):
+        seen = Observation()
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("c"))
         keep = deg.filter(F.col("c") >= k).select("a")
         cur = (
@@ -348,12 +351,14 @@ def k_core(
             .join(
                 keep.select(F.col("a").alias("b")), "b", "left_semi"
             )
+            .observe(seen, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        # count on the just-materialized checkpoint is near-free; an
-        # unchanged edge count means no endpoint was peeled (peeling
-        # is monotone), so the fixpoint is reached
-        n_edges = cur.count()
+        # the checkpoint job counts its own rows; an unchanged edge
+        # count means no endpoint was peeled (peeling is monotone), so
+        # the fixpoint is reached. The first round has nothing to
+        # compare with: a count of the input would be a job of its own
+        n_edges = seen.get["n"]
         if n_edges == prev_edges:
             break
         prev_edges = n_edges

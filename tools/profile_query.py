@@ -25,28 +25,13 @@ def main() -> None:
     ap.add_argument("--conf", action="append", default=[])
     args = ap.parse_args()
 
-    import os
-
     os.environ["SPARK_GRAFT_SF_DIR"] = args.sf
-    from pyspark.sql import SparkSession
-
-    from det_module_spark.session import CODEGEN_CACHE_ENTRIES, spark_cpus
-
-    b = (
-        SparkSession.builder.master(f"local[{spark_cpus()}]")
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-    )
-    for kv in args.conf:
-        k, _, v = kv.partition("=")
-        b = b.config(k, v)
-    b.getOrCreate()
-
     import __spark_entry__ as mod
     from det_module_spark.session import get_spark
     from det_module_spark.sources.tables import TABLES, load_table
 
-    spark = get_spark("profile-query")
+    conf = {"spark.ui.enabled": "true", **dict(kv.split("=", 1) for kv in args.conf)}
+    spark = get_spark("profile-query", conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     from pyspark.sql.functions import pandas_udf as _pudf

@@ -36,32 +36,12 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    import os
-
     os.environ["SPARK_GRAFT_SF_DIR"] = args.sf
     import __spark_entry__ as mod
-    from det_module_spark.session import CODEGEN_CACHE_ENTRIES, get_spark, spark_cpus
+    from det_module_spark.session import get_spark
     from det_module_spark.sources.tables import TABLES, load_table
 
-    if args.conf:
-        # apply experiment confs on the builder BEFORE the session
-        # exists (conf on a live session won't move static ones)
-        from pyspark.sql import SparkSession
-
-        b = SparkSession.builder.master(f"local[{spark_cpus()}]").config(
-            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
-        )
-        for kv in args.conf:
-            k, _, v = kv.partition("=")
-            b = b.config(k, v)
-        b.getOrCreate()
-    spark = get_spark("time-query")
-    for kv in args.conf:
-        k, _, v = kv.partition("=")
-        try:
-            spark.conf.set(k, v)
-        except Exception as e:  # noqa: BLE001 - static conf, builder set it
-            print(f"# conf {k} static: {e}")
+    spark = get_spark("time-query", conf=dict(kv.split("=", 1) for kv in args.conf))
     spark.sparkContext.setLogLevel("ERROR")
     # same warmup as bench.py: JVM/codegen/Arrow + table persistence
     spark.range(1000).selectExpr("sum(id)").collect()
