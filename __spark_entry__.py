@@ -6714,12 +6714,23 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-def _supplier_comps(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _supplier_comps(
+    spark: SparkSession, sf_dir: str, board: bool = False
+) -> DataFrame:
     # preference "games" synthesized from lineitem — within each
     # order, every pair of line numbers with distinct suppliers and
     # distinct prices is one game, won by the pricier line's supplier
-    # (shared by bt_strengths and elo_ratings; SQL twin below)
-    li = load_table(spark, sf_dir, "lineitem").select(
+    # (SQL twin below). ``board`` keeps the fixed leaderboard slice,
+    # suppliers 1..100 (_BOARD_COMPS_SQL): an SF-INDEPENDENT board for
+    # the triad queries (preference_cycles, cycles_by_gap), whose
+    # enumeration is inherently ~C(board, 3) — TPC-H grows the
+    # supplier dim with SF, but their work must scale with the GAMES a
+    # fixed board played. The suppkey filter sits BEFORE the order
+    # self-join so it reaches both parquet scans.
+    li = load_table(spark, sf_dir, "lineitem")
+    if board:
+        li = li.filter(F.col("l_suppkey") <= 100)
+    li = li.select(
         "l_orderkey", "l_linenumber", "l_suppkey", "l_extendedprice"
     )
     a = li.select(
@@ -6762,50 +6773,6 @@ _SUPPLIER_COMPS_SQL = """
        AND a.l_linenumber < b.l_linenumber
       WHERE a.l_suppkey <> b.l_suppkey
         AND a.l_extendedprice <> b.l_extendedprice"""
-
-
-def _board_comps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Fixed leaderboard slice of the supplier games: suppliers 1..100
-    # (an SF-INDEPENDENT board — TPC-H grows the supplier dim with
-    # SF, but a triad/transitivity audit is a bounded-leaderboard
-    # operation: work must scale with the GAMES a fixed board played,
-    # not with how many other players exist). The suppkey filter sits
-    # BEFORE the order self-join so it reaches both parquet scans.
-    # Used by the triad queries (preference_cycles, cycles_by_gap),
-    # whose enumeration is inherently ~C(board, 3).
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_suppkey") <= 100
-    ).select(
-        "l_orderkey", "l_linenumber", "l_suppkey", "l_extendedprice"
-    )
-    a = li.select(
-        F.col("l_orderkey").alias("ok"),
-        F.col("l_linenumber").alias("ln_a"),
-        F.col("l_suppkey").alias("sk_a"),
-        F.col("l_extendedprice").alias("pr_a"),
-    )
-    b = li.select(
-        F.col("l_orderkey").alias("ok"),
-        F.col("l_linenumber").alias("ln_b"),
-        F.col("l_suppkey").alias("sk_b"),
-        F.col("l_extendedprice").alias("pr_b"),
-    )
-    return (
-        a.join(b, "ok")
-        .filter(F.col("ln_a") < F.col("ln_b"))
-        .filter(
-            (F.col("sk_a") != F.col("sk_b"))
-            & (F.col("pr_a") != F.col("pr_b"))
-        )
-        .select(
-            F.when(F.col("pr_a") > F.col("pr_b"), F.col("sk_a"))
-            .otherwise(F.col("sk_b"))
-            .alias("winner"),
-            F.when(F.col("pr_a") > F.col("pr_b"), F.col("sk_b"))
-            .otherwise(F.col("sk_a"))
-            .alias("loser"),
-        )
-    )
 
 
 _BOARD_COMPS_SQL = """
@@ -7138,12 +7105,12 @@ def q_preference_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the consistency check that justifies (or indicts) the scalar
     # bt_strengths/elo_ratings fits over the same games. Gated by
     # tests/test_r10_queue.py with the driver's comparison. Runs on
-    # the FIXED 100-supplier board (_board_comps): triad work is
+    # the FIXED 100-supplier board (``board=True``): triad work is
     # ~C(board, 3) by nature, and the board must not grow with SF —
     # the corpus pass over the games stays full-size.
     from det_module_spark.operators.prefstats import preference_cycles
 
-    return preference_cycles(_board_comps(spark, sf_dir))
+    return preference_cycles(_supplier_comps(spark, sf_dir, board=True))
 
 
 def _preference_cycles_sql() -> str:
@@ -7258,14 +7225,15 @@ def q_cycles_by_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closeness — is the supplier log's intransitivity concentrated
     # in near-tied triples (benign) or flat across gaps (rubric
     # noise)? Exact integer counts per gap bucket. Runs on the FIXED
-    # 100-supplier board (_board_comps): per-triad gap classification
-    # is inherently an enumeration (~C(board, 3)), so the board must
-    # not grow with SF — the corpus pass over the games stays full.
+    # 100-supplier board (``board=True``): per-triad gap
+    # classification is inherently an enumeration (~C(board, 3)), so
+    # the board must not grow with SF — the corpus pass over the games
+    # stays full.
     from det_module_spark.operators.prefstats import cycles_by_gap
 
-    return cycles_by_gap(_board_comps(spark, sf_dir)).orderBy(
-        "gap_bucket"
-    )
+    return cycles_by_gap(
+        _supplier_comps(spark, sf_dir, board=True)
+    ).orderBy("gap_bucket")
 
 
 def _cycles_by_gap_sql() -> str:
@@ -7604,27 +7572,22 @@ def entry(spark: SparkSession) -> DataFrame:
 #      sorted by their latest round in CORRECTNESS_r*.json, then by
 #      name (names with no record sort first).
 # The registry keeps its own order after the window.
-# the request path and the nine perfbench query_mix queries (the
-# benchmark's workloads; their driver JVM now starts from the
-# class-data archive, session.py), then the registered callers of
-# connected_components and k_core, whose fixpoint tests now read a
-# metric observed by the checkpoint job
+# the preference family: bt_strengths/elo_ratings and the prefstats
+# queries now share one pair aggregation, endpoint explode and lookup,
+# and the supplier-games builder is one function
 _CHANGED_PATHS = [
-    "request_lifecycle",
-    "events_running_totals",
-    "bfs_reach",
-    "dedup_minhash_lsh",
-    "similarity_lsh_topk",
-    "msr_pipeline",
-    "wide_merge",
-    "tpch_q9",
-    "tpch_q1",
-    "cache_anti_join",
-    "cluster_representatives",
-    "dedup_clusters",
-    "entity_resolution",
-    "k_core",
-    "leakage_safe_split",
+    "bt_strengths",
+    "elo_ratings",
+    "rank_agreement",
+    "elo_calibration",
+    "win_rate_matrix",
+    "length_bias",
+    "supplier_rank_tau",
+    "preference_cycles",
+    "copeland_ranking",
+    "cycles_by_gap",
+    "pairwise_coverage",
+    "player_consistency",
 ]
 _WINDOW = 50
 

@@ -46,6 +46,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from det_module_spark.operators.prefstats import (
+    _e_bp,
+    _endpoints,
+    _lookup,
+    _pairs,
+    pair_counts,
+)
+
 
 Q = 1_000_000  # θ quantization: θ_real ≈ theta_q / Q
 QT = 10_000  # per-pair term quantization before the exact sum
@@ -70,6 +78,30 @@ def _overflow_guard(col: str, what: str, limit: int):
             )
         ).cast("long"),
     ).otherwise(F.col(col))
+
+
+def _player_stats(pairs: DataFrame) -> DataFrame:
+    """Per-player totals of a (lo, hi, n, w_lo) pair table →
+    (player, j opponents, games, wins), from one explode of both
+    endpoints (w_lo wins to lo, n − w_lo to hi). A lo == hi self-pair
+    credits its player 2n games and 0 + n = n wins."""
+    return (
+        _endpoints(
+            pairs,
+            [F.col("lo").alias("player"), "n", F.col("w_lo").alias("w")],
+            [
+                F.col("hi").alias("player"),
+                "n",
+                (F.col("n") - F.col("w_lo")).alias("w"),
+            ],
+        )
+        .groupBy("player")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("j"),
+            F.sum("n").cast("long").alias("games"),
+            F.sum("w").cast("long").alias("wins"),
+        )
+    )
 
 
 def bt_strengths(
@@ -101,132 +133,56 @@ def bt_strengths(
     filters sk_a != sk_b).
 
     Scale shape per round: games ⋈ θ (twice, equi-joins on player),
-    a two-way union, one hash aggregation per player, θ re-joined —
-    shuffle ∝ distinct pairs, state ∝ players, localCheckpoint per
-    round to cut lineage (pagerank discipline). No collect, no
-    window, no float. The (games, wins) base is ONE corpus
-    aggregation — wins derive from the pair table's w_lo split
+    one explode of both endpoints, one hash aggregation per player,
+    θ re-joined — shuffle ∝ distinct pairs, state ∝ players,
+    localCheckpoint per round to cut lineage (pagerank discipline).
+    No collect, no window, no float. The (games, wins) base is ONE
+    corpus aggregation — wins derive from the pair table's w_lo split
     (w_lo to lo, n − w_lo to hi; a lo == hi self-pair row credits
     its player 0 + n = n, exactly the direct per-winner count), so
     the log is scanned once, not twice (optimization r10).
     """
     if pair_table is None:
-        c = comparisons.filter(
-            F.col(winner).isNotNull() & F.col(loser).isNotNull()
-        )
-        pt = (
-            c.select(
-                F.least(F.col(winner), F.col(loser)).alias("lo"),
-                F.greatest(F.col(winner), F.col(loser)).alias("hi"),
-                F.when(F.col(winner) < F.col(loser), F.lit(1))
-                .otherwise(F.lit(0))
-                .alias("lo_won"),
-            )
-            .groupBy("lo", "hi")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("lo_won").cast("long").alias("w_lo"),
-            )
-            .withColumn(
-                "n", _overflow_guard("n", "games-per-pair", overflow_limit)
-            )
-            .localCheckpoint(eager=True)
-        )
-    else:
-        pt = pair_table.withColumn(
-            "n", _overflow_guard("n", "games-per-pair", overflow_limit)
-        )
+        # NULLs only: a self-game stays as a lo == hi row
+        pair_table = _pairs(
+            comparisons.dropna(subset=[winner, loser]), winner, loser
+        ).localCheckpoint(eager=True)
+    pt = pair_table.withColumn(
+        "n", _overflow_guard("n", "games-per-pair", overflow_limit)
+    )
     games = pt.select("lo", "hi", "n")
-    # per-player stats in ONE explode pass over the pair table
-    # (optimization r10): the old shape ran three separate
-    # union-the-two-endpoints aggregations (players distinct, wins,
-    # n_games), each re-scanning both pair-table branches, plus a
-    # players ⋈ wins backfill join — one explode-both-endpoints pass
-    # (a union's branches are planned/executed independently; explode
-    # reads the table once) produces all of them and materializes a
-    # player-dim table every later join reads.
-    # Values are unchanged: wins = Σ(w_lo to lo, n−w_lo to hi) is the
-    # per-winner count (a lo == hi self-pair credits 0 + n = n), a
-    # player with no wins sums to 0 (the old coalesce(w, 0)), and
-    # games = Σ n over both endpoint branches (a self-pair counts 2n
-    # in both shapes).
     stats = (
-        pt.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("lo").alias("player"),
-                        F.col("n").alias("n"),
-                        F.col("w_lo").alias("w"),
-                    ),
-                    F.struct(
-                        F.col("hi").alias("player"),
-                        F.col("n").alias("n"),
-                        (F.col("n") - F.col("w_lo")).alias("w"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.player", "e.n", "e.w")
-        .groupBy("player")
-        .agg(
-            F.sum("n").cast("long").alias("games"),
-            F.sum("w").cast("long").alias("w"),
-        )
-        .withColumn("w", _overflow_guard("w", "wins", overflow_limit))
+        _player_stats(pt)
+        .withColumn("wins", _overflow_guard("wins", "wins", overflow_limit))
         .localCheckpoint(eager=True)
     )
-    wins_full = stats.select("player", "w")
-    n_games = stats.select("player", "games")
-    theta = stats.select(
-        "player", F.lit(Q).cast("long").alias("theta_q")
-    )
+    theta = stats.select("player", F.lit(Q).cast("long").alias("theta_q"))
 
     for _ in range(rounds):
-        t_lo = theta.select(
-            F.col("player").alias("lo"), F.col("theta_q").alias("th_lo")
+        terms = _lookup(
+            games, theta, "player", "theta_q", lo="th_lo", hi="th_hi"
+        ).select(
+            "lo",
+            "hi",
+            F.expr(f"(n * {Q}L * {QT}L) div (th_lo + th_hi)").alias("tq"),
         )
-        t_hi = theta.select(
-            F.col("player").alias("hi"), F.col("theta_q").alias("th_hi")
-        )
-        terms = (
-            games.join(t_lo, "lo")
-            .join(t_hi, "hi")
-            .select(
-                "lo",
-                "hi",
-                F.expr(f"(n * {Q}L * {QT}L) div (th_lo + th_hi)").alias(
-                    "tq"
-                ),
-            )
-        )
-        # explode-both-endpoints instead of a union of two projections
-        # of ``terms`` (optimization r10): a union's branches are
-        # planned independently, so the old shape computed the
-        # games ⋈ θ ⋈ θ probe — and exchanged the pair table — TWICE
-        # per round; the explode computes it once. Same multiset of
-        # (player, tq) rows, same exact-integer sum.
         denom = (
-            terms.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("lo").alias("player"), F.col("tq")),
-                        F.struct(F.col("hi").alias("player"), F.col("tq")),
-                    )
-                ).alias("e")
+            _endpoints(
+                terms,
+                [F.col("lo").alias("player"), "tq"],
+                [F.col("hi").alias("player"), "tq"],
             )
-            .select("e.player", "e.tq")
             .groupBy("player")
             .agg(F.sum("tq").cast("long").alias("denomq"))
         )
         theta = (
             theta.join(denom, "player")
-            .join(wins_full, "player")
+            .join(stats, "player")
             .select(
                 "player",
                 F.when(F.col("denomq") > 0, F.greatest(
                     F.lit(1).cast("long"),
-                    F.expr(f"(w * {QT}L * {Q}L) div denomq"),
+                    F.expr(f"(wins * {QT}L * {Q}L) div denomq"),
                 ))
                 .otherwise(F.col("theta_q"))
                 .cast("long")
@@ -234,15 +190,8 @@ def bt_strengths(
             )
             .localCheckpoint(eager=True)
         )
-    return (
-        theta.join(wins_full, "player")
-        .join(n_games, "player")
-        .select(
-            "player",
-            "theta_q",
-            F.col("w").alias("wins"),
-            "games",
-        )
+    return theta.join(stats, "player").select(
+        "player", "theta_q", "wins", "games"
     )
 
 
@@ -305,123 +254,40 @@ def elo_ratings(
     run ONE corpus aggregation for all their fits instead of one per
     fit (guide §2.4); the overflow guard is still applied here.
     """
-    limit = overflow_limit
     if pair_table is None:
-        c = comparisons.filter(
-            F.col(winner).isNotNull()
-            & F.col(loser).isNotNull()
-            & (F.col(winner) != F.col(loser))
-        )
-        pairs = (
-            c.select(
-                F.least(F.col(winner), F.col(loser)).alias("lo"),
-                F.greatest(F.col(winner), F.col(loser)).alias("hi"),
-                F.when(F.col(winner) < F.col(loser), F.lit(1))
-                .otherwise(F.lit(0))
-                .alias("lo_won"),
-            )
-            .groupBy("lo", "hi")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("lo_won").cast("long").alias("w_lo"),
-            )
-            .withColumn(
-                "n", _overflow_guard("n", "games-per-pair", limit)
-            )
-            .localCheckpoint(eager=True)
-        )
-    else:
-        pairs = pair_table.withColumn(
-            "n", _overflow_guard("n", "games-per-pair", limit)
-        )
-    # per-player stats in ONE explode pass over the pair table
-    # (optimization r10): players, J_i (opponents, round-invariant),
-    # wins and games all come from the same two-endpoint expansion —
-    # the old shape ran four separate union aggregations, each
-    # re-scanning both pair-table branches (a union's branches are
-    # planned/executed independently; explode reads the table once).
-    # Values unchanged.
-    stats = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("lo").alias("player"),
-                        F.col("n").alias("n"),
-                        F.col("w_lo").alias("w"),
-                    ),
-                    F.struct(
-                        F.col("hi").alias("player"),
-                        F.col("n").alias("n"),
-                        (F.col("n") - F.col("w_lo")).alias("w"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.player", "e.n", "e.w")
-        .groupBy("player")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("j"),
-            F.sum("n").cast("long").alias("games"),
-            F.sum("w").cast("long").alias("wins"),
-        )
-        .localCheckpoint(eager=True)
+        pair_table = pair_counts(comparisons, winner, loser)
+    pairs = pair_table.withColumn(
+        "n", _overflow_guard("n", "games-per-pair", overflow_limit)
     )
-    opp = stats.select("player", "j")
+    # J_i (opponent count) is round-invariant
+    stats = _player_stats(pairs).localCheckpoint(eager=True)
     ratings = stats.select(
         "player", F.lit(ELO_INIT_MILLI).cast("long").alias("rating_milli")
     )
 
-    e_bp = (
-        "CAST(FLOOR(10000.0 / (1.0 + POW(10.0, "
-        "(r_hi - r_lo) / 400000.0)) + 0.5) AS BIGINT)"
-    )
     for _ in range(rounds):
-        r_lo = ratings.select(
-            F.col("player").alias("lo"), F.col("rating_milli").alias("r_lo")
+        terms = _lookup(
+            pairs, ratings, "player", "rating_milli", lo="r_lo", hi="r_hi"
+        ).select(
+            "lo", "hi", "n", "w_lo", _e_bp("(r_hi - r_lo)").alias("e_lo_bp")
         )
-        r_hi = ratings.select(
-            F.col("player").alias("hi"), F.col("rating_milli").alias("r_hi")
-        )
-        terms = (
-            pairs.join(r_lo, "lo")
-            .join(r_hi, "hi")
-            .select(
-                "lo",
-                "hi",
-                "n",
-                "w_lo",
-                F.expr(e_bp).alias("e_lo_bp"),
-            )
-        )
-        # explode-both-endpoints instead of a union of two projections
-        # of ``terms`` (optimization r10): the old shape computed the
-        # pairs ⋈ r ⋈ r probe — and exchanged the pair table — TWICE
-        # per round. Same multiset of (player, s_bp) rows.
         deltas = (
-            terms.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("lo").alias("player"),
-                            F.expr(
-                                "(w_lo * 10000L) div n - e_lo_bp"
-                            ).alias("s_bp"),
-                        ),
-                        F.struct(
-                            F.col("hi").alias("player"),
-                            F.expr(
-                                "((n - w_lo) * 10000L) div n "
-                                "- (10000L - e_lo_bp)"
-                            ).alias("s_bp"),
-                        ),
-                    )
-                ).alias("e")
+            _endpoints(
+                terms,
+                [
+                    F.col("lo").alias("player"),
+                    F.expr("(w_lo * 10000L) div n - e_lo_bp").alias("s_bp"),
+                ],
+                [
+                    F.col("hi").alias("player"),
+                    F.expr(
+                        "((n - w_lo) * 10000L) div n - (10000L - e_lo_bp)"
+                    ).alias("s_bp"),
+                ],
             )
-            .select("e.player", "e.s_bp")
             .groupBy("player")
             .agg(F.sum("s_bp").cast("long").alias("s_sum"))
-            .join(opp, "player")
+            .join(stats, "player")
             .select(
                 "player",
                 F.expr(
@@ -443,9 +309,9 @@ def elo_ratings(
             .localCheckpoint(eager=True)
         )
 
-    return ratings.join(
-        stats.select("player", "wins", "games"), "player"
-    ).select("player", "rating_milli", "wins", "games")
+    return ratings.join(stats, "player").select(
+        "player", "rating_milli", "wins", "games"
+    )
 
 
 def elo_sql(

@@ -112,112 +112,6 @@ def decode_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
     return media.mapInPandas(batches, schema=DECODED_SCHEMA)
 
 
-def decode_features_arrow(media: DataFrame, feat_dim: int = 8) -> DataFrame:
-    """``decode_features`` on ``mapInArrow``: the fake-decode byte
-    fold runs as ONE vectorized ``np.bincount`` over the Arrow binary
-    buffers for the whole batch (position-sums mod 1000 distribute
-    over addition, so per-step and at-end reduction agree; float64
-    weights keep byte sums < 2^53 exact); only the md5 stays a
-    per-blob loop (hashlib wants bytes). Row-identical to
-    ``decode_features`` (pinned by test).
-
-    Adoption status (ROUND_NOTES r8): NOT the default. Offline the
-    kernel is ~3x faster than the pandas loop (0.08s vs 0.24s per 5k
-    blobs), but inside Spark a fresh Python worker pays ~2s of
-    one-time numpy lazy-init, so warm-worker runs only reach parity
-    with the pandas path (0.44s vs 0.50s) and cold ones lose. With a
-    REAL codec (the decode itself dominating) or hot long-lived
-    workers, switch to this variant; the plumbing is proven."""
-
-    def batches(it: Iterator) -> Iterator:
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        list_t = pa.list_(pa.float32())
-        for rb in it:
-            names = rb.schema.names
-            mid = rb.column(names.index("media_id"))
-            kind = rb.column(names.index("kind"))
-            arr = rb.column(names.index("content"))
-            m = len(arr)
-            if m == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        mid,
-                        kind,
-                        pa.array([], type=pa.int32()),
-                        pa.array([], type=pa.string()),
-                        pa.array([], type=list_t),
-                    ],
-                    names=list(DECODED_SCHEMA.names),
-                )
-                continue
-            off, data, null_mask = _binary_buffers(arr, m)
-            lens = off[1:] - off[:-1]
-            valid = ~null_mask
-            # feature fold, whole batch at once: byte j of row i lands
-            # in accumulator cell (i, j % feat_dim). np.bincount over a
-            # flat cell index (float64 weights: byte sums < 2^53 stay
-            # EXACT) — measured 4x cheaper cold and 3x faster warm
-            # than the np.add.at 2-D scatter it replaces.
-            total = int(off[-1] - off[0])
-            acc = np.zeros((m, feat_dim), dtype=np.int64)
-            if total:
-                row_of = np.repeat(np.arange(m), lens)
-                local = np.arange(total, dtype=np.int64) - np.repeat(
-                    off[:-1] - off[0], lens
-                )
-                acc = (
-                    np.bincount(
-                        row_of * feat_dim + (local % feat_dim),
-                        weights=data[off[0] : off[-1]].astype(
-                            np.float64
-                        ),
-                        minlength=m * feat_dim,
-                    )
-                    .reshape(m, feat_dim)
-                    .astype(np.int64)
-                )
-            feat = (acc % 1000).astype(np.float32) / np.float32(1000.0)
-            values = pa.array(feat[valid].ravel(), type=pa.float32())
-            counts = np.where(valid, feat_dim, 0).astype(np.int64)
-            offsets = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(counts, out=offsets[1:])
-            off_py = [
-                int(offsets[i]) if (i == m or valid[i]) else None
-                for i in range(m + 1)
-            ]
-            feat_arr = pa.ListArray.from_arrays(
-                pa.array(off_py, type=pa.int32()), values
-            )
-            md5 = pa.array(
-                [
-                    (
-                        hashlib.md5(
-                            data[off[i] : off[i + 1]].tobytes()
-                        ).hexdigest()
-                        if valid[i]
-                        else None
-                    )
-                    for i in range(m)
-                ],
-                type=pa.string(),
-            )
-            n_bytes = pa.array(
-                np.where(valid, lens, 0).astype(np.int32),
-                type=pa.int32(),
-                mask=null_mask,
-            )
-            yield pa.RecordBatch.from_arrays(
-                [mid, kind, n_bytes, md5, feat_arr],
-                names=list(DECODED_SCHEMA.names),
-            )
-
-    return media.mapInArrow(batches, schema=DECODED_SCHEMA)
-
-
 def frame_sample_plan(
     media: DataFrame, every_ms: int = 1000
 ) -> DataFrame:
@@ -271,105 +165,6 @@ def sample_pixels(media: DataFrame, n: int = 64) -> DataFrame:
             yield pd.DataFrame({"media_id": pdf["media_id"], "px": px})
 
     return media.select("media_id", "content").mapInPandas(
-        batches, schema=PIXELS_SCHEMA
-    )
-
-
-def _binary_buffers(arr, n_rows: int):
-    """(offsets int64[n+1], data uint8[], null_mask bool[n]) views over
-    an Arrow binary array's raw buffers — zero-copy, slice-aware."""
-    import numpy as np
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    _, buf_off, buf_data = arr.buffers()
-    # binary carries int32 offsets, large_binary int64 — parsing the
-    # wrong width reads garbage offsets silently (Spark 4 sends
-    # binary today; spark.sql.execution.arrow.useLargeVarTypes flips
-    # it to large_binary)
-    off_dtype = (
-        np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    )
-    off = np.frombuffer(buf_off, dtype=off_dtype)[
-        arr.offset : arr.offset + n_rows + 1
-    ].astype(np.int64)
-    data = (
-        np.frombuffer(buf_data, dtype=np.uint8)
-        if buf_data is not None
-        else np.zeros(0, dtype=np.uint8)
-    )
-    null_mask = arr.is_null().to_numpy(zero_copy_only=False)
-    return off, data, null_mask
-
-
-def sample_pixels_arrow(media: DataFrame, n: int = 64) -> DataFrame:
-    """``sample_pixels`` on ``mapInArrow``: the same evenly-spaced
-    byte sampler, but computed as ONE numpy gather over the Arrow
-    binary buffers instead of a per-blob Python loop — no pandas
-    object column of bytes is ever materialized. Row-identical to
-    ``sample_pixels`` (pinned by test).
-
-    Adoption status (ROUND_NOTES r8): NOT the default. Measured on
-    the sf0.1 media table, warm-worker medians are 0.35s (arrow) vs
-    0.43s (pandas) — a real but modest win — while a FRESH Python
-    worker pays ~0.5-2s of one-time numpy lazy-init the pure-Python
-    pandas kernel never triggers. On a long-lived cluster (workers
-    hot for hours) prefer this variant; for the bench's many short
-    jobs the pandas path is the steadier default."""
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pyarrow as pa
-
-        for rb in it:
-            names = rb.schema.names
-            mid = rb.column(names.index("media_id"))
-            arr = rb.column(names.index("content"))
-            m = len(arr)
-            empty = pa.array([], type=pa.list_(pa.int32()))
-            if m == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [mid, empty], names=["media_id", "px"]
-                )
-                continue
-            off, data, null_mask = _binary_buffers(arr, m)
-            lens = off[1:] - off[:-1]
-            valid = (~null_mask) & (lens > 0)
-            starts = off[:-1]
-            if len(data):
-                k = np.arange(n, dtype=np.int64)
-                # evenly spaced byte index per (row, k):
-                # start + (k*len)//n
-                idx = starts[:, None] + (k[None, :] * lens[:, None]) // n
-                idx = np.clip(idx, 0, len(data) - 1)
-                px = data[idx].astype(np.int32)
-            else:  # every blob in the batch is NULL/empty
-                px = np.zeros((m, n), dtype=np.int32)
-            values = pa.array(px[valid].ravel(), type=pa.int32())
-            counts = np.where(valid, n, 0).astype(np.int64)
-            offsets = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(counts, out=offsets[1:])
-            if valid.all():
-                la = pa.ListArray.from_arrays(
-                    pa.array(offsets, type=pa.int32()), values
-                )
-            else:
-                # ListArray.from_arrays: a null at offsets[i] makes
-                # entry i NULL (not empty); the final offset stays
-                # valid to close the buffer
-                off_py = [
-                    int(offsets[i]) if (i == m or valid[i]) else None
-                    for i in range(m + 1)
-                ]
-                la = pa.ListArray.from_arrays(
-                    pa.array(off_py, type=pa.int32()), values
-                )
-            yield pa.RecordBatch.from_arrays(
-                [mid, la], names=["media_id", "px"]
-            )
-
-    return media.select("media_id", "content").mapInArrow(
         batches, schema=PIXELS_SCHEMA
     )
 

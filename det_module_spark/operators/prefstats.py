@@ -45,6 +45,186 @@ def _ppm(expr: str) -> str:
     return f"CAST(FLOOR(({expr}) * 1.0e6 + 0.5e0) AS BIGINT)"
 
 
+# --- shared pieces of the preference family (here and btrank.py) ---
+
+
+def _pairs(log: DataFrame, winner: str, loser: str) -> DataFrame:
+    """Lazy unordered head-to-head records of an already-filtered
+    comparison log → (lo, hi, n, w_lo): n games between lo <= hi,
+    w_lo of them won by the smaller id. A self-game stays a
+    lo == hi row with w_lo = 0; callers that must not see it filter
+    it out first."""
+    return (
+        log.select(
+            F.least(F.col(winner), F.col(loser)).alias("lo"),
+            F.greatest(F.col(winner), F.col(loser)).alias("hi"),
+            F.when(F.col(winner) < F.col(loser), F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("lo_won"),
+        )
+        .groupBy("lo", "hi")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("lo_won").cast("long").alias("w_lo"),
+        )
+    )
+
+
+def _endpoints(df: DataFrame, lo: list, hi: list) -> DataFrame:
+    """Both endpoints of every row: each row becomes two, the first
+    with the ``lo`` columns, the second with the ``hi`` columns (same
+    names, same order). One explode reads ``df`` once, where a union
+    of two projections plans and runs it once per branch."""
+    return df.select(
+        F.explode(F.array(F.struct(*lo), F.struct(*hi))).alias("e")
+    ).select("e.*")
+
+
+def _lookup(
+    df: DataFrame, table: DataFrame, key: str, value: str, **ends: str
+) -> DataFrame:
+    """Equi-join ``table``'s per-player ``value`` (keyed by ``key``)
+    onto each endpoint column of ``df``: ``ends`` maps an endpoint
+    column to the name its looked-up value gets."""
+    for end, out in ends.items():
+        df = df.join(
+            table.select(F.col(key).alias(end), F.col(value).alias(out)),
+            end,
+        )
+    return df
+
+
+def _e_bp(d_milli: str):
+    """The Elo logistic expectation 1/(1 + 10^(d/400)) of a rating
+    deficit ``d_milli`` (an exact milli-point SQL expression),
+    quantized to basis points — the only float in the Elo algebra,
+    the same double expression as the DuckDB twins (pow caveat in
+    ``btrank.elo_ratings``)."""
+    return F.expr(
+        "CAST(FLOOR(10000.0 / (1.0 + POW(10.0, "
+        f"{d_milli} / 400000.0)) + 0.5) AS BIGINT)"
+    )
+
+
+def _n_players(pairs: DataFrame) -> DataFrame:
+    """1-row (n_players): distinct endpoints of a pair table."""
+    return _endpoints(
+        pairs, [F.col("lo").alias("p")], [F.col("hi").alias("p")]
+    ).agg(F.count_distinct("p").cast("long").alias("n_players"))
+
+
+def _copeland(pairs: DataFrame) -> DataFrame:
+    """Copeland points of a pair table → (player, pairs_played,
+    pairs_won, pairs_lost, pairs_tied, copeland2): the strict-majority
+    winner of each pair scores 2, the loser 0, a tie 1 each."""
+    pts = (
+        F.when(2 * F.col("w_lo") > F.col("n"), F.lit(2))
+        .when(2 * F.col("w_lo") == F.col("n"), F.lit(1))
+        .otherwise(F.lit(0))
+        .cast("long")
+    )
+    return (
+        _endpoints(
+            pairs,
+            [F.col("lo").alias("player"), pts.alias("pts")],
+            [F.col("hi").alias("player"), (2 - pts).alias("pts")],
+        )
+        .groupBy("player")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("pairs_played"),
+            F.sum((F.col("pts") == 2).cast("long"))
+            .cast("long")
+            .alias("pairs_won"),
+            F.sum((F.col("pts") == 0).cast("long"))
+            .cast("long")
+            .alias("pairs_lost"),
+            F.sum((F.col("pts") == 1).cast("long"))
+            .cast("long")
+            .alias("pairs_tied"),
+            F.sum("pts").cast("long").alias("copeland2"),
+        )
+    )
+
+
+def _decisive(pairs: DataFrame) -> DataFrame:
+    """Pairs with a strict-majority winner → (a, b, a_won): a = lo,
+    b = hi, a_won = 1 when the smaller id holds the majority."""
+    return pairs.filter(2 * F.col("w_lo") != F.col("n")).select(
+        F.col("lo").alias("a"),
+        F.col("hi").alias("b"),
+        (2 * F.col("w_lo") > F.col("n")).cast("int").alias("a_won"),
+    )
+
+
+def _triads(pairs: DataFrame, max_players: int, who: str):
+    """Complete decisive triples of a bounded board → (n_players,
+    decisive edges, triples (x, y, z, cyclic)). The player count is
+    guarded at ``max_players`` and eagerly checkpointed, so an
+    oversized board fails before any triad join runs (all-ties logs
+    included: the count comes from the pairs, not the edges). Each
+    triple x < y < z is enumerated once by one 3-way self-join of
+    the decisive edges; cyclic = 1 for x→y→z→x or x←y←z←x."""
+    n_players = (
+        _n_players(pairs)
+        .select(
+            F.when(
+                F.col("n_players") > max_players,
+                F.raise_error(
+                    F.concat(
+                        F.lit(f"{who}: "),
+                        F.col("n_players").cast("string"),
+                        F.lit(
+                            f" players > {max_players}; triad "
+                            "enumeration is a bounded-leaderboard "
+                            "operation — slice the player set"
+                        ),
+                    )
+                ).cast("long"),
+            )
+            .otherwise(F.col("n_players"))
+            .alias("n_players")
+        )
+        .localCheckpoint(eager=True)
+    )
+    und = _decisive(pairs).localCheckpoint(eager=True)
+    e1 = und.select(
+        F.col("a").alias("x"), F.col("b").alias("y"),
+        F.col("a_won").alias("wxy"),
+    )
+    e2 = und.select(
+        F.col("a").alias("y"), F.col("b").alias("z"),
+        F.col("a_won").alias("wyz"),
+    )
+    e3 = und.select(
+        F.col("a").alias("x"), F.col("b").alias("z"),
+        F.col("a_won").alias("wxz"),
+    )
+    triples = (
+        e1.join(e2, "y")
+        .join(e3, ["x", "z"])
+        .select(
+            "x",
+            "y",
+            "z",
+            (
+                (
+                    (F.col("wxy") == 1)
+                    & (F.col("wyz") == 1)
+                    & (F.col("wxz") == 0)
+                )
+                | (
+                    (F.col("wxy") == 0)
+                    & (F.col("wyz") == 0)
+                    & (F.col("wxz") == 1)
+                )
+            )
+            .cast("long")
+            .alias("cyclic"),
+        )
+    )
+    return n_players, und, triples
+
+
 def win_rate_matrix(
     comparisons: DataFrame,
     winner: str = "winner",
@@ -62,26 +242,10 @@ def win_rate_matrix(
     Scale shape: one hash aggregation over distinct pairs, then
     scalar arithmetic — no join, no window, work ∝ comparisons.
     """
-    c = comparisons.filter(
-        F.col(winner).isNotNull()
-        & F.col(loser).isNotNull()
-        & (F.col(winner) != F.col(loser))
-    )
-    pairs = (
-        c.select(
-            F.least(F.col(winner), F.col(loser)).alias("lo"),
-            F.greatest(F.col(winner), F.col(loser)).alias("hi"),
-            F.when(F.col(winner) < F.col(loser), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("lo_won"),
-        )
-        .groupBy("lo", "hi")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("lo_won").cast("long").alias("w_lo"),
-        )
-        .filter(F.col("n") >= min_games)
-    )
+    # != is NULL, so false, when either side is NULL
+    pairs = _pairs(
+        comparisons.filter(F.col(winner) != F.col(loser)), winner, loser
+    ).filter(F.col("n") >= min_games)
     return pairs.select(
         "lo",
         "hi",
@@ -517,28 +681,12 @@ def pair_counts(
     aggregation, materialized (eager localCheckpoint): every consumer
     (player counts, decisive edges, Copeland scores, triad joins)
     reads the compact pair table instead of re-scanning the log.
-    Shared by :func:`preference_cycles`, :func:`copeland_ranking`
-    and :func:`cycles_by_gap`."""
-    c = comparisons.filter(
-        F.col(winner).isNotNull()
-        & F.col(loser).isNotNull()
-        & (F.col(winner) != F.col(loser))
-    )
-    return (
-        c.select(
-            F.least(F.col(winner), F.col(loser)).alias("lo"),
-            F.greatest(F.col(winner), F.col(loser)).alias("hi"),
-            F.when(F.col(winner) < F.col(loser), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("lo_won"),
-        )
-        .groupBy("lo", "hi")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("lo_won").cast("long").alias("w_lo"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    Shared by every pair-table consumer here and by
+    ``btrank.elo_ratings``."""
+    # != is NULL, so false, when either side is NULL
+    return _pairs(
+        comparisons.filter(F.col(winner) != F.col(loser)), winner, loser
+    ).localCheckpoint(eager=True)
 
 
 PAIR_COUNTS_SQL = """
@@ -576,40 +724,7 @@ def copeland_ranking(
     :func:`pair_counts` table), then a pairs→players unpivot and a
     per-player hash agg — work ∝ distinct pairs; no window, no
     collect, no float, no guard needed (nothing quadratic)."""
-    pairs = pair_counts(comparisons, winner, loser)
-    lo_side = pairs.select(
-        F.col("lo").alias("player"),
-        F.when(2 * F.col("w_lo") > F.col("n"), F.lit(2))
-        .when(2 * F.col("w_lo") == F.col("n"), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("pts"),
-    )
-    hi_side = pairs.select(
-        F.col("hi").alias("player"),
-        F.when(2 * F.col("w_lo") < F.col("n"), F.lit(2))
-        .when(2 * F.col("w_lo") == F.col("n"), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("pts"),
-    )
-    return (
-        lo_side.unionByName(hi_side)
-        .groupBy("player")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("pairs_played"),
-            F.sum((F.col("pts") == 2).cast("long"))
-            .cast("long")
-            .alias("pairs_won"),
-            F.sum((F.col("pts") == 0).cast("long"))
-            .cast("long")
-            .alias("pairs_lost"),
-            F.sum((F.col("pts") == 1).cast("long"))
-            .cast("long")
-            .alias("pairs_tied"),
-            F.sum("pts").cast("long").alias("copeland2"),
-        )
-    )
+    return _copeland(pair_counts(comparisons, winner, loser))
 
 
 def copeland_ranking_sql(comparisons_sql: str) -> str:
@@ -665,103 +780,22 @@ def preference_cycles(
     vertex); each complete triple once (x < y < z on the undirected
     edge set). Everything is counts — deterministic in any engine.
     """
-    pairs = pair_counts(comparisons, winner, loser)
-    # n_players comes from the PAIRS level (mirroring the SQL np CTE),
-    # not from the decisive-edge frame: an all-ties log has zero
-    # decisive edges but a real player count (ADVICE r9 medium). The
-    # guard is folded into this 1-row aggregate — non-empty whenever
-    # pairs is (agg-without-groupBy always yields one row) — and the
-    # eager checkpoint fires it BEFORE any triad-join work runs.
-    n_players_df = (
-        pairs.select(F.col("lo").alias("p"))
-        .unionByName(pairs.select(F.col("hi").alias("p")))
-        .agg(F.count_distinct("p").cast("long").alias("np_raw"))
-        .select(
-            F.when(
-                F.col("np_raw") > max_players,
-                F.raise_error(
-                    F.concat(
-                        F.lit("preference_cycles: "),
-                        F.col("np_raw").cast("string"),
-                        F.lit(
-                            f" players > {max_players}; triad "
-                            "enumeration is a bounded-leaderboard "
-                            "operation — slice the player set"
-                        ),
-                    )
-                ).cast("long"),
-            )
-            .otherwise(F.col("np_raw"))
-            .alias("n_players")
-        )
-        .localCheckpoint(eager=True)
+    n_players, und, triples = _triads(
+        pair_counts(comparisons, winner, loser),
+        max_players,
+        "preference_cycles",
     )
-    # decisive directed edges (strict majority winner)
-    dec = (
-        pairs.filter(2 * F.col("w_lo") != F.col("n"))
-        .select(
-            F.when(2 * F.col("w_lo") > F.col("n"), F.col("lo"))
-            .otherwise(F.col("hi"))
-            .alias("src"),
-            F.when(2 * F.col("w_lo") > F.col("n"), F.col("hi"))
-            .otherwise(F.col("lo"))
-            .alias("dst"),
-        )
-        .localCheckpoint(eager=True)
+    n_edges = und.agg(
+        F.count(F.lit(1)).cast("long").alias("n_decisive_edges")
     )
-    n_edges = dec.agg(F.count(F.lit(1)).cast("long").alias("n_decisive_edges"))
-    # ONE triad enumeration carrying the direction flag (the
-    # cycles_by_gap shape): undirected decisive edges (a < b, a_won)
-    # self-joined once as x<y<z; the cyclic test reads the three
-    # flags. Halves the enumeration cost vs the original two separate
-    # 3-way joins (one over und for n_triads, one over dec for
-    # n_cyclic) — same exact counts, measured 2x at sf0.1.
-    und = dec.select(
-        F.least("src", "dst").alias("a"),
-        F.greatest("src", "dst").alias("b"),
-        (F.col("src") < F.col("dst")).cast("int").alias("a_won"),
-    )
-    e1 = und.select(
-        F.col("a").alias("x"), F.col("b").alias("y"),
-        F.col("a_won").alias("wxy"),
-    )
-    e2 = und.select(
-        F.col("a").alias("y"), F.col("b").alias("z"),
-        F.col("a_won").alias("wyz"),
-    )
-    e3 = und.select(
-        F.col("a").alias("x"), F.col("b").alias("z"),
-        F.col("a_won").alias("wxz"),
-    )
-    # for x < y < z: cyclic ⟺ x→y→z→x or x←y←z←x
-    counts = (
-        e1.join(e2, "y")
-        .join(e3, ["x", "z"])
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_triads"),
-            # coalesce: zero complete triples must report 0 cyclic
-            # (the twin's COUNT(*) semantics), not NULL-from-empty-sum
-            F.coalesce(
-                F.sum(
-                    (
-                        (
-                            (F.col("wxy") == 1)
-                            & (F.col("wyz") == 1)
-                            & (F.col("wxz") == 0)
-                        )
-                        | (
-                            (F.col("wxy") == 0)
-                            & (F.col("wyz") == 0)
-                            & (F.col("wxz") == 1)
-                        )
-                    ).cast("long")
-                ),
-                F.lit(0),
-            ).cast("long").alias("n_cyclic"),
-        )
+    counts = triples.agg(
+        F.count(F.lit(1)).cast("long").alias("n_triads"),
+        # coalesce: zero complete triples must report 0 cyclic (the
+        # twin's COUNT(*) semantics), not NULL-from-empty-sum
+        F.coalesce(F.sum("cyclic"), F.lit(0)).cast("long").alias("n_cyclic"),
     )
     return (
-        F.broadcast(n_players_df)
+        F.broadcast(n_players)
         .crossJoin(n_edges)
         .crossJoin(counts)
         .select(
@@ -858,117 +892,17 @@ def cycles_by_gap(
     deterministic in any engine.
     """
     pairs = pair_counts(comparisons, winner, loser)
-    n_players_df = (
-        pairs.select(F.col("lo").alias("p"))
-        .unionByName(pairs.select(F.col("hi").alias("p")))
-        .agg(F.count_distinct("p").cast("long").alias("np_raw"))
-        .select(
-            F.when(
-                F.col("np_raw") > max_players,
-                F.raise_error(
-                    F.concat(
-                        F.lit("cycles_by_gap: "),
-                        F.col("np_raw").cast("string"),
-                        F.lit(
-                            f" players > {max_players}; triad "
-                            "enumeration is a bounded-leaderboard "
-                            "operation — slice the player set"
-                        ),
-                    )
-                ).cast("long"),
-            )
-            .otherwise(F.col("np_raw"))
-            .alias("n_players")
-        )
-        .localCheckpoint(eager=True)  # guard fires BEFORE triad work
-    )
-    del n_players_df  # only the eager guard evaluation is needed
-    # undirected decisive edges with the direction flag (a < b,
-    # a_won = 1 iff the smaller id holds the strict majority)
-    und = (
-        pairs.filter(2 * F.col("w_lo") != F.col("n"))
-        .select(
-            F.col("lo").alias("a"),
-            F.col("hi").alias("b"),
-            (2 * F.col("w_lo") > F.col("n")).cast("int").alias("a_won"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    e1 = und.select(
-        F.col("a").alias("x"), F.col("b").alias("y"),
-        F.col("a_won").alias("wxy"),
-    )
-    e2 = und.select(
-        F.col("a").alias("y"), F.col("b").alias("z"),
-        F.col("a_won").alias("wyz"),
-    )
-    e3 = und.select(
-        F.col("a").alias("x"), F.col("b").alias("z"),
-        F.col("a_won").alias("wxz"),
-    )
-    triples = (
-        e1.join(e2, "y")
-        .join(e3, ["x", "z"])
-        .select(
-            "x",
-            "y",
-            "z",
-            (
-                (
-                    (F.col("wxy") == 1)
-                    & (F.col("wyz") == 1)
-                    & (F.col("wxz") == 0)
-                )
-                | (
-                    (F.col("wxy") == 0)
-                    & (F.col("wyz") == 0)
-                    & (F.col("wxz") == 1)
-                )
-            )
-            .cast("long")
-            .alias("cyclic"),
-        )
-    )
-    # Copeland scores from the SAME materialized pair table (calling
-    # copeland_ranking() here would run pair_counts' corpus
-    # aggregation a second time)
-    cop = (
-        pairs.select(
-            F.col("lo").alias("player"),
-            F.when(2 * F.col("w_lo") > F.col("n"), F.lit(2))
-            .when(2 * F.col("w_lo") == F.col("n"), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("pts"),
-        )
-        .unionByName(
-            pairs.select(
-                F.col("hi").alias("player"),
-                F.when(2 * F.col("w_lo") < F.col("n"), F.lit(2))
-                .when(2 * F.col("w_lo") == F.col("n"), F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("pts"),
-            )
-        )
-        .groupBy("player")
-        .agg(F.sum("pts").cast("long").alias("copeland2"))
-    )
-    cx = cop.select(F.col("player").alias("x"), F.col("copeland2").alias("cx"))
-    cy = cop.select(F.col("player").alias("y"), F.col("copeland2").alias("cy"))
-    cz = cop.select(F.col("player").alias("z"), F.col("copeland2").alias("cz"))
-    gapped = (
-        triples.join(cx, "x")
-        .join(cy, "y")
-        .join(cz, "z")
-        .select(
-            "cyclic",
-            F.least(
-                F.abs(F.col("cx") - F.col("cy")),
-                F.abs(F.col("cy") - F.col("cz")),
-                F.abs(F.col("cx") - F.col("cz")),
-            ).alias("gap"),
-        )
+    _, _, triples = _triads(pairs, max_players, "cycles_by_gap")
+    gapped = _lookup(
+        triples, _copeland(pairs), "player", "copeland2",
+        x="cx", y="cy", z="cz",
+    ).select(
+        "cyclic",
+        F.least(
+            F.abs(F.col("cx") - F.col("cy")),
+            F.abs(F.col("cy") - F.col("cz")),
+            F.abs(F.col("cx") - F.col("cz")),
+        ).alias("gap"),
     )
     w = int(bucket_width)
     return (
@@ -1016,11 +950,6 @@ def pairwise_coverage(
     subquery; no join, no window, no collect.
     """
     pairs = pair_counts(comparisons, winner, loser)
-    np_df = (
-        pairs.select(F.col("lo").alias("p"))
-        .unionByName(pairs.select(F.col("hi").alias("p")))
-        .agg(F.count_distinct("p").cast("long").alias("n_players"))
-    )
     stats = pairs.agg(
         F.sum("n").cast("long").alias("n_games"),
         F.count(F.lit(1)).cast("long").alias("n_pairs_observed"),
@@ -1029,7 +958,7 @@ def pairwise_coverage(
         .alias("n_pairs_min_games"),
     )
     return (
-        stats.withColumn("n_players", np_df.scalar())
+        stats.withColumn("n_players", _n_players(pairs).scalar())
         .select(
             "n_players",
             F.coalesce("n_games", F.lit(0)).cast("long").alias("n_games"),
@@ -1122,70 +1051,39 @@ def player_consistency(
     No window, no collect, nothing quadratic.
     """
     pairs = pair_counts(comparisons, winner, loser)
-    cop = (
-        pairs.select(
-            F.col("lo").alias("player"),
-            F.when(2 * F.col("w_lo") > F.col("n"), F.lit(2))
-            .when(2 * F.col("w_lo") == F.col("n"), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("pts"),
-        )
-        .unionByName(
-            pairs.select(
-                F.col("hi").alias("player"),
-                F.when(2 * F.col("w_lo") < F.col("n"), F.lit(2))
-                .when(2 * F.col("w_lo") == F.col("n"), F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("pts"),
-            )
-        )
-        .groupBy("player")
-        .agg(F.sum("pts").cast("long").alias("copeland2"))
-    )
-    dec = pairs.filter(2 * F.col("w_lo") != F.col("n")).select(
-        F.when(2 * F.col("w_lo") > F.col("n"), F.col("lo"))
-        .otherwise(F.col("hi"))
-        .alias("pw"),
-        F.when(2 * F.col("w_lo") > F.col("n"), F.col("hi"))
-        .otherwise(F.col("lo"))
-        .alias("pl"),
-    )
-    cw = cop.select(F.col("player").alias("pw"), F.col("copeland2").alias("cw"))
-    cl = cop.select(F.col("player").alias("pl"), F.col("copeland2").alias("cl"))
-    flagged = (
-        dec.join(cw, "pw")
-        .join(cl, "pl")
-        .select(
-            "pw",
-            "pl",
-            (F.col("cw") < F.col("cl")).cast("long").alias("upset"),
-            (F.col("cw") == F.col("cl")).cast("long").alias("stie"),
-        )
-    )
-    side_w = flagged.select(
-        F.col("pw").alias("player"),
-        F.lit(1).cast("long").alias("won"),
-        F.col("upset").alias("upset_win"),
-        F.lit(0).cast("long").alias("upset_loss"),
-        "stie",
-    )
-    side_l = flagged.select(
-        F.col("pl").alias("player"),
-        F.lit(0).cast("long").alias("won"),
-        F.lit(0).cast("long").alias("upset_win"),
-        F.col("upset").alias("upset_loss"),
-        "stie",
+    # a_won picks the pair winner's side: upset when the winner's
+    # Copeland score is strictly below the loser's
+    flagged = _lookup(
+        _decisive(pairs), _copeland(pairs), "player", "copeland2",
+        a="ca", b="cb",
+    ).select(
+        "a",
+        "b",
+        "a_won",
+        F.when(F.col("a_won") == 1, F.col("ca") < F.col("cb"))
+        .otherwise(F.col("cb") < F.col("ca"))
+        .cast("long")
+        .alias("upset"),
+        (F.col("ca") == F.col("cb")).cast("long").alias("stie"),
     )
     return (
-        side_w.unionByName(side_l)
+        _endpoints(
+            flagged,
+            [F.col("a").alias("player"), F.col("a_won").alias("won"),
+             "upset", "stie"],
+            [F.col("b").alias("player"), (1 - F.col("a_won")).alias("won"),
+             "upset", "stie"],
+        )
         .groupBy("player")
         .agg(
             F.count(F.lit(1)).cast("long").alias("dec_pairs"),
             F.sum("won").cast("long").alias("wins_dec"),
-            F.sum("upset_win").cast("long").alias("upset_wins"),
-            F.sum("upset_loss").cast("long").alias("upset_losses"),
+            F.sum(F.col("won") * F.col("upset"))
+            .cast("long")
+            .alias("upset_wins"),
+            F.sum((1 - F.col("won")) * F.col("upset"))
+            .cast("long")
+            .alias("upset_losses"),
             F.sum("stie").cast("long").alias("score_ties"),
         )
         .select(
@@ -1284,8 +1182,8 @@ def rating_calibration(
     elo_ratings` (rating_milli) or any BIGINT rating table. Numeric
     contract: identical to elo_ratings — the ONLY float is the
     logistic, immediately quantized to basis points with the same
-    double expression in both engines (pow 1-ulp caveat,
-    btrank.py:233); everything else exact BIGINT with truncating
+    double expression in both engines (pow 1-ulp caveat in
+    ``elo_ratings``' docstring); everything else exact BIGINT with truncating
     division. predicted keeps Σ n·e_bp ≤ total_games·1e4 — exact to
     ~9.2e14 games; actual's fav_wins·1e6 is exact to ~9.2e12 wins.
 
@@ -1304,16 +1202,9 @@ def rating_calibration(
         if pair_table is not None
         else pair_counts(comparisons, winner, loser)
     )
-    r_lo = ratings.select(
-        F.col(player_col).alias("lo"), F.col(rating_col).alias("r_lo")
-    )
-    r_hi = ratings.select(
-        F.col(player_col).alias("hi"), F.col(rating_col).alias("r_hi")
-    )
     w = int(bucket_width)
     scored = (
-        pairs.join(r_lo, "lo")
-        .join(r_hi, "hi")
+        _lookup(pairs, ratings, player_col, rating_col, lo="r_lo", hi="r_hi")
         .select(
             "n",
             F.expr("abs(r_lo - r_hi)").alias("gap_milli"),
@@ -1327,10 +1218,7 @@ def rating_calibration(
             "n",
             "fav_w",
             F.expr(f"gap_milli div {w}L").cast("long").alias("gap_bucket"),
-            F.expr(
-                "CAST(FLOOR(10000.0 / (1.0 + POW(10.0, "
-                "-gap_milli / 400000.0)) + 0.5) AS BIGINT)"
-            ).alias("e_fav_bp"),
+            _e_bp("-gap_milli").alias("e_fav_bp"),
         )
     )
     return (

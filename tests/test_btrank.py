@@ -171,3 +171,30 @@ def test_elo_overflow_guard(spark):
     with _pytest.raises(Exception, match="overflow"):
         elo_ratings(comps, rounds=1, overflow_limit=2).collect()
     assert len(elo_ratings(comps, rounds=1, overflow_limit=3).collect()) == 2
+
+
+def test_bt_self_games_and_nulls_match_duckdb_twin(spark):
+    # NULL participants are dropped; a self-game stays a lo == hi pair
+    # row, so (3, 3) adds 2n games and n wins to player 3 and enters
+    # its MM denominator, exactly as the twin's per-winner count does
+    games = [(1, 2)] * 4 + [(2, 1)] * 2 + [(2, 3)] * 3 + [(3, 1)] * 2
+    games += [(3, 3)] * 2 + [(None, 2), (1, None), (None, None)]
+    comps = spark.createDataFrame(games, "winner long, loser long")
+    got = sorted(
+        tuple(r) for r in bt_strengths(comps, rounds=3).collect()
+    )
+    vals = ", ".join(
+        f"({'NULL' if w is None else w}, {'NULL' if l is None else l})"
+        for w, l in games
+    )
+    ref = duckdb.connect().execute(
+        bt_sql(
+            "SELECT CAST(winner AS BIGINT) AS winner, "
+            "CAST(loser AS BIGINT) AS loser "
+            f"FROM (VALUES {vals}) t(winner, loser)",
+            rounds=3,
+        )
+    ).fetchall()
+    assert got == [tuple(r) for r in ref]
+    by_player = {r[0]: r for r in got}
+    assert by_player[3][2:] == (2 + 2, 3 + 2 + 2 * 2)  # wins, games

@@ -1,6 +1,7 @@
 """Preference-log analytics (operators/prefstats.py)."""
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
 from det_module_spark.operators.prefstats import (
@@ -591,3 +592,23 @@ def test_rating_calibration_matches_duckdb(spark):
     )
     assert got == ref
     assert len(got) >= 2  # multiple gap buckets exercised
+
+
+@pytest.mark.parametrize(
+    "fn",
+    ["copeland_ranking", "player_consistency", "pairwise_coverage",
+     "cycles_by_gap"],
+)
+def test_pair_table_consumers_read_it_once(spark, fn):
+    # both endpoints of a pair come from one explode of the pair
+    # table; a Union would plan and scan it once per branch
+    import det_module_spark.operators.prefstats as ps
+
+    games = [(1, 2)] * 3 + [(2, 3)] * 2 + [(3, 1)] * 2 + [(4, 1), (2, 4)]
+    df = getattr(ps, fn)(
+        spark.createDataFrame(games, "winner long, loser long")
+    )
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "Union" not in plan

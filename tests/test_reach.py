@@ -63,8 +63,6 @@ DEFERRED = {
     "sources.maintenance.compact_parquet": "test_binary_maintenance",
     "sources.maintenance.parquet_file_count": "test_binary_maintenance",
     "streaming.joins.interval_join": "test_streaming_joins",
-    "operators.multimodal.decode_features_arrow": "test_multimodal_arrow",
-    "operators.multimodal.sample_pixels_arrow": "test_multimodal_arrow",
     "sources.tables.write_bucketed_spill_aware": "test_bucketed_spill_aware",
     "sources.tables.write_bucketed": "test_scale_paths",
     "sources.tables.write_partitioned": "test_scale_paths",
