@@ -7572,22 +7572,13 @@ def entry(spark: SparkSession) -> DataFrame:
 #      sorted by their latest round in CORRECTNESS_r*.json, then by
 #      name (names with no record sort first).
 # The registry keeps its own order after the window.
-# the preference family: bt_strengths/elo_ratings and the prefstats
-# queries now share one pair aggregation, endpoint explode and lookup,
-# and the supplier-games builder is one function
+# request_lifecycle is the one registered query that runs through
+# Engine, whose cache now serves probes and item tables from memory;
+# bt_strengths and elo_ratings name their own fit in an overflow error
 _CHANGED_PATHS = [
+    "request_lifecycle",
     "bt_strengths",
     "elo_ratings",
-    "rank_agreement",
-    "elo_calibration",
-    "win_rate_matrix",
-    "length_bias",
-    "supplier_rank_tau",
-    "preference_cycles",
-    "copeland_ranking",
-    "cycles_by_gap",
-    "pairwise_coverage",
-    "player_consistency",
 ]
 _WINDOW = 50
 

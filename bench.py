@@ -76,15 +76,42 @@ def _sidecar_name(sf: float, mode: str, nocache: bool, cpus: str) -> str:
     return f"{stem}{'' if cpus == '32' else '_c' + cpus}.json"
 
 
+BENCH_MODES = ("both", "seq", "concurrent")
+
+
+def _bench_settings() -> tuple[str, int, int]:
+    """``(mode, streams, repeats)`` from ``SPARK_GRAFT_BENCH_MODE``
+    (one of both, seq or concurrent; default both),
+    ``SPARK_GRAFT_BENCH_STREAMS`` (default 12) and
+    ``SPARK_GRAFT_BENCH_REPEATS`` (default 4). Anything else — a mode
+    that would run neither pass, a count below 1 — is an error that
+    names the variable, raised before the JVM starts."""
+    mode = os.environ.get("SPARK_GRAFT_BENCH_MODE", "both")
+    if mode not in BENCH_MODES:
+        raise ValueError(
+            f"SPARK_GRAFT_BENCH_MODE must be one of {', '.join(BENCH_MODES)}, got {mode!r}"
+        )
+    counts = []
+    for var, default in (("SPARK_GRAFT_BENCH_STREAMS", "12"), ("SPARK_GRAFT_BENCH_REPEATS", "4")):
+        raw = os.environ.get(var, default)
+        try:
+            n = int(raw)
+        except ValueError:
+            n = 0
+        if n < 1:
+            raise ValueError(f"{var} must be an integer of at least 1, got {raw!r}")
+        counts.append(n)
+    return mode, counts[0], counts[1]
+
+
 def main() -> None:
+    mode, streams, repeats = _bench_settings()
+
     import __spark_entry__ as entry_mod
     from det_module_spark.session import codegen_compiles, get_spark, spark_cpus
     from det_module_spark.sources.tables import TABLES, load_table
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    streams = int(os.environ.get("SPARK_GRAFT_BENCH_STREAMS", "12"))
-    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "4"))
-    mode = os.environ.get("SPARK_GRAFT_BENCH_MODE", "both")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
@@ -251,7 +278,7 @@ def main() -> None:
         # repeat the concurrent pass; first repeat is untimed warm-up
         # (plan compilation / codegen for all queries), remaining
         # repeats give a median wall + per-query p50/p95
-        for rep in range(max(1, repeats)):
+        for rep in range(repeats):
             wall, timings = run_concurrent(f"x{streams}r{rep}", plan)
             if rep == 0 and repeats > 1:
                 continue

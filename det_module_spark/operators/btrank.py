@@ -63,18 +63,23 @@ QT = 10_000  # per-pair term quantization before the exact sum
 OVERFLOW_LIMIT = (2**63 - 1) // (Q * QT)
 
 
-def _overflow_guard(col: str, what: str, limit: int):
+# what each fit's overflow error tells the caller to do
+_BT_ADVICE = "the quantized MM products would exceed BIGINT — reduce Q/QT or shard the fit"
+_ELO_ADVICE = "the basis-point products w·10000 would exceed BIGINT — shard the fit"
+
+
+def _overflow_guard(col: str, what: str, limit: int, fit: str, advice: str):
     """Pass ``col`` through unchanged, raising from the executors if
-    it exceeds ``limit`` — the magnitude past which the quantized MM
-    products would wrap BIGINT (silently, in non-ANSI Spark)."""
+    it exceeds ``limit`` — the magnitude past which ``fit``'s integer
+    products would wrap BIGINT (silently, in non-ANSI Spark). The
+    error names ``fit`` and ends with its ``advice``."""
     return F.when(
         F.col(col) > F.lit(limit),
         F.raise_error(
             F.concat(
-                F.lit(f"bt_strengths: {what} overflow: "),
+                F.lit(f"{fit}: {what} overflow: "),
                 F.col(col).cast("string"),
-                F.lit(f" > {limit}; the quantized MM products would "
-                      "exceed BIGINT — reduce Q/QT or shard the fit"),
+                F.lit(f" > {limit}; {advice}"),
             )
         ).cast("long"),
     ).otherwise(F.col(col))
@@ -148,12 +153,16 @@ def bt_strengths(
             comparisons.dropna(subset=[winner, loser]), winner, loser
         ).localCheckpoint(eager=True)
     pt = pair_table.withColumn(
-        "n", _overflow_guard("n", "games-per-pair", overflow_limit)
+        "n",
+        _overflow_guard("n", "games-per-pair", overflow_limit, "bt_strengths", _BT_ADVICE),
     )
     games = pt.select("lo", "hi", "n")
     stats = (
         _player_stats(pt)
-        .withColumn("wins", _overflow_guard("wins", "wins", overflow_limit))
+        .withColumn(
+            "wins",
+            _overflow_guard("wins", "wins", overflow_limit, "bt_strengths", _BT_ADVICE),
+        )
         .localCheckpoint(eager=True)
     )
     theta = stats.select("player", F.lit(Q).cast("long").alias("theta_q"))
@@ -257,7 +266,8 @@ def elo_ratings(
     if pair_table is None:
         pair_table = pair_counts(comparisons, winner, loser)
     pairs = pair_table.withColumn(
-        "n", _overflow_guard("n", "games-per-pair", overflow_limit)
+        "n",
+        _overflow_guard("n", "games-per-pair", overflow_limit, "elo_ratings", _ELO_ADVICE),
     )
     # J_i (opponent count) is round-invariant
     stats = _player_stats(pairs).localCheckpoint(eager=True)

@@ -6,7 +6,8 @@ item spec, shared across requests and users (common-subexpression
 elimination at the workload level). The reference probes Mongo + the
 filesystem per item (queue/extract_check.py:62-110,
 queue/msr_check.py:22-53); here the probe is ONE set lookup of the
-request's hashes against the manifest log replayed on the driver.
+request's hashes against the ready set of the manifest log, folded on
+the driver.
 
 States mirror the reference's work-item machine
 (queue/extract_check.py:113-143): an item counts as *cached* only when
@@ -29,10 +30,22 @@ wins per spec_hash", so concurrent writers interleave but never lose
 each other's rows; ``compact()`` folds a long log into one commit.
 
 The log is written AND replayed with pyarrow on the driver: it is
-control-plane metadata (one row per item ever computed). ``cached()``
-is a set lookup against the replay, ``table()`` reads a result into
-Arrow on the driver and ``get()`` takes a result's schema from its
-parquet footer, so a cache hit starts no Spark job.
+control-plane metadata (one row per item ever computed). ``get()``
+takes a result's schema from its parquet footer, so a cache hit starts
+no Spark job.
+
+Hot path — hold what was read, check it against the files:
+``cached()`` keeps the last replay's ready set as an immutable snapshot
+with the listings it came from. A probe lists the log and the
+checkpoints and stats the newest folded file; when only commits above
+the snapshot's top appeared it reads just those, and anything else
+(compact, checkpoint, a vanished file, a rebuilt root) replays. Time
+travel, ``diff``, ``vacuum``, ``compact`` and ``checkpoint`` always
+replay. ``table()`` serves a result's Arrow table from a process-wide
+tier (``TABLE_CACHE_BYTES``, least recently used out) while its part
+files keep the (inode, mtime_ns, size) they were read with. A repeated
+probe therefore costs two listings and one stat whatever the log's
+length, and a repeated item one stat.
 """
 
 from __future__ import annotations
@@ -43,7 +56,10 @@ import json
 import os
 import shutil
 import tempfile
+import threading
 import time
+from collections import OrderedDict
+from dataclasses import dataclass
 from typing import Iterable
 
 import pyarrow as pa
@@ -88,11 +104,83 @@ _LOG_SCHEMA = pa.schema(
 # Spark's own schema inference reads
 _ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
+# Bytes of item tables ``table()`` keeps in memory for the whole
+# process, least recently used evicted first. An item is one row per
+# boundary feature (or per MSR grid cell), a few KB to a few MB in
+# Arrow; perfbench's request_hot reads 11 extract tables holding 42 KB.
+# A table larger than this is read each time and never held.
+TABLE_CACHE_BYTES = 256 << 20
+
 
 def _log_table(rows: list[tuple], version: int | None) -> pa.Table:
     data = {c: [r[i] for r in rows] for i, c in enumerate(_COLS)}
     data["version"] = [version] * len(rows)
     return pa.table(data, schema=_LOG_SCHEMA)
+
+
+def _file_id(path: str) -> tuple[int, int, int]:
+    """(inode, mtime_ns, size) of ``path``: a file replaced, rewritten
+    or removed and re-created under the same name gets a new one."""
+    st = os.stat(path)
+    return st.st_ino, st.st_mtime_ns, st.st_size
+
+
+def _file_id_or_none(path: str | None) -> tuple[int, int, int] | None:
+    try:
+        return None if path is None else _file_id(path)
+    except FileNotFoundError:
+        return None
+
+
+@dataclass(frozen=True)
+class _Snapshot:
+    """The ready set of one replay of the log, with the listings it was
+    folded from and the identity of the newest file it folded. Never
+    changed in place: ``cached()`` swaps in a new one by assignment."""
+
+    ckpts: tuple[int, ...]
+    listed: tuple[int, ...]
+    newest: tuple[int, int, int]
+    ready: frozenset[str]
+
+
+class _TableTier:
+    """Item tables as ``pq.read_table`` returned them, keyed by result
+    directory, each with the identity of the part files it was read
+    from; past ``limit`` bytes the least recently used go first. Safe
+    to share between threads: a lock guards the map, reads run outside
+    it."""
+
+    def __init__(self, limit: int):
+        self.limit = limit
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[str, tuple[tuple, pa.Table, int]] = OrderedDict()
+        self._bytes = 0
+
+    def get(self, key: str) -> tuple[tuple, pa.Table] | None:
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is None:
+                return None
+            self._entries.move_to_end(key)
+            return entry[0], entry[1]
+
+    def put(self, key: str, parts: tuple, table: pa.Table) -> None:
+        size = table.nbytes
+        if size > self.limit:
+            return
+        with self._lock:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self._bytes -= old[2]
+            self._entries[key] = (parts, table, size)
+            self._bytes += size
+            while self._bytes > self.limit:
+                _, (_, _, evicted) = self._entries.popitem(last=False)
+                self._bytes -= evicted
+
+
+_TABLES = _TableTier(TABLE_CACHE_BYTES)
 
 
 class CacheManifest:
@@ -102,6 +190,7 @@ class CacheManifest:
         self.spark = spark
         self.root = root
         self.log_path = os.path.join(root, "_manifest_log")
+        self._snap: _Snapshot | None = None
 
     # -- log primitives ---------------------------------------------
 
@@ -282,14 +371,89 @@ class CacheManifest:
     def cached(self, hashes: Iterable[str]) -> set[str]:
         """The subset of ``hashes`` whose results are ready to merge:
         the latest row is status DONE with a committed artifact. A set
-        lookup against the replayed log — no Spark job."""
+        lookup against the ready set of the replayed log — no Spark
+        job, and no log file read that the last probe already read."""
+        return self._ready().intersection(hashes)
+
+    def _newest(self, ckpts: tuple[int, ...], listed: tuple[int, ...]) -> str | None:
+        """The newest file a replay of these listings folds: the top
+        commit above the newest checkpoint, else that checkpoint."""
+        base = ckpts[-1] if ckpts else None
+        if listed and (base is None or listed[-1] > base):
+            return os.path.join(self.log_path, f"{listed[-1]:020d}.parquet")
+        if base is not None:
+            return os.path.join(self._ckpt_dir, f"{base:020d}.parquet")
+        return None
+
+    def _listing(self) -> tuple[tuple[int, ...], tuple[int, ...], tuple | None]:
+        """(checkpoint versions, log versions, identity of the newest
+        file they fold — None when there is none)."""
+        ckpts, listed = tuple(self._ckpt_versions()), tuple(self._versions())
+        return ckpts, listed, _file_id_or_none(self._newest(ckpts, listed))
+
+    def _ready(self) -> frozenset[str]:
+        """The hashes ready to merge, from the last snapshot when the
+        log only grew since: a probe lists the log and the checkpoints,
+        stats the newest folded file, and reads only the commits above
+        the snapshot's. Anything else — a file vanished (compact), the
+        checkpoints changed, a version appeared below the top, or the
+        newest folded file is not the one folded (the root was wiped
+        and rebuilt) — replays the log with ``_replay``."""
+        snap = self._snap
+        listing = ckpts, listed, newest = self._listing()
+        if (
+            snap is not None
+            and newest is not None
+            and ckpts == snap.ckpts
+            and listed[: len(snap.listed)] == snap.listed
+        ):
+            if len(listed) == len(snap.listed):
+                if newest == snap.newest:
+                    return snap.ready
+            elif _file_id_or_none(self._newest(ckpts, snap.listed)) == snap.newest:
+                folded = self._fold(snap, listing)
+                if folded is not None:
+                    return folded
+        return self._replay_ready(listing)
+
+    def _fold(self, snap: _Snapshot, listing: tuple) -> frozenset[str] | None:
+        """``snap``'s ready set with the commits listed above it folded
+        on top in version order, saved as the new snapshot; None if one
+        vanished before it was read (a compact — replay instead)."""
+        ckpts, listed, _ = listing
+        ready = set(snap.ready)
+        cols = ("spec_hash", "status", "committed")
+        try:
+            for v in listed[len(snap.listed):]:
+                if ckpts and v <= ckpts[-1]:
+                    continue  # folded into the checkpoint already
+                f = os.path.join(self.log_path, f"{v:020d}.parquet")
+                with pq.ParquetFile(f) as pf:
+                    t = pf.read(columns=list(cols))
+                for h, status, committed in zip(*(t.column(c).to_pylist() for c in cols)):
+                    if status == STATUS_DONE and committed:
+                        ready.add(h)
+                    else:
+                        ready.discard(h)
+        except FileNotFoundError:
+            return None
+        out = frozenset(ready)
+        self._snap = _Snapshot(*listing, out)
+        return out
+
+    def _replay_ready(self, before: tuple) -> frozenset[str]:
+        """The ready set of a full ``_replay``. It becomes the snapshot
+        only when the listing taken ``before`` it is unchanged after
+        it, so the snapshot's listing is the one its state came from."""
         state, _ = self._replay()
-        ready = {
+        ready = frozenset(
             h
             for h, _, status, committed, *_ in state.values()
             if status == STATUS_DONE and committed
-        }
-        return ready.intersection(hashes)
+        )
+        if before[2] is not None and self._listing() == before:
+            self._snap = _Snapshot(*before, ready)
+        return ready
 
     def result_path(self, spec_hash: str) -> str:
         return os.path.join(self.root, "results", spec_hash)
@@ -363,9 +527,27 @@ class CacheManifest:
         return self.spark.read.schema(schema).parquet(self.result_path(spec_hash))
 
     def table(self, spec_hash: str) -> pa.Table:
-        """Read one result into an Arrow table on the driver: the same
-        part files ``get`` reads, no Spark job."""
-        return pq.read_table(self._parts(spec_hash))
+        """One result as an Arrow table on the driver: the same part
+        files ``get`` reads, no Spark job. A table read before is
+        served from memory while each of its part files keeps the
+        (inode, mtime_ns, size) it was read with — one ``stat`` per
+        part. A published artifact is replaced only by renaming a new
+        directory onto its name, so a re-published one has new part
+        files and is read again."""
+        path = self.result_path(spec_hash)
+        hit = _TABLES.get(path)
+        if hit is not None:
+            parts, table = hit
+            if all(_file_id_or_none(p) == fid for p, fid in parts):
+                return table
+        files = self._parts(spec_hash)
+        # identities taken BEFORE the read: a file replaced while it is
+        # read is held under its old identity, so it is read again
+        parts = tuple((p, _file_id(p)) for p in files)
+        table = pq.read_table(files)
+        if parts:
+            _TABLES.put(path, parts, table)
+        return table
 
     def diff(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Audit two points of manifest history: what changed between

@@ -21,10 +21,12 @@ fuses into ONE aggregation (``zonal_aggregate``). Each fused result,
 two-phase extract and MSR surface is collected once with ``toArrow``
 — the collects run concurrently — split into per-item tables, and
 ``put_many`` publishes them from Arrow. A cache hit is a set lookup
-against the driver-replayed manifest; cached results are read into
-Arrow and merged on the driver (``merge_extracts``), and Spark
-receives the merge as one local relation, so a fully cached request
-starts no Spark job.
+against the manifest's in-memory ready set, and cached results come
+as Arrow tables from the cache's in-memory tier, each checked against
+its files by one stat (``plans/cache.py``); they are merged on the
+driver (``merge_extracts``), and Spark receives the merge as one local
+relation. So a repeated fully cached request starts no Spark job and
+reads no cache file.
 
 Dry-run mode (reference: queue/processing.py:85,163,213-216) expands
 and probes but mutates nothing — the engine's EXPLAIN.

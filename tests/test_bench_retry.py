@@ -186,3 +186,43 @@ def test_bench_sidecar_name_keeps_the_headline_record():
         _sidecar_name(0.1, "seq", True, "8")
         == "BENCH_FULL_sf0.1_seq_nocache_c8.json"
     )
+
+
+@pytest.mark.parametrize(
+    "var, value, message",
+    [
+        ("SPARK_GRAFT_BENCH_MODE", "sequential", "one of both, seq, concurrent"),
+        ("SPARK_GRAFT_BENCH_MODE", "", "one of both, seq, concurrent"),
+        ("SPARK_GRAFT_BENCH_STREAMS", "0", "at least 1"),
+        ("SPARK_GRAFT_BENCH_STREAMS", "twelve", "at least 1"),
+        ("SPARK_GRAFT_BENCH_REPEATS", "-2", "at least 1"),
+        ("SPARK_GRAFT_BENCH_REPEATS", "1.5", "at least 1"),
+    ],
+)
+def test_bench_settings_reject_bad_values_before_the_jvm(monkeypatch, var, value, message):
+    """A mistyped bench setting fails before any session starts, with
+    an error that names the variable — not a zero-valued record in a
+    sidecar named after the typo."""
+    import bench
+    from det_module_spark import session
+
+    def no_jvm(*_a, **_k):
+        raise AssertionError("the JVM was started")
+
+    monkeypatch.setattr(session, "get_spark", no_jvm)
+    monkeypatch.setenv(var, value)
+    with pytest.raises(ValueError, match=var) as err:
+        bench.main()
+    assert message in str(err.value)
+
+
+def test_bench_settings_defaults_and_accepted_values(monkeypatch):
+    from bench import _bench_settings
+
+    for var in ("SPARK_GRAFT_BENCH_MODE", "SPARK_GRAFT_BENCH_STREAMS", "SPARK_GRAFT_BENCH_REPEATS"):
+        monkeypatch.delenv(var, raising=False)
+    assert _bench_settings() == ("both", 12, 4)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_MODE", "concurrent")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_STREAMS", "1")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPEATS", "1")
+    assert _bench_settings() == ("concurrent", 1, 1)

@@ -173,6 +173,24 @@ def test_elo_overflow_guard(spark):
     assert len(elo_ratings(comps, rounds=1, overflow_limit=3).collect()) == 2
 
 
+def test_overflow_errors_name_their_fit(spark):
+    """Each fit's overflow error names that fit and gives its own
+    advice: an Elo overflow does not report itself as a BT failure."""
+    import pytest as _pytest
+
+    from det_module_spark.operators.btrank import elo_ratings
+
+    comps = spark.createDataFrame([(1, 2)] * 3, "winner long, loser long")
+    with _pytest.raises(Exception) as elo:
+        elo_ratings(comps, rounds=1, overflow_limit=2).collect()
+    assert "elo_ratings: games-per-pair overflow: 3 > 2" in str(elo.value)
+    assert "bt_strengths" not in str(elo.value) and "Q/QT" not in str(elo.value)
+    with _pytest.raises(Exception) as bt:
+        bt_strengths(comps, rounds=1, overflow_limit=2).collect()
+    assert "bt_strengths: games-per-pair overflow: 3 > 2" in str(bt.value)
+    assert "reduce Q/QT or shard the fit" in str(bt.value)
+
+
 def test_bt_self_games_and_nulls_match_duckdb_twin(spark):
     # NULL participants are dropped; a self-game stays a lo == hi pair
     # row, so (3, 3) adds 2n games and n wins to player 3 and enters

@@ -296,6 +296,25 @@ def test_cached_request_starts_no_spark_job(engine, spark):
     ]
 
 
+def test_repeated_cached_request_reads_no_cache_file(engine, monkeypatch):
+    """Once a request was served, repeating it reads no manifest commit
+    and no result file: the probe and the item tables come from memory,
+    checked against the files by stat, and merge to the same rows."""
+    import pyarrow.parquet as pq
+
+    engine.run_request(REQUEST)
+    first = engine.run_request(REQUEST).merged.collect()
+    reads = []
+    for name in ("ParquetFile", "read_table"):
+        real = getattr(pq, name)
+        monkeypatch.setattr(
+            pq, name, lambda src, *a, _real=real, **k: reads.append(src) or _real(src, *a, **k)
+        )
+    res = engine.run_request(REQUEST)
+    assert res.missing == [] and reads == []
+    assert res.merged.collect() == first
+
+
 def test_concurrent_cold_requests_share_items(engine, spark, tmp_path):
     """Four threads run the same cold request on one engine. Each
     computes the missing items and publishes them by rename: the first
