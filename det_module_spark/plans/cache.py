@@ -37,15 +37,15 @@ no Spark job.
 Hot path — hold what was read, check it against the files:
 ``cached()`` keeps the last replay's ready set as an immutable snapshot
 with the listings it came from. A probe lists the log and the
-checkpoints and stats the newest folded file; when only commits above
-the snapshot's top appeared it reads just those, and anything else
-(compact, checkpoint, a vanished file, a rebuilt root) replays. Time
-travel, ``diff``, ``vacuum``, ``compact`` and ``checkpoint`` always
-replay. ``table()`` serves a result's Arrow table from a process-wide
-tier (``TABLE_CACHE_BYTES``, least recently used out) while its part
-files keep the (inode, mtime_ns, size) they were read with. A repeated
-probe therefore costs two listings and one stat whatever the log's
-length, and a repeated item one stat.
+checkpoints and stats the newest folded file; while all three are
+unchanged it answers from the snapshot, and any change (a commit,
+compact, checkpoint, a rebuilt root) replays as before. Time travel,
+``diff``, ``vacuum``, ``compact`` and ``checkpoint`` always replay.
+``table()`` serves a result's Arrow table from a process-wide tier
+(``TABLE_CACHE_BYTES``, least recently used out) while its part files
+keep the (inode, mtime_ns, size) they were read with. A repeated
+probe of an unchanged log therefore costs two listings and one stat
+whatever the log's length, and a repeated item one stat.
 """
 
 from __future__ import annotations
@@ -134,13 +134,11 @@ def _file_id_or_none(path: str | None) -> tuple[int, int, int] | None:
 
 @dataclass(frozen=True)
 class _Snapshot:
-    """The ready set of one replay of the log, with the listings it was
-    folded from and the identity of the newest file it folded. Never
-    changed in place: ``cached()`` swaps in a new one by assignment."""
+    """The ready set of one replay of the log, with the listing it was
+    folded from (``CacheManifest._listing``). Never changed in place:
+    ``cached()`` swaps in a new one by assignment."""
 
-    ckpts: tuple[int, ...]
-    listed: tuple[int, ...]
-    newest: tuple[int, int, int]
+    listing: tuple
     ready: frozenset[str]
 
 
@@ -372,7 +370,8 @@ class CacheManifest:
         """The subset of ``hashes`` whose results are ready to merge:
         the latest row is status DONE with a committed artifact. A set
         lookup against the ready set of the replayed log — no Spark
-        job, and no log file read that the last probe already read."""
+        job, and no log file read while the log is unchanged since the
+        last probe."""
         return self._ready().intersection(hashes)
 
     def _newest(self, ckpts: tuple[int, ...], listed: tuple[int, ...]) -> str | None:
@@ -392,54 +391,17 @@ class CacheManifest:
         return ckpts, listed, _file_id_or_none(self._newest(ckpts, listed))
 
     def _ready(self) -> frozenset[str]:
-        """The hashes ready to merge, from the last snapshot when the
-        log only grew since: a probe lists the log and the checkpoints,
-        stats the newest folded file, and reads only the commits above
-        the snapshot's. Anything else — a file vanished (compact), the
-        checkpoints changed, a version appeared below the top, or the
-        newest folded file is not the one folded (the root was wiped
-        and rebuilt) — replays the log with ``_replay``."""
+        """The hashes ready to merge, from the last snapshot while the
+        log is unchanged since: a probe lists the log and the
+        checkpoints and stats the newest folded file. Any change — a
+        commit, a compact, a checkpoint, or a newest file that is not
+        the one folded (the root was wiped and rebuilt) — replays the
+        log with ``_replay``."""
         snap = self._snap
-        listing = ckpts, listed, newest = self._listing()
-        if (
-            snap is not None
-            and newest is not None
-            and ckpts == snap.ckpts
-            and listed[: len(snap.listed)] == snap.listed
-        ):
-            if len(listed) == len(snap.listed):
-                if newest == snap.newest:
-                    return snap.ready
-            elif _file_id_or_none(self._newest(ckpts, snap.listed)) == snap.newest:
-                folded = self._fold(snap, listing)
-                if folded is not None:
-                    return folded
+        listing = self._listing()
+        if snap is not None and listing == snap.listing:
+            return snap.ready
         return self._replay_ready(listing)
-
-    def _fold(self, snap: _Snapshot, listing: tuple) -> frozenset[str] | None:
-        """``snap``'s ready set with the commits listed above it folded
-        on top in version order, saved as the new snapshot; None if one
-        vanished before it was read (a compact — replay instead)."""
-        ckpts, listed, _ = listing
-        ready = set(snap.ready)
-        cols = ("spec_hash", "status", "committed")
-        try:
-            for v in listed[len(snap.listed):]:
-                if ckpts and v <= ckpts[-1]:
-                    continue  # folded into the checkpoint already
-                f = os.path.join(self.log_path, f"{v:020d}.parquet")
-                with pq.ParquetFile(f) as pf:
-                    t = pf.read(columns=list(cols))
-                for h, status, committed in zip(*(t.column(c).to_pylist() for c in cols)):
-                    if status == STATUS_DONE and committed:
-                        ready.add(h)
-                    else:
-                        ready.discard(h)
-        except FileNotFoundError:
-            return None
-        out = frozenset(ready)
-        self._snap = _Snapshot(*listing, out)
-        return out
 
     def _replay_ready(self, before: tuple) -> frozenset[str]:
         """The ready set of a full ``_replay``. It becomes the snapshot
@@ -452,7 +414,7 @@ class CacheManifest:
             if status == STATUS_DONE and committed
         )
         if before[2] is not None and self._listing() == before:
-            self._snap = _Snapshot(*before, ready)
+            self._snap = _Snapshot(before, ready)
         return ready
 
     def result_path(self, spec_hash: str) -> str:

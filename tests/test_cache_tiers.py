@@ -1,10 +1,8 @@
 """The cache's in-memory tiers against the files they came from: the
-manifest snapshot ``cached()`` probes, folded forward one commit at a
-time, and the item tables ``table()`` serves. Each must answer what a
+manifest snapshot ``cached()`` probes and the item tables ``table()`` serves. Each must answer what a
 fresh read of the files answers. No Spark session: the probe and the
 table path never touch it."""
 
-import os
 import shutil
 import threading
 
@@ -45,7 +43,7 @@ def fresh(cache, hashes):
 
 def test_repeated_probe_opens_no_log_file(tmp_path, opened):
     """With a 10k-row checkpointed manifest, a repeated probe opens no
-    log file, and a probe after one commit opens exactly that commit."""
+    log file; a probe after a commit replays and is then held again."""
     cache = CacheManifest(None, str(tmp_path / "cache"))
     hashes = [f"h{i:05d}" for i in range(10_000)]
     cache._commit([row(h) for h in hashes])
@@ -59,10 +57,10 @@ def test_repeated_probe_opens_no_log_file(tmp_path, opened):
         assert cache.cached(probe) == set(hashes[1:6])
     assert opened == []
 
-    v = cache._commit([row("h00000"), row("h00001", committed=False), row("new")])
+    cache._commit([row("h00000"), row("h00001", committed=False), row("new")])
     want = {"h00000", *hashes[2:6], "new"}
     assert cache.cached(probe + ["new"]) == want
-    assert opened == [os.path.join(cache.log_path, f"{v:020d}.parquet")]
+    assert opened  # the commit changed the log: replayed
     del opened[:]
     assert cache.cached(probe + ["new"]) == want
     assert opened == []
@@ -107,21 +105,6 @@ def test_snapshot_matches_a_fresh_instance(tmp_path):
     assert (cache._versions(), cache._ckpt_versions()) == (versions, ckpts)
     check()
     assert cache.cached(universe) == {"x", "y"}
-
-
-def test_a_vanished_commit_replays_even_when_the_log_grew(tmp_path):
-    """A commit below the snapshot's top vanishes while two new ones
-    land, so the listing is longer than the snapshot's but not an
-    extension of it: the probe replays, it does not fold the tail."""
-    cache = CacheManifest(None, str(tmp_path / "cache"))
-    for i in range(3):
-        cache._commit([row(f"h{i}")])
-    universe = ["h0", "h1", "h2", "n3", "n4"]
-    assert cache.cached(universe) == {"h0", "h1", "h2"}
-    cache._commit([row("n3")])
-    cache._commit([row("n4")])
-    os.unlink(os.path.join(cache.log_path, f"{0:020d}.parquet"))
-    assert cache.cached(universe) == fresh(cache, universe) == {"h1", "h2", "n3", "n4"}
 
 
 def test_probes_while_another_thread_commits(tmp_path):
@@ -179,19 +162,21 @@ def test_table_served_from_memory_until_republished(tmp_path, monkeypatch):
     assert t1.equals(real(cache._parts("h")))
     assert cache.table("h") is t1 and len(reads) == 1
 
+    # each rewrite below adds a row, so the part file's size changes
+    # even where its inode is reused and its mtime lands in the same
+    # tick of a coarse filesystem clock
+
     # re-publish: a new directory renamed onto the hash's name
     shutil.rmtree(cache.result_path("h"))
-    second = pa.table({"asdf_id": [1, 2], "exfield_0": [3.0, 4.0]})
+    second = pa.table({"asdf_id": [1, 2, 3], "exfield_0": [3.0, 4.0, 5.0]})
     cache.put_many([("h", "extract", second)])
-    assert cache.table("h").column("exfield_0").to_pylist() == [3.0, 4.0]
+    assert cache.table("h").column("exfield_0").to_pylist() == [3.0, 4.0, 5.0]
     assert len(reads) == 2
 
     # a part file rewritten in place
-    pq.write_table(
-        real(cache._parts("h")).set_column(1, "exfield_0", pa.array([5.0, 6.0])),
-        cache._parts("h")[0],
-    )
-    assert cache.table("h").column("exfield_0").to_pylist() == [5.0, 6.0]
+    third = pa.table({"asdf_id": [1, 2, 3, 4], "exfield_0": [5.0, 6.0, 7.0, 8.0]})
+    pq.write_table(third.cast(real(cache._parts("h")).schema), cache._parts("h")[0])
+    assert cache.table("h").column("exfield_0").to_pylist() == [5.0, 6.0, 7.0, 8.0]
     assert len(reads) == 3
 
 
